@@ -2072,12 +2072,25 @@ def test_check_constraints_enforced_and_carried(spark, tmp_path):
 
 
 def test_check_constraints_survive_every_commit_path(spark, tmp_path):
+    """Every commit kind carries each table property — partition_by,
+    bloom_columns, constraints, delete_files — from its parent, or
+    deliberately replaces/resets it as _next_manifest documents. One
+    row per commit kind, run in sequence on one table; the sequence
+    keeps all four properties set wherever a row expects a carry, so
+    a dropped property cannot pass vacuously."""
     import pytest as _pytest
 
     from yelp_etl_spark.sources.snapshots import (
+        _TABLE_PROPERTIES,
         _load_manifest,
         _read_pointer,
+        snapshot_binpack,
+        snapshot_clone,
+        snapshot_compact,
+        snapshot_drop_constraint,
         snapshot_evolve_spec,
+        snapshot_merge,
+        snapshot_merge_3way,
         snapshot_mor_delete,
         snapshot_overwrite_partitions,
         snapshot_rollback,
@@ -2086,34 +2099,166 @@ def test_check_constraints_survive_every_commit_path(spark, tmp_path):
     )
 
     d = str(tmp_path / "tbl")
-    base = spark.createDataFrame(
-        [(1, "a", 10.0), (2, "b", 20.0), (3, "a", 30.0)],
-        "id long, part string, amount double",
-    )
-    snapshot_write(base, d, partition_by=["part"])
+    dst = str(tmp_path / "clone")
+    schema = "id long, part string, amount double"
+
+    def rows(*ids):
+        return spark.createDataFrame(
+            [(i, "ab"[i % 2], float(i)) for i in ids], schema
+        )
+
+    def delete(i):
+        return lambda: snapshot_mor_delete(
+            spark, d, spark.createDataFrame([(i,)], "id long"), ["id"]
+        )
+
+    def current():
+        return _load_manifest(d, _read_pointer(d))
+
+    snapshot_write(rows(1, 2, 3, 4), d, partition_by=["part"],
+                   bloom_columns=["id"])
     snapshot_set_constraint(spark, d, "amount_pos", "amount > 0")
-
-    def constraints():
-        return _load_manifest(d, _read_pointer(d)).get("constraints")
-
-    # dynamic partition overwrite: validates incoming AND carries
-    bad = spark.createDataFrame(
-        [(9, "a", -1.0)], "id long, part string, amount double"
-    )
+    s_full = delete(4)()
+    m1, m_full = _load_manifest(d, 1), current()
+    assert all(m_full.get(p) for p in _TABLE_PROPERTIES)
+    # CHECK constraints bind the dynamic overwrite's incoming rows too
     with _pytest.raises(ValueError, match="amount_pos"):
-        snapshot_overwrite_partitions(bad, d, ["part"])
-    ok = spark.createDataFrame(
-        [(9, "a", 90.0)], "id long, part string, amount double"
+        snapshot_overwrite_partitions(
+            spark.createDataFrame([(9, "a", -1.0)], schema), d, ["part"]
+        )
+
+    def restored(target):  # rollback: the TARGET's value, whatever it is
+        return {p: target.get(p) for p in _TABLE_PROPERTIES}
+
+    a_deleted = lambda old, new: (
+        new[:-1] == (old or []) and new[-1]["keys"] == ["id"]
     )
-    snapshot_overwrite_partitions(ok, d, ["part"])
-    assert constraints() == {"amount_pos": "amount > 0"}
-    # MOR delete: metadata-ish commit carries
-    keys = spark.createDataFrame([(2,)], "id long")
-    snapshot_mor_delete(spark, d, keys, ["id"])
-    assert constraints() == {"amount_pos": "amount > 0"}
-    # spec evolution: metadata-only commit carries
-    snapshot_evolve_spec(d, [])
-    assert constraints() == {"amount_pos": "amount > 0"}
-    # rollback restores the TARGET version's constraints (none at s1)
+    src_abs = os.path.abspath(d)
+    absolutized = lambda old, new: new == [
+        {**x, "paths": [os.path.join(src_abs, q) for q in x["paths"]]}
+        for x in old
+    ]
+    cur = lambda: _read_pointer(d)
+    staged = {}
+
+    def stage():
+        staged["id"] = snapshot_write(rows(1, 2, 8), d, publish=False)
+        return staged["id"]
+
+    # (kind, commit, expected changes; every other property carries).
+    # delete_files=None: replace/rewrite reset the delete list.
+    steps = [
+        ("append", lambda: snapshot_write(rows(5, 6), d, mode="append"), {}),
+        ("overwrite_partitions",
+         lambda: snapshot_overwrite_partitions(rows(7), d, ["part"]), {}),
+        ("set_constraint",
+         lambda: snapshot_set_constraint(spark, d, "id_pos", "id > 0"),
+         {"constraints": {"amount_pos": "amount > 0", "id_pos": "id > 0"}}),
+        ("drop_constraint", lambda: snapshot_drop_constraint(d, "id_pos"),
+         {"constraints": {"amount_pos": "amount > 0"}}),
+        ("evolve_spec", lambda: snapshot_evolve_spec(d, ["bucket(2, id)"]),
+         {"partition_by": ["bucket(2, id)"]}),
+        # de-partition: an empty spec drops partition_by, the rest carry
+        ("evolve_spec []", lambda: snapshot_evolve_spec(d, []),
+         {"partition_by": None}),
+        ("rollback", lambda: snapshot_rollback(d, 1), restored(m1)),
+        ("rollback", lambda: snapshot_rollback(d, s_full), restored(m_full)),
+        ("mor_delete", delete(6), {"delete_files": a_deleted}),
+        ("clone", lambda: snapshot_clone(d, dst),
+         {"delete_files": absolutized}),
+        ("merge", lambda: snapshot_merge(spark, rows(8), d, ["id"]),
+         {"delete_files": None}),
+        ("mor_delete", delete(5), {"delete_files": a_deleted}),
+        ("replace", lambda: snapshot_write(rows(1, 2, 3), d),
+         {"delete_files": None}),
+        ("mor_delete", delete(3), {"delete_files": a_deleted}),
+        ("rewrite/compact", lambda: snapshot_compact(spark, d),
+         {"delete_files": None}),
+        ("binpack",
+         lambda: snapshot_binpack(spark, d, small_file_bytes=2**30), {}),
+        ("mor_delete", delete(1), {"delete_files": a_deleted}),
+        ("merge_3way",
+         lambda: snapshot_merge_3way(spark, d, cur(), cur(), cur(), ["id"]),
+         {"delete_files": None}),
+        ("mor_delete", delete(2), {"delete_files": a_deleted}),
+        ("replace (staged)", stage, {"delete_files": None}),
+        ("merge_3way (staged)",
+         lambda: snapshot_merge_3way(
+             spark, d, cur(), cur(), staged["id"], ["id"]),
+         {"delete_files": None}),
+    ]
+    for kind, commit, want in steps:
+        parent = current()
+        sid = commit()
+        assert sid == parent["snapshot_id"] + 1 or kind == "clone", kind
+        m = _load_manifest(dst if kind == "clone" else d, sid)
+        for p in _TABLE_PROPERTIES:
+            old, new = parent.get(p), m.get(p)
+            if p not in want:
+                # binpack refuses pending deletes, so it carries none
+                assert old or (kind, p) == ("binpack", "delete_files"), (
+                    kind, p)
+                assert new == old, (kind, p, old, new)
+            elif callable(want[p]):
+                assert want[p](old, new), (kind, p, old, new)
+            else:
+                assert new == want[p], (kind, p, old, new)
+    # the staged branch's rows won the merge; the table still reads
+    assert sorted(r.id for r in snapshot_read(spark, d).collect()) == [1, 2, 8]
+
+
+def test_constraint_commits_do_not_copy_lineage_keys(spark, tmp_path):
+    """set/drop_constraint carry the table properties, not every key of
+    the parent manifest: a constraint change after a rollback or a
+    clone must not re-record that commit's rolled_back_to / clone_of
+    lineage."""
+    from yelp_etl_spark.sources.snapshots import (
+        _load_manifest,
+        snapshot_clone,
+        snapshot_drop_constraint,
+        snapshot_rollback,
+        snapshot_set_constraint,
+    )
+
+    d = str(tmp_path / "tbl")
+    snapshot_write(spark.range(1, 4), d)
+    snapshot_write(spark.range(1, 6), d)
     snapshot_rollback(d, 1)
-    assert constraints() is None
+    m = _load_manifest(d, snapshot_set_constraint(spark, d, "pos", "id > 0"))
+    assert m["operation"] == "set_constraint"
+    assert "rolled_back_to" not in m
+    assert m["constraints"] == {"pos": "id > 0"}
+
+    dst = str(tmp_path / "clone")
+    snapshot_clone(d, dst)
+    m = _load_manifest(dst, snapshot_drop_constraint(dst, "pos"))
+    assert "clone_of" not in m and "constraints" not in m
+    m = _load_manifest(dst, snapshot_set_constraint(spark, dst, "lo", "id < 9"))
+    assert "clone_of" not in m
+    assert m["constraints"] == {"lo": "id < 9"}
+    assert snapshot_read(spark, dst).count() == 3
+
+
+def test_three_way_merge_refused_consume_writes_no_data(spark, tmp_path):
+    """A staged branch that does not sit directly above the pointer is
+    refused BEFORE the merged rows are written: the refusal strands no
+    orphan data file."""
+    from yelp_etl_spark.sources.snapshots import (
+        _manifest_path,
+        snapshot_merge_3way,
+    )
+
+    t = str(tmp_path / "tbl")
+    base = snapshot_write(spark.createDataFrame([(1, "a")], "k long, v string"), t)
+    stage = snapshot_write(
+        spark.createDataFrame([(1, "b"), (2, "c")], "k long, v string"),
+        t,
+        publish=False,
+    )
+    # external manifest surgery: the stage reappears one id too high
+    os.rename(_manifest_path(t, stage), _manifest_path(t, stage + 1))
+    before = sorted(os.listdir(os.path.join(t, "data")))
+    with pytest.raises(ValueError, match="does not sit directly above"):
+        snapshot_merge_3way(spark, t, base, base, stage + 1, ["k"])
+    assert sorted(os.listdir(os.path.join(t, "data"))) == before
+    assert [tuple(r) for r in snapshot_read(spark, t).collect()] == [(1, "a")]

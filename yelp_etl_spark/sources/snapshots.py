@@ -12,6 +12,18 @@ Layout:
       manifests/manifest-0000000001.json  one per snapshot
       _current                          pointer file (atomic os.replace)
 
+A manifest holds ``snapshot_id``, ``parent_id``, ``operation``,
+``schema`` (Spark JSON) and ``files`` (one entry per data file: path,
+rows, min/max, optional partition tuple, bloom sidecar and ``seq``),
+plus the four table properties — ``partition_by`` (the spec),
+``bloom_columns``, ``constraints`` (CHECK predicates by name) and
+``delete_files`` (merge-on-read equality deletes) — each omitted when
+empty, and a few commit-local keys (``staged``, ``rolled_back_to``,
+``clone_of``). The table properties belong to the table, not to the
+commit: every commit kind builds its manifest with ``_next_manifest``,
+which carries them from the parent unless the commit deliberately
+replaces or resets one.
+
 Commit protocol (single-writer; see note below):
 1. Data files are FULLY written (to a scratch dir, then renamed into
    ``data/`` under fresh unique names) before any manifest references
@@ -107,6 +119,93 @@ def _read_pointer(table_dir: str) -> int | None:
 def _load_manifest(table_dir: str, snapshot_id: int) -> dict:
     with open(_manifest_path(table_dir, snapshot_id)) as fh:
         return json.load(fh)
+
+
+def _current_manifest(table_dir: str) -> tuple[int, dict]:
+    """The committed snapshot id and its manifest; FileNotFoundError
+    when the table has no committed snapshot."""
+    sid = _read_pointer(table_dir)
+    if sid is None:
+        raise FileNotFoundError(f"no committed snapshot in {table_dir}")
+    return sid, _load_manifest(table_dir, sid)
+
+
+# Keys every manifest has; every other key is written only when non-empty.
+_MANIFEST_KEYS = ("snapshot_id", "parent_id", "operation", "schema", "files")
+# Table properties (Iceberg: spec and properties belong to the table, not
+# to the commit) — carried by every commit through _next_manifest.
+_TABLE_PROPERTIES = ("partition_by", "bloom_columns", "constraints", "delete_files")
+
+
+def _next_manifest(
+    parent: dict | None,
+    operation: str,
+    files: list[dict] | None = None,
+    *,
+    added: list[dict] | tuple = (),
+    **overrides,
+) -> dict:
+    """The manifest of a commit on top of ``parent`` (None for a table's
+    first commit) — the only place a manifest dict is built.
+
+    ``snapshot_id`` is the parent's + 1 and ``parent_id`` the parent's
+    id. ``schema`` and ``files`` come from the parent unless given.
+    ``added`` entries (the data files this commit wrote) are appended
+    after ``files`` (so a dynamic overwrite lists its kept files first)
+    and stamped with ``seq = snapshot_id`` (Iceberg's
+    data_sequence_number): merge-on-read equality deletes apply only to
+    files with a STRICTLY smaller seq, which is what lets a key be
+    deleted and later re-inserted without the old delete swallowing
+    the new row, and keeps inherited delete files from masking freshly
+    written rows. Carried entries keep their original seq.
+
+    Every table property in ``_TABLE_PROPERTIES`` is carried from the
+    parent by default, so no commit kind can drop the partition spec,
+    the bloom sidecar columns, the CHECK constraints or the delete
+    files by forgetting to copy them (a spec-less commit would make the
+    next dynamic overwrite refuse and degrade pruned reads to full
+    listings; a lost bloom list degrades point lookups to full scans;
+    lost delete files resurrect deleted rows). A keyword override
+    replaces a property and ``None``/empty drops it. The deliberate
+    replacements, by commit kind:
+
+    - replace/rewrite (snapshot_write, compaction, snapshot_merge, the
+      staged snapshot_merge_3way) reset ``delete_files``: they start
+      from a DataFrame that snapshot_read already applied the deletes
+      to (Iceberg's rewrite_position_deletes cleanup). append,
+      overwrite_partitions and binpack keep them, because they carry
+      parent data files that the delete files mask (binpack refuses
+      while any are pending).
+    - snapshot_write records the spec and bloom columns it resolved:
+      inherited unless passed, ``[]`` drops them deliberately.
+    - set/drop_constraint replace ``constraints`` (a drop is always
+      explicit), evolve_spec replaces ``partition_by`` and mor_delete
+      appends to ``delete_files``.
+    - rollback passes the TARGET snapshot as the parent (at the current
+      id): the table STATE is restored, all of it — files, schema, its
+      delete files (dropping them would silently un-delete every row
+      the target masked), spec, constraints (Delta RESTORE) and bloom
+      columns.
+    - clone overrides the ids and makes every borrowed path absolute.
+
+    Only the id, schema, files and table properties are read from the
+    parent: commit-local keys (``staged``, ``rolled_back_to``,
+    ``clone_of``) describe one commit and never leak into the next.
+    Optional keys with empty values are omitted, as on disk today."""
+    parent = parent or {}
+    manifest = {
+        "snapshot_id": parent.get("snapshot_id", 0) + 1,
+        "parent_id": parent.get("snapshot_id"),
+        "operation": operation,
+        "schema": parent.get("schema"),
+        "files": parent.get("files", []) if files is None else files,
+        **{p: parent.get(p) for p in _TABLE_PROPERTIES},
+        **overrides,
+    }
+    for e in added:
+        e["seq"] = manifest["snapshot_id"]
+    manifest["files"] = [*manifest["files"], *added]
+    return {k: v for k, v in manifest.items() if v or k in _MANIFEST_KEYS}
 
 
 def _file_bloom(path: str, bloom_columns: list[str]) -> dict:
@@ -271,7 +370,8 @@ def _commit_manifest(
     table_dir: str, manifest: dict, swap_pointer: bool = True
 ) -> int:
     """Publish ``manifest`` exclusively and swap the pointer — the
-    shared commit tail of snapshot_write and snapshot_rollback.
+    commit tail every commit kind shares (staged writes stop before
+    the swap; snapshot_publish finishes them).
 
     Exclusive manifest creation approximates the catalog
     compare-and-swap: two writers that both read parent N race to
@@ -393,18 +493,22 @@ def _commit_manifest(
         # data files are durable, but no reader resolves it until
         # snapshot_publish swaps the pointer
         return snapshot_id
-    # atomic pointer swap — the commit instant
+    _swap_pointer(table_dir, snapshot_id)
+    return snapshot_id
+
+
+def _swap_pointer(table_dir: str, snapshot_id: int) -> None:
+    """Atomic pointer swap — the commit instant. A pointer now durably
+    exists, so the bootstrap marker is retired: a future missing
+    pointer then reads as external loss, not a crash."""
     ptmp = os.path.join(table_dir, _POINTER + ".tmp")
     with open(ptmp, "w") as fh:
         fh.write(str(snapshot_id))
     os.replace(ptmp, os.path.join(table_dir, _POINTER))
-    # a pointer now durably exists: retire the bootstrap marker so a
-    # future missing pointer reads as external loss, not a crash
     try:
-        os.unlink(sentinel)
+        os.unlink(os.path.join(table_dir, _BOOTSTRAP))
     except FileNotFoundError:
         pass
-    return snapshot_id
 
 
 _HIVE_NULL_DIR = "__HIVE_DEFAULT_PARTITION__"
@@ -689,10 +793,8 @@ def snapshot_write(
     new_files = _write_data_files(df, table_dir, partition_by, bloom_columns)
 
     # 2. new manifest = parent files (append) or just new files (replace)
-    files = list(new_files)
     schema = df.schema
     if pm is not None:
-        files = pm["files"] + files
         # Additive schema evolution (Iceberg's add-column): the
         # snapshot's schema is the UNION of parent and append schemas,
         # so files missing a column read it as NULL and an append that
@@ -715,50 +817,28 @@ def snapshot_write(
         schema = StructType(
             [StructField(f.name, f.dataType, True) for f in merged]
         )
-    snapshot_id = (parent or 0) + 1
-    # Every new data file records the sequence number of the commit
-    # that added it (Iceberg's data_sequence_number): merge-on-read
-    # equality deletes apply only to files with a STRICTLY smaller
-    # seq, which is what lets a key be deleted and later re-inserted
-    # without the old delete swallowing the new row. Entries carried
-    # over from the parent keep their original seq.
-    for e in new_files:
-        e["seq"] = snapshot_id
-    manifest = {
-        "snapshot_id": snapshot_id,
-        "parent_id": parent,
-        "operation": mode,
-        "schema": schema.json(),
-        "files": files,
-    }
-    if not publish:
-        # write-audit-publish staging (Iceberg's WAP): the snapshot is
-        # fully materialized and auditable by explicit id
-        # (snapshot_read(snapshot_id=...)), invisible to every default
-        # reader, and EXCLUSIVE — a staged snapshot holds the next sid,
-        # so concurrent commits fail loudly until snapshot_publish /
-        # snapshot_abandon resolves the audit. Crash-safety: an
-        # abandoned stage is just a manifest + unreferenced files,
-        # reclaimed by snapshot_abandon or expire-less vacuum flows.
-        manifest["staged"] = True
-    if pm is not None and pm.get("delete_files"):
-        # an append carries the parent's data files, so it must carry
-        # the delete files that mask them; replace/rewrite start from
-        # a DataFrame that already has deletes applied (snapshot_read
-        # applies them), so they deliberately reset the delete list —
-        # that is exactly Iceberg's rewrite_position_deletes cleanup
-        manifest["delete_files"] = pm["delete_files"]
-    if partition_by:
-        manifest["partition_by"] = list(partition_by)
-    if bloom_columns:
-        manifest["bloom_columns"] = list(bloom_columns)
-    if constraints:
-        # constraints are a table property: every write-path commit
-        # carries them forward (drop is explicit, snapshot_drop_constraint)
-        manifest["constraints"] = dict(constraints)
-    return _commit_manifest(
-        table_dir, manifest, swap_pointer=publish
+    # write-audit-publish staging (Iceberg's WAP) when not publish: the
+    # snapshot is fully materialized and auditable by explicit id
+    # (snapshot_read(snapshot_id=...)), invisible to every default
+    # reader, and EXCLUSIVE — a staged snapshot holds the next sid, so
+    # concurrent commits fail loudly until snapshot_publish /
+    # snapshot_abandon resolves the audit. Crash-safety: an abandoned
+    # stage is just a manifest + unreferenced files, reclaimed by
+    # snapshot_abandon or expire-less vacuum flows.
+    # replace/rewrite start from no files and reset the delete list;
+    # an append keeps both (see _next_manifest)
+    resets = {} if pm is not None else {"files": [], "delete_files": None}
+    manifest = _next_manifest(
+        parent_manifest,
+        mode,
+        added=new_files,
+        schema=schema.json(),
+        partition_by=partition_by,
+        bloom_columns=bloom_columns,
+        staged=not publish,
+        **resets,
     )
+    return _commit_manifest(table_dir, manifest, swap_pointer=publish)
 
 
 def _validate_constraints(df: DataFrame, constraints: dict) -> None:
@@ -808,10 +888,7 @@ def snapshot_set_constraint(
         raise ValueError(
             f"constraint name {name!r} must match {_TAG_RE.pattern}"
         )
-    parent = _read_pointer(table_dir)
-    if parent is None:
-        raise FileNotFoundError(f"no committed snapshot in {table_dir}")
-    pm = _load_manifest(table_dir, parent)
+    _, pm = _current_manifest(table_dir)
     constraints = dict(pm.get("constraints") or {})
     if name in constraints:
         raise ValueError(
@@ -821,41 +898,25 @@ def snapshot_set_constraint(
     current = snapshot_read(spark, table_dir)
     _validate_constraints(current, {name: predicate})
     constraints[name] = predicate
-    manifest = {
-        **{k: v for k, v in pm.items() if k != "snapshot_id"},
-        "snapshot_id": parent + 1,
-        "parent_id": parent,
-        "operation": "set_constraint",
-        "constraints": constraints,
-    }
-    return _commit_manifest(table_dir, manifest)
+    return _commit_manifest(
+        table_dir,
+        _next_manifest(pm, "set_constraint", constraints=constraints),
+    )
 
 
 def snapshot_drop_constraint(table_dir: str, name: str) -> int:
     """Remove a named CHECK constraint (metadata-only commit; the
     explicit inverse of snapshot_set_constraint). Unknown names refuse
     so a typo can't no-op where a real drop was intended."""
-    parent = _read_pointer(table_dir)
-    if parent is None:
-        raise FileNotFoundError(f"no committed snapshot in {table_dir}")
-    pm = _load_manifest(table_dir, parent)
+    _, pm = _current_manifest(table_dir)
     constraints = dict(pm.get("constraints") or {})
     if name not in constraints:
         raise ValueError(f"no constraint named {name!r} on this table")
     del constraints[name]
-    manifest = {
-        **{
-            k: v
-            for k, v in pm.items()
-            if k not in ("snapshot_id", "constraints")
-        },
-        "snapshot_id": parent + 1,
-        "parent_id": parent,
-        "operation": "drop_constraint",
-    }
-    if constraints:
-        manifest["constraints"] = constraints
-    return _commit_manifest(table_dir, manifest)
+    return _commit_manifest(
+        table_dir,
+        _next_manifest(pm, "drop_constraint", constraints=constraints),
+    )
 
 
 def snapshot_publish(table_dir: str, snapshot_id: int) -> int:
@@ -893,14 +954,8 @@ def snapshot_publish(table_dir: str, snapshot_id: int) -> int:
         # The reverse order opens a window where an unstaged
         # above-pointer manifest looks like crash litter — an orphan
         # sweep or vacuum inside it would delete the audited snapshot.
-        ptmp = os.path.join(table_dir, _POINTER + ".tmp")
-        with open(ptmp, "w") as fh:
-            fh.write(str(snapshot_id))
-        os.replace(ptmp, os.path.join(table_dir, _POINTER))
-        try:  # first-ever pointer may arrive via publish: retire marker
-            os.unlink(os.path.join(table_dir, _BOOTSTRAP))
-        except FileNotFoundError:
-            pass
+        # (The first-ever pointer may arrive here, retiring the marker.)
+        _swap_pointer(table_dir, snapshot_id)
     manifest.pop("staged", None)
     tmp = f"{mpath}.{uuid.uuid4().hex}.tmp"
     with open(tmp, "w") as fh:
@@ -1035,10 +1090,11 @@ def snapshot_read(
     snapshot appear as NULL. This is how changelog reads span an
     add-column boundary (Iceberg reads both ends of a changelog under
     the current schema for the same reason)."""
-    sid = snapshot_id if snapshot_id is not None else _read_pointer(table_dir)
-    if sid is None:
-        raise FileNotFoundError(f"no committed snapshot in {table_dir}")
-    manifest = _load_manifest(table_dir, sid)
+    manifest = (
+        _load_manifest(table_dir, snapshot_id)
+        if snapshot_id is not None
+        else _current_manifest(table_dir)[1]
+    )
     schema_manifest = (
         _load_manifest(table_dir, schema_snapshot_id)
         if schema_snapshot_id is not None
@@ -1238,10 +1294,11 @@ def snapshot_files_table(
     compaction planning query THIS instead of listing storage — at
     100 TB the manifest is the only thing small enough to inspect
     interactively."""
-    sid = snapshot_id if snapshot_id is not None else _read_pointer(table_dir)
-    if sid is None:
-        raise FileNotFoundError(f"no committed snapshot in {table_dir}")
-    m = _load_manifest(table_dir, sid)
+    m = (
+        _load_manifest(table_dir, snapshot_id)
+        if snapshot_id is not None
+        else _current_manifest(table_dir)[1]
+    )
     rows = [
         (
             f["path"],
@@ -1424,30 +1481,10 @@ def snapshot_overwrite_partitions(
         for f in pm["files"]
         if tuple(f["partition"][c] for c in fields) not in touched
     ]
-    snapshot_id = parent + 1
-    # new files get this commit's sequence number (snapshot_write's
-    # convention) so inherited MOR delete files — which apply only to
-    # strictly-smaller seqs — never mask the freshly written rows
-    for e in new_files:
-        e["seq"] = snapshot_id
-    manifest = {
-        "snapshot_id": snapshot_id,
-        "parent_id": parent,
-        "operation": "overwrite",
-        "schema": pm["schema"],
-        "files": new_files + kept,
-        "partition_by": list(partition_by),
-    }
-    if pm.get("delete_files"):
-        # kept partitions carry their data files, so they must carry
-        # the delete files masking them — dropping the list would
-        # resurrect MOR-deleted rows in every UNTOUCHED partition
-        manifest["delete_files"] = pm["delete_files"]
-    if pm.get("constraints"):
-        manifest["constraints"] = pm["constraints"]
-    if bloom_columns:
-        manifest["bloom_columns"] = list(bloom_columns)
-    return _commit_manifest(table_dir, manifest)
+    # kept partitions keep their delete files (see _next_manifest)
+    return _commit_manifest(
+        table_dir, _next_manifest(pm, "overwrite", kept, added=new_files)
+    )
 
 
 def snapshot_rollback(table_dir: str, to_snapshot: int) -> int:
@@ -1471,32 +1508,13 @@ def snapshot_rollback(table_dir: str, to_snapshot: int) -> int:
             "orphaned manifest"
         )
     target = _load_manifest(table_dir, to_snapshot)  # raises if expired
-    snapshot_id = current + 1
-    manifest = {
-        "snapshot_id": snapshot_id,
-        "parent_id": current,
-        "operation": "rollback",
-        "rolled_back_to": to_snapshot,
-        "schema": target["schema"],
-        "files": target["files"],
-    }
-    if target.get("partition_by"):
-        # restoring a spec'd snapshot restores its spec too — otherwise
-        # a later dynamic overwrite would refuse the "spec-less" parent
-        manifest["partition_by"] = target["partition_by"]
-    if target.get("constraints"):
-        # ... and its CHECK constraints (table properties travel with
-        # the restored version, Delta RESTORE semantics)
-        manifest["constraints"] = target["constraints"]
-    # ... and its MOR delete files (dropping them would RESURRECT
-    # every row the target snapshot had masked — silent un-deletion
-    # of erased keys) and its bloom sidecar spec (losing it degrades
-    # point lookups to full scans and stops later writes building
-    # sidecars). Rollback restores the table STATE, all of it.
-    if target.get("delete_files"):
-        manifest["delete_files"] = target["delete_files"]
-    if target.get("bloom_columns"):
-        manifest["bloom_columns"] = target["bloom_columns"]
+    # the target is the parent, at the current id: rollback restores
+    # the table STATE, all of it (see _next_manifest)
+    manifest = _next_manifest(
+        {**target, "snapshot_id": current},
+        "rollback",
+        rolled_back_to=to_snapshot,
+    )
     return _commit_manifest(table_dir, manifest)
 
 
@@ -1521,10 +1539,7 @@ def snapshot_evolve_spec(table_dir: str, partition_by: list[str]) -> int:
     partition + bucket layout per entity for the table's whole life
     (write.py:24-53); this is the capability that lets a 100 TB table
     change its layout as query patterns drift, without a rewrite."""
-    current = _read_pointer(table_dir)
-    if current is None:
-        raise FileNotFoundError(f"no committed snapshot in {table_dir}")
-    pm = _load_manifest(table_dir, current)
+    _, pm = _current_manifest(table_dir)
     if partition_by:
         schema = T.StructType.fromJson(json.loads(pm["schema"]))
         # validate SOURCE columns (a bucket(N, col) field is named
@@ -1543,23 +1558,10 @@ def snapshot_evolve_spec(table_dir: str, partition_by: list[str]) -> int:
         raise ValueError(
             f"partition spec is already {partition_by!r}: nothing to evolve"
         )
-    manifest = {
-        "snapshot_id": current + 1,
-        "parent_id": current,
-        "operation": "evolve-spec",
-        "schema": pm["schema"],
-        "files": pm["files"],
-    }
-    if partition_by:
-        manifest["partition_by"] = list(partition_by)
-    # spec evolution must not drop the rest of the table state
-    if pm.get("constraints"):
-        manifest["constraints"] = pm["constraints"]
-    if pm.get("delete_files"):
-        manifest["delete_files"] = pm["delete_files"]
-    if pm.get("bloom_columns"):
-        manifest["bloom_columns"] = pm["bloom_columns"]
-    return _commit_manifest(table_dir, manifest)
+    return _commit_manifest(
+        table_dir,
+        _next_manifest(pm, "evolve-spec", partition_by=partition_by),
+    )
 
 
 def snapshot_compact(
@@ -1587,10 +1589,7 @@ def snapshot_compact(
     ``prune=(column, op, value)`` reads skip most files. Deterministic
     by construction (exact-bounds bucketing, never sampled range
     partitioning)."""
-    sid = _read_pointer(table_dir)
-    if sid is None:
-        raise FileNotFoundError(f"no committed snapshot in {table_dir}")
-    manifest = _load_manifest(table_dir, sid)
+    _, manifest = _current_manifest(table_dir)
     total = sum(
         os.path.getsize(os.path.join(table_dir, f["path"]))
         for f in manifest["files"]
@@ -1790,39 +1789,22 @@ def snapshot_mor_delete(
     ``delete_keys`` may carry extra columns; only ``keys`` are
     written. Deleting by a non-key predicate = filter the table first
     and pass the matching key tuples."""
-    parent = _read_pointer(table_dir)
-    if parent is None:
-        raise FileNotFoundError(f"no committed snapshot in {table_dir}")
-    pm = _load_manifest(table_dir, parent)
+    parent, pm = _current_manifest(table_dir)
     missing = [k for k in keys if k not in delete_keys.columns]
     if missing:
         raise ValueError(f"delete_keys lacks key column(s) {missing!r}")
     entries = _write_data_files(
         delete_keys.select(*keys).distinct(), table_dir, None, None
     )
-    snapshot_id = parent + 1
-    manifest = {
-        "snapshot_id": snapshot_id,
-        "parent_id": parent,
-        "operation": "delete",
-        "schema": pm["schema"],
-        "files": pm["files"],
-        # a delete introduces no rows, but the table property survives
-        **({"constraints": pm["constraints"]} if pm.get("constraints") else {}),
-        "delete_files": (pm.get("delete_files") or [])
-        + [
-            {
-                "paths": [e["path"] for e in entries],
-                "keys": list(keys),
-                "seq": snapshot_id,
-                "count": sum(e.get("rows", 0) for e in entries),
-            }
-        ],
+    delete = {
+        "paths": [e["path"] for e in entries],
+        "keys": list(keys),
+        "seq": parent + 1,
+        "count": sum(e.get("rows", 0) for e in entries),
     }
-    if pm.get("partition_by"):
-        manifest["partition_by"] = pm["partition_by"]
-    if pm.get("bloom_columns"):
-        manifest["bloom_columns"] = pm["bloom_columns"]
+    manifest = _next_manifest(
+        pm, "delete", delete_files=[*(pm.get("delete_files") or []), delete]
+    )
     return _commit_manifest(table_dir, manifest)
 
 
@@ -2000,37 +1982,33 @@ def snapshot_merge_3way(
     # STAGED merge manifest reusing its id, then the publish tail.
     # Never abandon-then-commit: a crash between those two steps would
     # leave BOTH the branch and the merge as unreferenced orphans.
-    bloom = parent_manifest.get("bloom_columns")
-    if parent_manifest.get("constraints"):
-        # the merge is an incoming replacement row set like any other
-        # write: validate before the data files land (r9 review)
-        _validate_constraints(merged, parent_manifest["constraints"])
-    new_files = _write_data_files(merged, table_dir, spec, bloom)
     snapshot_id = (parent or 0) + 1
     if theirs_id != snapshot_id:
         # a stage holds parent+1 exclusively (snapshot_write refuses
         # concurrent commits while it exists), so anything else means
-        # external manifest surgery — refuse rather than clobber
+        # external manifest surgery — refuse rather than clobber, and
+        # BEFORE the data write (after it, the refusal would strand
+        # orphan data files)
         raise ValueError(
             f"staged branch {theirs_id} does not sit directly above "
             f"the pointer ({parent}): refusing in-place consume"
         )
-    for e in new_files:
-        e["seq"] = snapshot_id
-    manifest = {
-        "snapshot_id": snapshot_id,
-        "parent_id": parent,
-        "operation": "replace",
-        "schema": merged.schema.json(),
-        "files": new_files,
-        "staged": True,
-    }
-    if spec:
-        manifest["partition_by"] = spec
-    if bloom:
-        manifest["bloom_columns"] = bloom
     if parent_manifest.get("constraints"):
-        manifest["constraints"] = parent_manifest["constraints"]
+        # the merge is an incoming replacement row set like any other
+        # write: validate before the data files land
+        _validate_constraints(merged, parent_manifest["constraints"])
+    new_files = _write_data_files(
+        merged, table_dir, spec, parent_manifest.get("bloom_columns")
+    )
+    manifest = _next_manifest(
+        parent_manifest,
+        "replace",
+        [],
+        added=new_files,
+        schema=merged.schema.json(),
+        staged=True,
+        delete_files=None,  # a replace resets the delete list
+    )
     mpath = _manifest_path(table_dir, snapshot_id)
     tmp = f"{mpath}.{uuid.uuid4().hex}.tmp"
     with open(tmp, "w") as fh:
@@ -2058,21 +2036,10 @@ def snapshot_clone(src_dir: str, dst_dir: str) -> int:
     Dev/test table forks, reproducible-experiment pinning, and
     blue/green migration staging are the 100 TB use cases: all want
     "a table that starts as an exact copy, diverges cheaply"."""
-    sid = _read_pointer(src_dir)
-    if sid is None:
-        raise FileNotFoundError(f"no committed snapshot in {src_dir}")
+    sid, m = _current_manifest(src_dir)
     if _read_pointer(dst_dir) is not None:
         raise ValueError(f"clone target {dst_dir!r} already has a table")
-    m = _load_manifest(src_dir, sid)
     src_abs = os.path.abspath(src_dir)
-
-    def absolutize(entries: list[dict]) -> list[dict]:
-        out = []
-        for e in entries:
-            e2 = dict(e)
-            e2["path"] = os.path.join(src_abs, e["path"])
-            out.append(e2)
-        return out
 
     # The clone's history starts AT the source's snapshot counter, not
     # at 1: borrowed file entries keep their source sequence numbers
@@ -2081,26 +2048,19 @@ def snapshot_clone(src_dir: str, dst_dir: str) -> int:
     # every borrowed seq look newer than any clone delete and the
     # delete would silently not apply. Carried delete-file seq
     # relationships stay verbatim for the same reason.
-    manifest = {
-        "snapshot_id": sid,
-        "parent_id": None,
-        "operation": "clone",
-        "clone_of": {"table": src_abs, "snapshot_id": sid},
-        "schema": m["schema"],
-        "files": absolutize(m["files"]),
-    }
-    if m.get("delete_files"):
+    manifest = _next_manifest(
+        m,
+        "clone",
+        [{**e, "path": os.path.join(src_abs, e["path"])} for e in m["files"]],
+        snapshot_id=sid,
+        parent_id=None,
+        clone_of={"table": src_abs, "snapshot_id": sid},
         # delete-file entries carry a "paths" LIST, not a single path
-        manifest["delete_files"] = [
+        delete_files=[
             {**d, "paths": [os.path.join(src_abs, p) for p in d["paths"]]}
-            for d in m["delete_files"]
-        ]
-    if m.get("partition_by"):
-        manifest["partition_by"] = m["partition_by"]
-    if m.get("bloom_columns"):
-        manifest["bloom_columns"] = m["bloom_columns"]
-    if m.get("constraints"):
-        manifest["constraints"] = m["constraints"]
+            for d in m.get("delete_files") or []
+        ],
+    )
     os.makedirs(os.path.join(dst_dir, "manifests"), exist_ok=True)
     # data/ too: vacuum on a fresh clone lists it (borrowed files live
     # outside it, so the sweep is a safe no-op, not a FileNotFoundError)
@@ -2129,10 +2089,7 @@ def snapshot_binpack(
     numbers past the delete files' — apply them first via a full
     compact/rewrite, the same ordering rule as Iceberg's
     rewrite_position_deletes)."""
-    sid = _read_pointer(table_dir)
-    if sid is None:
-        raise FileNotFoundError(f"no committed snapshot in {table_dir}")
-    manifest = _load_manifest(table_dir, sid)
+    sid, manifest = _current_manifest(table_dir)
     if manifest.get("delete_files"):
         raise ValueError(
             "snapshot_binpack with pending merge-on-read delete files "
@@ -2177,21 +2134,8 @@ def snapshot_binpack(
     else:
         df_small = df_small.repartition(n_out)
     new_files = _write_data_files(df_small, table_dir, spec, bloom_columns)
-    new_sid = sid + 1
-    for e in new_files:
-        e["seq"] = new_sid
-    out = {
-        "snapshot_id": new_sid,
-        "parent_id": sid,
-        "operation": "rewrite",
-        "schema": manifest["schema"],
-        "files": big + new_files,
-    }
-    if spec:
-        out["partition_by"] = spec
-    if manifest.get("bloom_columns"):
-        out["bloom_columns"] = manifest["bloom_columns"]
-    if manifest.get("constraints"):
-        # rewrite of already-validated rows: carry, no re-validation
-        out["constraints"] = manifest["constraints"]
-    return _commit_manifest(table_dir, out)
+    # a rewrite of already-validated rows: constraints carry without
+    # re-validation
+    return _commit_manifest(
+        table_dir, _next_manifest(manifest, "rewrite", big, added=new_files)
+    )
