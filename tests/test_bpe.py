@@ -10,7 +10,6 @@ shared substrings with exactly known span boundaries.
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from yelp_etl_spark.functions import bpe
@@ -59,7 +58,6 @@ def _ref_bpe(word_freqs: dict[str, int], num_merges: int, min_pair_freq: int = 2
     return merges, words
 
 
-@pytest.mark.heavy_rotation
 def test_merge_fold_edge_cases(spark):
     rows = [
         (["x", "a", "a", "a", "a"],),
@@ -75,7 +73,6 @@ def test_merge_fold_edge_cases(spark):
     assert got_ab == [["x", "a", "a", "a", "a"], ["a", "a", "a"], ["ab", "ab"], ["b", "a"], ["a"]]
 
 
-@pytest.mark.heavy_rotation
 def test_learn_bpe_matches_reference_on_corpus(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     wf = {
@@ -92,7 +89,6 @@ def test_learn_bpe_matches_reference_on_corpus(spark, sf_dir):
     assert got_final == ref_words
 
 
-@pytest.mark.heavy_rotation
 def test_encode_conserves_characters(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     _, words = bpe.learn_bpe(docs, "text", 6, min_pair_freq=2)
@@ -103,7 +99,6 @@ def test_encode_conserves_characters(spark, sf_dir):
     assert bad == 0
 
 
-@pytest.mark.heavy_rotation
 def test_apply_merges_equals_training_state(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     merges, trained = bpe.learn_bpe(docs, "text", 6, min_pair_freq=2)
@@ -185,7 +180,6 @@ def test_merge_fold_property(spark):
         assert got == want, f"fold mismatch for pair ({lhs},{rhs})"
 
 
-@pytest.mark.heavy_rotation
 def test_duplicate_spans_pruned_equals_stride1_fixture(spark, sf_dir):
     """r4 verdict stretch: the two-phase bucket-pruned variant must
     produce EXACTLY the stride-1 spans on fixture data at k=25 — the
@@ -203,7 +197,6 @@ def test_duplicate_spans_pruned_equals_stride1_fixture(spark, sf_dir):
     assert a == b and len(a) > 0
 
 
-@pytest.mark.heavy_rotation
 def test_duplicate_spans_pruned_planted_minimal_run(spark):
     """A minimal exactly-k duplicated run (1 gram) must survive the
     prune — the case anchor sampling drops with high probability."""

@@ -4,8 +4,6 @@ and an error between view and purchase voids the match."""
 
 from __future__ import annotations
 
-import pytest
-
 from pyspark.sql import functions as F
 
 
@@ -16,7 +14,6 @@ def _n_matches(spark, path: str) -> int:
     ).first()["n"]
 
 
-@pytest.mark.heavy_rotation
 def test_pattern_counts_conversions_separately(spark):
     assert _n_matches(spark, "vpvp") == 2      # greedy 'v[^e]*p' would say 1
     assert _n_matches(spark, "vcvp") == 1      # one purchase, nearest view wins
@@ -25,7 +22,6 @@ def test_pattern_counts_conversions_separately(spark):
     assert _n_matches(spark, "pv") == 0
 
 
-@pytest.mark.heavy_rotation
 def test_duckdb_twin_agrees(spark):
     import duckdb
 

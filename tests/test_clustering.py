@@ -25,7 +25,6 @@ def _blobs(spark, centers, n_per, spread=0.05, dim=8):
     return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
 
 
-@pytest.mark.heavy_rotation
 def test_kmeans_recovers_planted_blobs(spark):
     dim = 8
     centers = [
@@ -54,7 +53,6 @@ def test_kmeans_recovers_planted_blobs(spark):
             assert abs(by_cluster[c][d] - centers[blob_idx][d]) < 0.2
 
 
-@pytest.mark.heavy_rotation
 def test_kmeans_deterministic_across_partitionings(spark):
     df = _blobs(spark, [[0.0] * 8, [3.0] * 8], n_per=15)
     a1, c1 = kmeans(df.repartition(1), k=2, iterations=3)
@@ -63,7 +61,6 @@ def test_kmeans_deterministic_across_partitionings(spark):
     assert sorted(c1) == sorted(c2)
 
 
-@pytest.mark.heavy_rotation
 def test_kmeans_assignment_dist_is_true_min(spark):
     """dist2 in the assignment equals the exact squared distance to
     the chosen centroid and is <= distance to every other centroid."""
@@ -82,7 +79,6 @@ def test_kmeans_assignment_dist_is_true_min(spark):
         assert dists[r.cluster] == pytest.approx(r.dist2, rel=1e-9)
 
 
-@pytest.mark.heavy_rotation
 def test_random_projection_preserves_norms_and_is_deterministic(spark):
     """JL property on real fixture embeddings: norm ratios concentrate
     near 1 (±1/sqrt(out_dim) scale), and the deterministic md5 matrix
@@ -120,7 +116,6 @@ def test_random_projection_preserves_norms_and_is_deterministic(spark):
     assert a == b
 
 
-@pytest.mark.heavy_rotation
 def test_pca_recovers_planted_dominant_direction(spark):
     """Points spread 10x wider along a planted axis than any other:
     the top component must align with it (|cos| > 0.99) and explain
@@ -147,7 +142,6 @@ def test_pca_recovers_planted_dominant_direction(spark):
     assert eig / total > 0.9
 
 
-@pytest.mark.heavy_rotation
 def test_pca_deterministic_across_partitionings(spark):
     from yelp_etl_spark.functions.clustering import power_iteration_pca
 

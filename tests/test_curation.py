@@ -2,7 +2,6 @@
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from yelp_etl_spark.functions.curation import (
@@ -37,7 +36,6 @@ def test_repetition_metrics_flags_looped_text(spark):
     assert m[4].top_word_frac == 0.0 and m[4].dup_ngram_frac == 0.0
 
 
-@pytest.mark.heavy_rotation
 def test_decontaminate_drops_only_overlapping_docs(spark):
     train = _docs(
         spark,

@@ -2,16 +2,18 @@
 
 from __future__ import annotations
 
-import pytest
-
 import importlib.util
+import os
 import sys
+
+ENTRY = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "__spark_entry__.py",
+)
 
 
 def _load_entry_module():
-    spec = importlib.util.spec_from_file_location(
-        "spark_entry", "/root/repo/__spark_entry__.py"
-    )
+    spec = importlib.util.spec_from_file_location("spark_entry", ENTRY)
     mod = importlib.util.module_from_spec(spec)
     sys.modules["spark_entry"] = mod
     spec.loader.exec_module(mod)
@@ -46,34 +48,16 @@ def test_queries_and_oracles_consistent(spark):
     }
 
 
-@pytest.mark.heavy_rotation
 def test_each_query_runs_at_smoke_sf(spark, sf_dir):
     """Every query builds at the driver's smoke scale, and no result
     schema contains an Array/Map column: the driver's canonicalizer
     pandas-lexsorts the result frame, which throws ``unhashable type:
     'list'`` on list cells (the r5 red class — map_funcs / map_hof /
     quantize_embeddings). Arrays must be stringified at the catalog
-    layer (``array_join``), per the q_array_funcs convention.
-
-    At 359 queries this build sweep is the single heaviest test
-    (~61 s), so it rotates the NON-window half of the catalog by
-    crc32(name) %% 3 == round %% 3 — the same deterministic tier idea
-    as conftest's heavy_rotation — while the 50 driver-window queries
-    build EVERY round (they are the round's hard correctness gate).
-    Every catalog query still builds at least every third round, the
-    bench warmup pass builds its rotating ~130-query subset at sf0.1
-    every round, and
-    scripts/check_parity.py covers the full catalog on demand."""
+    layer (``array_join``), per the q_array_funcs convention."""
     from concurrent.futures import ThreadPoolExecutor
-    from zlib import crc32
 
     from pyspark.sql.types import ArrayType, MapType
-
-    from tests.conftest import _current_round
-    from yelp_etl_spark.plans.catalog import _DRIVER_WINDOW
-
-    rnd = _current_round()
-    window = set(_DRIVER_WINDOW)
 
     mod = _load_entry_module()
     offenders = {}
@@ -95,15 +79,8 @@ def test_each_query_runs_at_smoke_sf(spark, sf_dir):
             if isinstance(f.dataType, (ArrayType, MapType))
         ]
 
-    selected = [
-        (name, fn)
-        for name, fn in mod.queries().items()
-        if name in window or crc32(name.encode()) % 3 == rnd % 3
-    ]
-    assert len(selected) >= len(window)
-
     with ThreadPoolExecutor(_POOL_WIDTH) as ex:
-        for name, bad in ex.map(build, selected):
+        for name, bad in ex.map(build, mod.queries().items()):
             if bad:
                 offenders[name] = bad
     assert not offenders, (

@@ -74,7 +74,6 @@ def test_psi_zero_for_identical_and_positive_for_shifted(spark):
     assert total > 0.25
 
 
-@pytest.mark.heavy_rotation
 def test_naive_bayes_learns_separable_vocab(spark):
     # Two classes with disjoint vocabularies — NB must classify
     # held-out docs perfectly, and prediction must be
@@ -112,7 +111,6 @@ def test_naive_bayes_prior_only_for_oov_doc(spark):
     assert out[0].score_q == half_up(math.log(9 / 10) * 1e6, 0)
 
 
-@pytest.mark.heavy_rotation
 def test_logreg_learns_planted_separator(spark):
     """LR on a linearly separable planted direction reaches high
     training accuracy in 4 rounds and is partitioning-independent."""
@@ -161,7 +159,6 @@ def test_psi_ignores_null_nan_and_flags_empty_side(spark):
     assert sum(r.psi_term for r in drift) > 0.0
 
 
-@pytest.mark.heavy_rotation
 def test_chi2_ranks_class_dependent_term_first(spark):
     """A term exclusive to one class dominates a term spread evenly
     across classes; counts in the output are exact presence counts."""
@@ -184,7 +181,6 @@ def test_chi2_ranks_class_dependent_term_first(spark):
     assert a == b
 
 
-@pytest.mark.heavy_rotation
 def test_kaplan_meier_textbook_example(spark):
     """Classic hand-computed KM: subjects with durations
     [1e, 2c, 3e, 3e, 4c, 5e] (e=event, c=censored).
@@ -206,7 +202,6 @@ def test_kaplan_meier_textbook_example(spark):
     assert a == b
 
 
-@pytest.mark.heavy_rotation
 def test_acf_periodic_series(spark):
     """A period-2 alternating series has r_1 ~ -1 and r_2 ~ +1; exact
     integer algebra makes the values partitioning-independent."""
@@ -245,7 +240,6 @@ def test_acf_emits_every_promised_lag_even_with_no_pairs(spark):
     assert by_lag[6].n_pairs == 0 and by_lag[6].r == 0.0
 
 
-@pytest.mark.heavy_rotation
 def test_benford_flags_uniform_but_accepts_benford_data(spark):
     from pyspark.sql import functions as F  # noqa: F811
 
@@ -481,7 +475,6 @@ def test_nelson_aalen_known_hazard(spark):
     assert rows[2]["cum_hazard_micro"] == half_up(1e6 / 3, 0) + 1_000_000
 
 
-@pytest.mark.heavy_rotation
 def test_cogrouped_asof_attribution_bounds(spark):
     from yelp_etl_spark.functions.udfs import cogrouped_asof_attribution
 

@@ -54,7 +54,6 @@ def test_ngram_jaccard_identical_docs(spark):
     assert (pairs[0].id_a, pairs[0].id_b, pairs[0].jaccard) == (1, 2, 1.0)
 
 
-@pytest.mark.heavy_rotation
 def test_jaccard_prefix_join_matches_brute_force(spark, sf_dir):
     """Exactness: prefix filtering must reproduce the naive all-pairs
     join verbatim at every threshold (no false negatives is the entire
@@ -105,7 +104,6 @@ def test_minhash_finds_near_duplicates(spark):
     assert est > 0.5
 
 
-@pytest.mark.heavy_rotation
 def test_minhash_deterministic_across_partitioning(spark):
     df = spark.createDataFrame(
         [(i, f"doc {i} shared prefix words here plus suffix {i % 3}") for i in range(12)],
@@ -165,7 +163,6 @@ def test_lsh_topk_recall_on_clustered_vectors(spark):
     assert got and all((q % 2) == (n % 2) for q, n in got)
 
 
-@pytest.mark.heavy_rotation
 def test_ivf_topk_recall_on_clustered_vectors(spark):
     """IVF with enough probes must recover brute-force neighbors for
     well-separated clusters."""
@@ -191,7 +188,6 @@ def test_ivf_topk_recall_on_clustered_vectors(spark):
     assert recall >= 0.8
 
 
-@pytest.mark.heavy_rotation
 def test_embedding_neardup_symmetry_free_and_thresholded(spark):
     df = spark.createDataFrame(
         [
@@ -322,7 +318,6 @@ def _uf_components(edges):
     return comp
 
 
-@pytest.mark.heavy_rotation
 def test_connected_components_matches_union_find(spark):
     import random
 
@@ -455,7 +450,6 @@ def test_hll_mergeable_close_to_exact(spark, sf_dir):
         assert abs(est - exact[k]) / exact[k] < 0.05  # HLL error bound
 
 
-@pytest.mark.heavy_rotation
 def test_simhash_portable_similarity_property(spark):
     df = spark.createDataFrame(
         [
@@ -580,7 +574,6 @@ def test_ewma_span_truncates(spark):
     assert abs(got[9] - (8 * 0.5 + 9) / 1.5) < 1e-12
 
 
-@pytest.mark.heavy_rotation
 def test_pagerank_properties(spark):
     from yelp_etl_spark.functions.graph import pagerank
 
@@ -594,7 +587,6 @@ def test_pagerank_properties(spark):
     assert abs(ranks["a"] - ranks["c"]) < 1e-9  # symmetry
 
 
-@pytest.mark.heavy_rotation
 def test_pagerank_broadcast_paths_equal(spark):
     """The forced-broadcast and shuffle-join (100 TB) iteration paths
     must produce identical ranks — broadcast_state only changes the
@@ -617,7 +609,6 @@ def test_pagerank_broadcast_paths_equal(spark):
     assert auto == shuf
 
 
-@pytest.mark.heavy_rotation
 def test_bfs_broadcast_paths_equal(spark):
     from yelp_etl_spark.functions.graph import bfs_distances
 
@@ -887,7 +878,6 @@ def test_bitmap_merge_split_equals_whole(spark):
     assert whole == merged == 100000
 
 
-@pytest.mark.heavy_rotation
 def test_embedding_neardup_lsh_recall_and_precision(spark):
     """Banded-LSH near-dup: exact verification means NO false positives
     (every emitted pair is truly over threshold), and at a high
@@ -939,7 +929,6 @@ def test_lsh_params_scale_with_corpus_size():
         assert 32 <= occ <= 64.0001
 
 
-@pytest.mark.heavy_rotation
 def test_pq_topk_recall_on_clustered_vectors(spark):
     """Shortlist recall — the property PQ actually provides: vectors
     quantizing to the same codes score identically under ADC (the
@@ -974,7 +963,6 @@ def test_pq_topk_recall_on_clustered_vectors(spark):
     assert all(sorted(v) == list(range(1, len(v) + 1)) for v in by_q.values())
 
 
-@pytest.mark.heavy_rotation
 def test_pq_topk_deterministic_across_partitioning(spark):
     import random
 
@@ -989,7 +977,6 @@ def test_pq_topk_deterministic_across_partitioning(spark):
     assert a == b
 
 
-@pytest.mark.heavy_rotation
 def test_pq_topk_query_cap_enforced(spark):
     """The driver-held ADC LUT design requires a bounded query side —
     exceeding max_query_rows must raise, never silently collect."""
@@ -1096,7 +1083,6 @@ def test_pmi_collocations_ranks_attracted_pairs(spark):
     assert a == b
 
 
-@pytest.mark.heavy_rotation
 def test_bigram_nll_flags_atypical_transitions(spark):
     """Documents made of corpus-typical transitions score lower than a
     document whose bigrams are rare, even when unigram frequencies are
@@ -1114,7 +1100,6 @@ def test_bigram_nll_flags_atypical_transitions(spark):
     assert a == b
 
 
-@pytest.mark.heavy_rotation
 def test_sssp_weighted_prefers_cheap_two_hop_path(spark):
     """Bellman-Ford relaxation: a 2-edge path of total weight 3 beats
     the direct weight-10 edge; seeds at 0; rounds bound path length."""
@@ -1152,7 +1137,6 @@ def test_rrf_fuse_rewards_cross_list_consensus(spark):
     assert a == sorted(map(tuple, out))
 
 
-@pytest.mark.heavy_rotation
 def test_contrastive_pairs_triplet_invariants(spark):
     """Positives are near-dups, negatives never are: the negative is
     deterministic, differs from both anchor and positive, and is not
@@ -1198,7 +1182,6 @@ def test_contrastive_pairs_triplet_invariants(spark):
     assert a == sorted(map(tuple, trip))
 
 
-@pytest.mark.heavy_rotation
 def test_personalized_pagerank_concentrates_near_seeds(spark):
     """With restart to a seed set, nodes adjacent to seeds outrank
     equally-connected nodes far from them; the uniform variant ranks
@@ -1222,7 +1205,6 @@ def test_personalized_pagerank_concentrates_near_seeds(spark):
     assert [(i, round(r, 9)) for i, r in a] == [(i, round(r, 9)) for i, r in b]
 
 
-@pytest.mark.heavy_rotation
 def test_als_rank2_matches_numpy_reference(spark):
     """The distributed rank-2 ALS reproduces a literal numpy replay of
     the same quantized algebra (exact integer moments, double adjugate
@@ -1321,7 +1303,6 @@ def test_label_propagation_two_cliques(spark):
     assert {labels[10], labels[11], labels[12]} == {10}
 
 
-@pytest.mark.heavy_rotation
 def test_label_propagation_deterministic_across_partitionings(spark):
     from yelp_etl_spark.functions.graph import label_propagation
 
@@ -1499,7 +1480,6 @@ def test_markov_attribution_credits_the_converting_channel(spark):
     assert out["view"]["p_full_ppm"] == 500_000  # 1 of 2 journeys convert
 
 
-@pytest.mark.heavy_rotation
 def test_random_walks_match_pure_python_replay(spark):
     """Every walk step must equal a sequential pure-Python replay of
     the hash-choice rule (H(start|node|t) mod deg over the dst-sorted
@@ -1550,7 +1530,6 @@ def test_random_walks_match_pure_python_replay(spark):
     assert got2 == want
 
 
-@pytest.mark.heavy_rotation
 def test_per_seed_bfs_equals_independent_bfs_runs(spark):
     """The labeled multi-seed frontier must give exactly the distances
     of k independent single-seed BFS runs."""
@@ -1593,7 +1572,6 @@ def test_boruvka_mst_known_graph(spark):
                    (11, 12, 9)}
 
 
-@pytest.mark.heavy_rotation
 def test_boruvka_hybrid_and_distributed_contraction_agree(spark):
     from yelp_etl_spark.functions.graph import boruvka_mst
 
@@ -1670,7 +1648,6 @@ def test_boruvka_mst_chain_contraction(spark):
     assert out.count() == 29
 
 
-@pytest.mark.heavy_rotation
 def test_boruvka_matches_kruskal_random(spark):
     import random
 
@@ -1710,7 +1687,6 @@ def test_boruvka_matches_kruskal_random(spark):
     assert got == want
 
 
-@pytest.mark.heavy_rotation
 def test_boruvka_matches_kruskal_fixture(spark, sf_dir):
     """Edge-for-edge Kruskal cross-check of q_boruvka_mst's forest on
     the REAL fixture co-purchase graph — moved out of the bench-facing

@@ -315,7 +315,6 @@ def test_pcm_int16_stats_truncates_odd_tail(spark):
     assert row["n_samples"] == 1 and row["peak"] == 10
 
 
-@pytest.mark.heavy_rotation
 def test_wav_riff_synthesize_parse_roundtrip(spark):
     """The Catalyst chunk walk must agree with Python's struct on a
     real little-endian WAV layout, locate 'data' through the
@@ -360,7 +359,6 @@ def test_wav_riff_synthesize_parse_roundtrip(spark):
     assert not j.riff_ok
 
 
-@pytest.mark.heavy_rotation
 def test_tiff_ifd_walk_matches_struct_reference(spark):
     """The Catalyst IFD walk must chase the per-file IFD offset and
     agree with Python's struct on every tag; junk yields tiff_ok=false
@@ -403,7 +401,6 @@ def test_tiff_ifd_walk_matches_struct_reference(spark):
     assert not j.tiff_ok
 
 
-@pytest.mark.heavy_rotation
 def test_png_chunk_walk_matches_struct_reference(spark):
     import struct
 
@@ -446,7 +443,6 @@ def test_png_chunk_walk_matches_struct_reference(spark):
     assert not png_chunk_metadata(junk).collect()[0].png_ok
 
 
-@pytest.mark.heavy_rotation
 def test_jpeg_sof_walk_matches_marker_scan_reference(spark):
     import struct
 
@@ -487,7 +483,6 @@ def test_jpeg_sof_walk_matches_marker_scan_reference(spark):
     assert not jpeg_sof_metadata(junk).collect()[0].jpeg_ok
 
 
-@pytest.mark.heavy_rotation
 def test_gif_block_walk_matches_struct_reference(spark):
     from yelp_etl_spark.functions.multimodal import (
         gif_block_metadata,

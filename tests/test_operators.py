@@ -226,6 +226,21 @@ def test_compact_parquet_dir_reduces_files(spark, tmp_path):
     assert len(after) < len(before)
     assert spark.read.parquet(path).count() == 10000
 
+    # crash after the second rename of an earlier swap: a stale,
+    # non-empty __old must not make rename(path, __old) fail
+    stale = path + "__old"
+    spark.range(0, 7).write.parquet(stale)
+    assert compact_parquet_dir(spark, path) == 1
+    assert not os.path.exists(stale)
+    assert spark.read.parquet(path).count() == 10000
+
+    # crash between the two renames: no ``path``, only the complete
+    # __old copy, which compaction must restore rather than lose
+    os.rename(path, stale)
+    assert compact_parquet_dir(spark, path) == 1
+    assert not os.path.exists(stale)
+    assert spark.read.parquet(path).count() == 10000
+
 
 def test_compact_read_back_not_stale(spark, tmp_path):
     """After the out-of-band rename swap, the session must not serve the

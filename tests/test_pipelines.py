@@ -143,7 +143,6 @@ def test_gold_user_engagement(raw):
     assert str(rows["u1"].first_review_date) == "2018-07-04"
 
 
-@pytest.mark.heavy_rotation
 def test_cli_end_to_end(spark, tmp_path):
     """Drive extract → clean → enrich through the CLI surface."""
     from yelp_etl_spark.cli import build_parser, run
@@ -251,7 +250,6 @@ def training_run(spark, sf_dir, tmp_path_factory):
     return out, metrics
 
 
-@pytest.mark.heavy_rotation
 def test_training_pipeline_end_to_end(spark, sf_dir, training_run):
     """The composed curation pipeline: gate → filter → dedup → scrub →
     split → write. Output must be deduplicated, split-disjoint, and
@@ -354,7 +352,6 @@ def test_run_gold_pipeline_partitioned_and_exact(spark, sf_dir, tmp_path):
     assert pruned.count() == gold.filter(F.col("segment") == seg).count()
 
 
-@pytest.mark.heavy_rotation
 def test_guarded_cdc_apply_is_batch_order_invariant(spark, tmp_path):
     """apply_changelog_guarded must converge to the highest-seq fold
     no matter the batch arrival order — including the resurrection
@@ -439,7 +436,6 @@ def test_apply_changelog_bootstrap_drops_op_column(spark, tmp_path):
     assert sorted((r.k, r.v) for r in out2.collect()) == [(1, "a2")]
 
 
-@pytest.mark.heavy_rotation
 def test_run_medallion_layers_and_gold_values(spark, sf_dir, tmp_path):
     """End-to-end medallion (extract×5 → clean×5 → enrich×3 → gold):
     layer layout + the gold rollup's exact integer-cents values vs a

@@ -9,8 +9,6 @@ stays inside whole-stage codegen.
 
 from __future__ import annotations
 
-import pytest
-
 import io
 from contextlib import redirect_stdout
 
@@ -280,7 +278,6 @@ def test_two_stage_agg_is_two_hash_aggregates(spark, sf_dir):
     assert "l_tax" not in read_schema
 
 
-@pytest.mark.heavy_rotation
 def test_semantic_dedup_pipeline_never_all_pairs(spark, sf_dir):
     """The exact→LSH→components→keep composition must add no join
     shape the audited stages don't have: no cartesian anywhere, and
@@ -345,7 +342,6 @@ def test_incremental_agg_maintenance_plan(spark, sf_dir):
     assert "HashAggregate" in plan
 
 
-@pytest.mark.heavy_rotation
 def test_r5_metric_family_plan_shapes(spark, sf_dir):
     """The round-5 ML/metric queries keep their scale-safe shapes: no
     cartesian products anywhere; hashed_features' only data shuffle is

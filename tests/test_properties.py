@@ -8,7 +8,6 @@ upgrade over the reference's zero tests.
 
 from __future__ import annotations
 
-import pytest
 from datetime import date, datetime
 
 from hypothesis import HealthCheck, given, settings
@@ -35,7 +34,6 @@ words = st.lists(
 
 @given(batch=st.lists(words, min_size=1, max_size=8))
 @settings(**SETTINGS)
-@pytest.mark.heavy_rotation
 def test_fingerprint_whitespace_case_invariant(spark, batch):
     """fingerprint(text) is invariant to case and whitespace runs."""
     rows = []
@@ -52,7 +50,6 @@ def test_fingerprint_whitespace_case_invariant(spark, batch):
 
 @given(batch=st.lists(words, min_size=1, max_size=8), n=st.integers(2, 4))
 @settings(**SETTINGS)
-@pytest.mark.heavy_rotation
 def test_shingles_count_and_width(spark, batch, n):
     """Shingle arrays: ≤ max(tokens-n+1, 0) entries (distinct), each
     exactly n tokens wide."""
@@ -74,7 +71,6 @@ def test_shingles_count_and_width(spark, batch, n):
 
 @given(batch=st.lists(words.filter(lambda w: len(w) >= 3), min_size=2, max_size=6))
 @settings(**SETTINGS)
-@pytest.mark.heavy_rotation
 def test_jaccard_pairs_bounds_and_self_similarity(spark, batch):
     """Every emitted pair has 0 < jaccard <= 1; duplicated docs that
     have shingles always pair at exactly 1.0."""
@@ -101,7 +97,6 @@ def test_jaccard_pairs_bounds_and_self_similarity(spark, batch):
     )
 )
 @settings(**SETTINGS)
-@pytest.mark.heavy_rotation
 def test_date_features_consistent_with_python(spark, dates):
     """D1-D8 agree with Python's datetime for any date: year/month/
     quarter/ISO-week; week_start is the preceding Monday."""
@@ -121,7 +116,6 @@ def test_date_features_consistent_with_python(spark, dates):
 
 @given(batch=st.lists(st.integers(0, 10**9), min_size=1, max_size=30))
 @settings(**SETTINGS)
-@pytest.mark.heavy_rotation
 def test_exact_dedup_partition_invariant(spark, batch):
     """exact_dedup output is identical under any repartitioning, and
     copy counts sum to the input size."""
@@ -138,7 +132,6 @@ def test_exact_dedup_partition_invariant(spark, batch):
     threshold=st.sampled_from([0.3, 0.5, 0.8]),
 )
 @settings(**SETTINGS)
-@pytest.mark.heavy_rotation
 def test_jaccard_prefix_join_exactness_property(spark, batch, threshold):
     """For ANY corpus and threshold, prefix filtering must reproduce
     the brute-force all-pairs shingle join verbatim (the no-false-
@@ -211,7 +204,6 @@ def test_half_up_reference_matches_spark_round_bitwise(spark, nums, ndigits):
     ).filter(lambda d: 0 < sum(x[0] for x in d) < len(d))
 )
 @settings(**SETTINGS)
-@pytest.mark.heavy_rotation
 def test_auc_matches_pairwise_definition(spark, data):
     """Mann-Whitney AUC == P(pos > neg) + 0.5·P(pos == neg), computed
     by brute-force pair enumeration."""
@@ -239,7 +231,6 @@ def test_auc_matches_pairwise_definition(spark, data):
     )
 )
 @settings(**SETTINGS)
-@pytest.mark.heavy_rotation
 def test_kaplan_meier_matches_sequential_reference(spark, subjects):
     """KM survival equals the sequential product computed directly in
     python (micro-nat quantization bounds the divergence per step)."""
@@ -276,7 +267,6 @@ def test_kaplan_meier_matches_sequential_reference(spark, subjects):
     lag=st.integers(1, 3),
 )
 @settings(**SETTINGS)
-@pytest.mark.heavy_rotation
 def test_acf_matches_direct_formula(spark, xs, lag):
     from yelp_etl_spark.functions.evaluation import acf
 
@@ -321,7 +311,6 @@ def test_acf_empty_series_full_zero_grid(spark):
     )
 )
 @settings(**SETTINGS)
-@pytest.mark.heavy_rotation
 def test_isotonic_fit_matches_sequential_pava_property(spark, bins):
     """The minimax closed form equals the classic sequential
     pool-adjacent-violators fit on ANY bin table (rates compared as
@@ -368,7 +357,6 @@ def test_isotonic_fit_matches_sequential_pava_property(spark, bins):
 )
 @settings(max_examples=6, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
-@pytest.mark.heavy_rotation
 def test_three_way_merge_matches_python_model(spark, tmp_path_factory, edits):
     """snapshot_merge_3way(on_conflict='theirs') equals a per-key
     Python model for ANY combination of side edits (update/delete on
@@ -438,7 +426,6 @@ def test_three_way_merge_matches_python_model(spark, tmp_path_factory, edits):
     )
 )
 @settings(**SETTINGS)
-@pytest.mark.heavy_rotation
 def test_point_in_polygon_matches_python_reference_property(spark, pts):
     """The Catalyst ray-crossing join equals a pure-Python even-odd
     reference for arbitrary points (odd-y adjusted) against a concave

@@ -13,7 +13,6 @@ def _registered(spark):
     register(spark)
 
 
-@pytest.mark.heavy_rotation
 def test_batch_read_partitioned_and_deterministic(spark):
     df = (
         spark.read.format("synthdocs")
@@ -60,7 +59,6 @@ def test_batch_read_composes_with_engine_operators(spark):
     assert m.filter(F.col("n_tokens") <= 0).count() == 0
 
 
-@pytest.mark.heavy_rotation
 def test_stream_read_replays_deterministically(spark, tmp_path):
     """Each availableNow run consumes one micro-batch from the simple
     stream reader; restarting against the same checkpoint resumes from

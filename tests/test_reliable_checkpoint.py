@@ -11,7 +11,6 @@ afterwards stays correct, just durably materialized.
 
 from __future__ import annotations
 
-import pytest
 import os
 
 from yelp_etl_spark.functions.checkpoint import (
@@ -29,7 +28,6 @@ def _edges(spark):
     return spark.createDataFrame(rows, ["src", "dst"])
 
 
-@pytest.mark.heavy_rotation
 def test_reliable_checkpoint_equals_local_and_writes_files(spark, tmp_path):
     edges = _edges(spark)
     local_ranks = {r["id"]: round(r["rank"], 9) for r in pagerank(edges).collect()}

@@ -4,7 +4,6 @@ from __future__ import annotations
 
 from datetime import datetime
 
-import pytest
 from pyspark.sql import functions as F
 
 from yelp_etl_spark.operators.scd import merge_upsert, scd2_history
@@ -122,7 +121,6 @@ def _view(join_df):
     }
 
 
-@pytest.mark.heavy_rotation
 def test_join_agg_deltas_equals_recompute_both_sides_changing(spark):
     from yelp_etl_spark.operators.scd import (
         apply_agg_deltas,

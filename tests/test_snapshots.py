@@ -118,7 +118,6 @@ def test_snapshot_merge_semantics(spark, tmp_path):
     assert old == {(1, 10.0), (2, 20.0)}
 
 
-@pytest.mark.heavy_rotation
 def test_streaming_upsert_into_snapshot_table(spark, tmp_path):
     """Streaming sink → snapshot table: one atomic commit per non-empty
     micro-batch, converged contents equal the batch aggregate, and the
@@ -290,7 +289,6 @@ def test_snapshot_changes_cdc(spark, tmp_path):
     }
 
 
-@pytest.mark.heavy_rotation
 def test_snapshot_layer_model_property(spark, tmp_path):
     """Property: any sequence of replace/append/merge commits matches a
     driver-side model, and every intermediate snapshot stays readable
@@ -661,7 +659,6 @@ def test_single_snapshot_pointer_loss_never_self_heals(spark, tmp_path):
     assert "forged" not in _json.load(open(_manifest_path(t, 1)))
 
 
-@pytest.mark.heavy_rotation
 def test_replace_inherits_parent_partition_spec(spark, tmp_path):
     """mode='replace' without an explicit partition_by keeps the
     table's spec (Iceberg createOrReplace semantics): a plain replace
@@ -685,7 +682,6 @@ def test_replace_inherits_parent_partition_spec(spark, tmp_path):
     assert _load_manifest(t, s3).get("partition_by") == ["grp"]
 
 
-@pytest.mark.heavy_rotation
 def test_partitioned_snapshot_write_and_pruning(spark, tmp_path):
     """Identity partition spec: each data file holds exactly one
     partition tuple recorded in the manifest (Iceberg-style — the
@@ -732,7 +728,6 @@ def test_partitioned_snapshot_write_and_pruning(spark, tmp_path):
     assert snapshot_read(spark, t, partition_filter={"grp": "A"}).count() == 101
 
 
-@pytest.mark.heavy_rotation
 def test_snapshot_overwrite_partitions_atomic(spark, tmp_path):
     """Dynamic partition overwrite: exactly the delta's partitions are
     replaced in ONE commit — untouched partitions keep their original
@@ -778,7 +773,6 @@ def test_snapshot_overwrite_partitions_atomic(spark, tmp_path):
         snapshot_overwrite_partitions(delta, t, ["id"])
 
 
-@pytest.mark.heavy_rotation
 def test_bucket_transform_spec_hidden_partitioning(spark, tmp_path):
     """bucket(N, col) spec: files are split by pmod(xxhash64(col), N),
     the reader filters on the RAW value (never sees bucket numbers),
@@ -817,7 +811,6 @@ def test_bucket_transform_spec_hidden_partitioning(spark, tmp_path):
     assert cur.filter(F.col("k").isNull()).count() == 1
 
 
-@pytest.mark.heavy_rotation
 def test_metadata_tables(spark, tmp_path):
     """files/history metadata tables reflect the manifest exactly: per
     file rows and partition tuples, and the full commit trail."""
@@ -852,7 +845,6 @@ def test_metadata_tables(spark, tmp_path):
     ]
 
 
-@pytest.mark.heavy_rotation
 def test_snapshot_layer_model_property_partitioned_ops(spark, tmp_path):
     """Model property over the round-5 surface: every ordered PAIR of
     {partitioned replace, dynamic overwrite, merge-with-delete,
@@ -1168,7 +1160,6 @@ def test_bloom_sidecar_inherited_on_append_and_typed(spark, tmp_path):
         snapshot_write(fdf, str(tmp_path / "t2"), bloom_columns=["x"])
 
 
-@pytest.mark.heavy_rotation
 def test_bloom_spec_survives_replace_and_overwrite(spark, tmp_path):
     """bloom_columns is a table property: replace/rewrite and dynamic
     partition overwrite inherit it (sidecars keep being built), a
@@ -1765,7 +1756,6 @@ def test_cluster_compact_rejects_empty_and_buckets_nulls(spark, tmp_path):
         assert top_file not in null_files
 
 
-@pytest.mark.heavy_rotation
 def test_three_way_merge_branch_back(spark, tmp_path):
     """WAP merge-publish: base → ours (main advances) and theirs
     (staged branch) diverge; the 3-way merge applies both sides'

@@ -183,7 +183,6 @@ def test_foreach_batch_upsert_converges(spark, events_dir, tmp_path):
     assert got == want
 
 
-@pytest.mark.heavy_rotation
 def test_foreach_batch_upsert_partition_scoped(spark, tmp_path):
     """With partition_columns, a micro-batch touching one partition must
     leave every other partition's files byte-identical (never read,
@@ -241,7 +240,6 @@ def test_foreach_batch_upsert_partition_scoped(spark, tmp_path):
     }
 
 
-@pytest.mark.heavy_rotation
 def test_stream_stream_join_matches_batch(spark, events_dir):
     from pyspark.sql import functions as SF
 
@@ -395,7 +393,6 @@ def test_partition_scoped_upsert_null_partition(spark, tmp_path):
     assert got == {(1, None, 11.0), (2, None, 20.0), (3, "b", 30.0)}
 
 
-@pytest.mark.heavy_rotation
 def test_foreach_batch_upsert_recovers_from_swap_crash(spark, events_dir, tmp_path):
     """Crash window of the rename-swap: between rename(target -> __old)
     and rename(__merging -> target) there is NO target dir, only the

@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-import pytest
-
 from datetime import datetime
 
 from pyspark.sql import functions as F
@@ -50,7 +48,6 @@ def test_asof_forward(spark):
     assert out.collect()[0].tag == "after"
 
 
-@pytest.mark.heavy_rotation
 def test_asof_merge_equals_ranked_with_tiebreak(spark):
     """The union-merge asof (one shuffle) must agree with the
     join-then-rank anchor, including equal-ts tiebreaks and no-match

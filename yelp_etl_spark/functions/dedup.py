@@ -279,11 +279,6 @@ def hamming64(a: Column, b: Column) -> Column:
     return F.bit_count(a.bitwiseXOR(b))
 
 
-def simhash_hamming(hi_a: Column, lo_a: Column, hi_b: Column, lo_b: Column) -> Column:
-    """Hamming distance between two (hi, lo) simhash sketches."""
-    return hamming64(hi_a, hi_b) + hamming64(lo_a, lo_b)
-
-
 def connected_components(
     edges: DataFrame,
     src_col: str = "id_a",

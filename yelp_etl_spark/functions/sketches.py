@@ -59,11 +59,6 @@ def _positions_from_h(h: Column, depth: int, width: int) -> Column:
     )
 
 
-def _positions(key: Column, depth: int, width: int) -> Column:
-    """Array of ``depth`` cell positions for a key."""
-    return _positions_from_h(_h31(key), depth, width)
-
-
 def count_min_sketch(
     df: DataFrame,
     key_column: str,

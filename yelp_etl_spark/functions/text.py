@@ -38,15 +38,6 @@ def token_count(text: Column) -> Column:
     return F.size(tokens(text))
 
 
-def whitespace_token_count(text: Column) -> Column:
-    """Whitespace tokenization count (cheapest possible token estimate)."""
-    return F.size(F.split(F.trim(text), r"\s+"))
-
-
-def char_count(text: Column) -> Column:
-    return F.length(text)
-
-
 def avg_token_length(text: Column) -> Column:
     toks = tokens(text)
     total = F.aggregate(
@@ -199,30 +190,6 @@ def rolling_fingerprint_stats(
 
     norm = df.select(id_column, _normalize(F.col(text_column)).alias("__norm"))
     return norm.mapInPandas(compute, out_schema)
-
-
-def winnow_fingerprint(text: Column, k: int = 8) -> Column:
-    """Single document fingerprint from the rolling hashes: the minimum
-    window hash (MinHash-1 over character k-grams). Documents sharing
-    long runs of text are likely to share their minimum window, so this
-    doubles as a cheap near-dup blocking key."""
-    return F.array_min(rolling_hashes(text, k))
-
-
-def add_text_stats(df: DataFrame, text_column: str = "text") -> DataFrame:
-    """Attach the standard text-stats column set."""
-    t = F.col(text_column)
-    return df.withColumns(
-        {
-            "n_tokens": token_count(t).cast("long"),
-            "n_chars_computed": char_count(t).cast("long"),
-            "avg_token_len": F.round(avg_token_length(t), 6),
-            "punct_ratio": F.round(punctuation_ratio(t), 6),
-            "stopword_ratio_en": F.round(stopword_ratio(t, "en"), 6),
-            "quality": quality_score(t),
-            "fingerprint": fingerprint(t),
-        }
-    )
 
 
 def tfidf_top_terms(

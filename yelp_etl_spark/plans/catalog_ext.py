@@ -4,13 +4,13 @@ Round 10 split the 17k-line monolith into `plans/ext/` theme modules
 (r9 VERDICT task #6); this shim preserves the two public names every
 consumer imports:
 
-- ``EXTRA_QUERIES`` — the ordered {name: (fn, oracle_sql, ops)} registry
+- ``EXTRA_QUERIES`` — the {name: (fn, oracle_sql, ops)} registry
   merged into ``plans.catalog.QUERIES``. Theme modules register into
-  the shared collection dict at import; this shim reorders it into the
-  exact pre-split insertion order (``ext/_order.LEGACY_ORDER``) so
-  nothing downstream — driver window assembly, bench subset hashing,
-  artifact diffs — sees a reordering. Queries added post-split simply
-  append after the legacy block.
+  the shared collection dict at import, so its order is the theme
+  modules' import order below. Nothing reads that order: the
+  correctness window is an explicit tuple
+  (``catalog._DRIVER_WINDOW``) placed first, and every other consumer
+  looks queries up by name.
 - ``copurchase_edges`` — the fixture co-purchase graph builder shared
   by q_boruvka_mst and its edge-for-edge Kruskal pytest twin.
 
@@ -46,14 +46,5 @@ from yelp_etl_spark.plans.ext import (  # noqa: F401  (imports register)
     ext_stream,
     ext_text,
 )
-from yelp_etl_spark.plans.ext._order import LEGACY_ORDER
-from yelp_etl_spark.plans.ext._shared import EXTRA_QUERIES as _COLLECTED
+from yelp_etl_spark.plans.ext._shared import EXTRA_QUERIES  # noqa: F401
 from yelp_etl_spark.plans.ext.ext_graph import copurchase_edges  # noqa: F401
-
-_missing = [n for n in LEGACY_ORDER if n not in _COLLECTED]
-assert not _missing, f"ext split lost queries: {_missing}"
-
-EXTRA_QUERIES: dict = {n: _COLLECTED[n] for n in LEGACY_ORDER}
-EXTRA_QUERIES.update(
-    (n, spec) for n, spec in _COLLECTED.items() if n not in EXTRA_QUERIES
-)

@@ -1,7 +1,7 @@
 """Shared helpers + the collected extension-query registry.
 
 Every ext_<theme> module registers into EXTRA_QUERIES here; the
-plans/catalog_ext shim reorders it into the legacy order."""
+plans/catalog_ext shim re-exports it."""
 
 
 from __future__ import annotations

@@ -862,8 +862,7 @@ def q_medallion_gold_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-segment totals the DuckDB twin recomputes STRAIGHT from the
     raw inputs, so one green row covers bronze/silver write-read
     integrity, the enrich join, the week rollup, the cents
-    quantization, and the partitioned snapshot commit end to end.
-    The bench times this same pipeline as ``pipeline_seconds``."""
+    quantization, and the partitioned snapshot commit end to end."""
     from yelp_etl_spark.plans.catalog import _scratch_dir
     from yelp_etl_spark.plans.pipelines import run_medallion
     from yelp_etl_spark.sources.snapshots import snapshot_read

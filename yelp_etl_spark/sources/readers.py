@@ -108,12 +108,6 @@ def load_tables(spark: SparkSession, sf_dir: str, names=TABLES) -> dict[str, Dat
     return {name: load_table(spark, sf_dir, name) for name in names}
 
 
-def register_views(spark: SparkSession, sf_dir: str, names=TABLES) -> None:
-    """Register fixture tables as temp views so spark.sql() can be used."""
-    for name in names:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
 def fan_out(df: DataFrame, *cols: str, multiplier: int = 1) -> DataFrame:
     """Widen a narrow scan before CPU-amplifying map work (gram
     explodes, shingle generation, per-row feature extraction).

@@ -15,6 +15,9 @@ joins downstream.
 
 from __future__ import annotations
 
+import os
+import shutil
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
@@ -174,29 +177,50 @@ def compact_parquet_dir(
     read → repartition(n) → write to a sibling temp dir → rename swap.
     """
     import math
-    import os
-    import shutil
 
-    total = sum(
-        os.path.getsize(os.path.join(root, f))
-        for root, _, files in os.walk(path)
-        for f in files
-        if not f.startswith(("_", "."))
-    )
-    n_files = max(1, math.ceil(total / target_file_bytes))
-    tmp = path.rstrip("/") + "__compacting"
-    spark.read.parquet(path).repartition(n_files).write.mode(
-        "overwrite"
-    ).parquet(tmp)
-    old = path.rstrip("/") + "__old"
-    os.rename(path, old)
+    with _swapped_dir(spark, path, "__compacting") as tmp:
+        total = sum(
+            os.path.getsize(os.path.join(root, f))
+            for root, _, files in os.walk(path)
+            for f in files
+            if not f.startswith(("_", "."))
+        )
+        n_files = max(1, math.ceil(total / target_file_bytes))
+        spark.read.parquet(path).repartition(n_files).write.parquet(tmp)
+    return n_files
+
+
+@contextmanager
+def _swapped_dir(spark, path: str, tmp_suffix: str):
+    """Rewrite directory ``path`` out of place: yield a fresh sibling
+    temp dir for the new contents, then swap it in with two renames
+    (``path`` → ``path__old``, temp → ``path``). A crash mid-write
+    leaves ``path`` untouched; if the body raises, nothing is swapped.
+
+    Entry first repairs what a crashed earlier swap left behind, so the
+    body always reads the last complete table:
+
+    - a crash between the two renames leaves no ``path``, only the
+      complete ``__old`` copy — restore it (treating the table as
+      missing and then deleting ``__old`` would lose it for good);
+    - a crash after the second rename leaves a stale ``__old``, which
+      would make every later ``rename(path, old)`` fail with ENOTEMPTY.
+    """
+    path = path.rstrip("/")
+    old, tmp = path + "__old", path + tmp_suffix
+    if not os.path.isdir(path) and os.path.isdir(old):
+        os.rename(old, path)
+    shutil.rmtree(old, ignore_errors=True)
+    shutil.rmtree(tmp, ignore_errors=True)
+    yield tmp
+    if os.path.isdir(path):
+        os.rename(path, old)
     os.rename(tmp, path)
-    shutil.rmtree(old)
+    shutil.rmtree(old, ignore_errors=True)
     # The swap happened outside Spark's write path, so the session's
     # FileStatusCache may still hold the pre-swap listing; without this
     # a read-back can serve the OLD files (stale-listing hash mismatch).
     spark.catalog.refreshByPath(path)
-    return n_files
 
 
 def overwrite_partitions_dynamic(

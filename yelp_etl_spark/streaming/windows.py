@@ -397,7 +397,10 @@ def foreach_batch_upsert(
     """
     from yelp_etl_spark.operators.scd import merge_upsert
     from yelp_etl_spark.sources.snapshots import snapshot_merge
-    from yelp_etl_spark.sources.writers import overwrite_partitions_dynamic
+    from yelp_etl_spark.sources.writers import (
+        _swapped_dir,
+        overwrite_partitions_dynamic,
+    )
 
     if snapshot_table and partition_columns:
         raise ValueError(
@@ -412,32 +415,23 @@ def foreach_batch_upsert(
             f"duplicated (partition_columns={partition_columns}, keys={keys})"
         )
 
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
+    def _merged(batch_df: DataFrame) -> DataFrame:
         import functools
         import operator
         import os
 
-        if batch_df.isEmpty():
-            return
-        if snapshot_table:
-            snapshot_merge(spark, batch_df, target_path, keys)
-            return
-        # Crash recovery for the rename-swap below: a crash between
-        # rename(target -> __old) and rename(__merging -> target)
-        # leaves no target dir but a complete __old copy. Restore it
-        # BEFORE the exists check — otherwise the replay would treat
-        # the table as empty (merged = batch only) and its cleanup of
-        # __old would delete the only copy of the pre-crash table.
-        _old = target_path.rstrip("/") + "__old"
-        if not os.path.isdir(target_path) and os.path.isdir(_old):
-            os.rename(_old, target_path)
         exists = os.path.isdir(target_path) and any(
             not f.startswith(("_", ".")) for f in os.listdir(target_path)
         )
         if not exists:
-            merged = batch_df
-        elif partition_columns:
+            return batch_df
+        # schema pinned to the batch's: partition-directory type
+        # inference must not re-type key columns ('00123' dirs
+        # inferring as INT would collapse/duplicate keys)
+        target = batch_df.sparkSession.read.schema(batch_df.schema).parquet(
+            target_path
+        )
+        if partition_columns:
             # Static partition-pruning predicate from the batch's
             # partition tuples (bounded collect): the scan lists and
             # reads only the touched partition directories.
@@ -456,48 +450,37 @@ def foreach_batch_upsert(
                     for r in touched
                 ),
             )
-            # schema pinned to the batch's: partition-directory type
-            # inference must not re-type key columns ('00123' dirs
-            # inferring as INT would collapse/duplicate keys)
-            target = (
-                spark.read.schema(batch_df.schema)
-                .parquet(target_path)
-                .filter(pred)
-            )
-            # null_safe: a nullable partition column sits in the key
-            merged = merge_upsert(target, batch_df, keys, null_safe=True)
-        else:
-            target = spark.read.schema(batch_df.schema).parquet(target_path)
-            merged = merge_upsert(target, batch_df, keys, null_safe=True)
-        if partition_columns:
+            target = target.filter(pred)
+        # null_safe: a nullable partition column sits in the key
+        return merge_upsert(target, batch_df, keys, null_safe=True)
+
+    def _merge(batch_df: DataFrame, batch_id: int) -> None:
+        spark = batch_df.sparkSession
+        if batch_df.isEmpty():
+            return
+        if snapshot_table:
+            snapshot_merge(spark, batch_df, target_path, keys)
+        elif partition_columns:
             # Materialize before overwriting directories being read.
             # (Remaining crash window: Spark's dynamic-overwrite commit
             # replaces the touched partitions at job commit; a crash
             # inside that commit can need a replay of this batch, which
             # the checkpoint guarantees. For fully atomic per-batch
             # publication use snapshot_table=True.)
-            out = merged.cache()
+            out = _merged(batch_df).cache()
             out.count()
             overwrite_partitions_dynamic(out, target_path, partition_columns)
             out.unpersist()
         else:
             # Never truncate-in-place: write the merged table to a
-            # sibling temp dir and atomically rename-swap, so a crash
+            # sibling temp dir and rename-swap it in, so a crash
             # mid-batch leaves the previous contents intact and the
             # checkpointed replay re-merges them (the exactly-once
-            # convergence claim depends on this).
-            import shutil
-
-            tmp = target_path.rstrip("/") + "__merging"
-            shutil.rmtree(tmp, ignore_errors=True)
-            merged.write.parquet(tmp)
-            old = target_path.rstrip("/") + "__old"
-            shutil.rmtree(old, ignore_errors=True)
-            if os.path.isdir(target_path):
-                os.rename(target_path, old)
-            os.rename(tmp, target_path)
-            shutil.rmtree(old, ignore_errors=True)
-            spark.catalog.refreshByPath(target_path)
+            # convergence claim depends on this). The swap first
+            # restores a table a crashed swap left only as ``__old``,
+            # so the replay merges into it rather than into nothing.
+            with _swapped_dir(spark, target_path, "__merging") as tmp:
+                _merged(batch_df).write.parquet(tmp)
 
     q = (
         stream.writeStream.foreachBatch(_merge)
