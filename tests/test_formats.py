@@ -121,12 +121,16 @@ def test_dynamic_partition_overwrite_touches_only_written_partitions(
             assert after[status] == n  # untouched partitions intact
 
 
-def test_fan_out_widens_narrow_scans_only(spark, sf_dir):
+def test_fan_out_widens_narrow_scans_only(spark, sf_dir, spark_jobs):
     """fan_out repartitions a narrow plan up to defaultParallelism and
     is a NO-OP (same DataFrame object, no added Exchange) when the
     plan already has at least that many partitions — the guarantee
     that makes it safe to leave in operators at 100 TB, where scans
-    always carry more splits than cores."""
+    always carry more splits than cores. It decides from the plan:
+    on a shuffled input it submits no Spark job (asking an adaptive
+    plan for its partition count runs its shuffle stages), and neither
+    does building the curation operators that call it."""
+    from yelp_etl_spark.functions import curation as C
     from yelp_etl_spark.sources.readers import fan_out, load_table
 
     target = spark.sparkContext.defaultParallelism
@@ -138,6 +142,63 @@ def test_fan_out_widens_narrow_scans_only(spark, sf_dir):
     assert widened.count() == docs.count()
     already_wide = docs.repartition(target * 2)
     assert fan_out(already_wide, "doc_id") is already_wide
+
+    orders = load_table(spark, sf_dir, "orders")
+    customer = load_table(spark, sf_dir, "customer")
+    joined = orders.join(
+        customer.hint("shuffle_hash"), orders.o_custkey == customer.c_custkey
+    )
+    grouped = orders.groupBy("o_custkey").agg(F.count("*").alias("n"))
+    for shuffled, key in ((joined, "o_orderkey"), (grouped, "o_custkey")):
+        out, jobs = spark_jobs(lambda: fan_out(shuffled, key))
+        assert jobs == 0
+        assert sorted(map(tuple, out.collect())) == sorted(
+            map(tuple, shuffled.collect())
+        )
+
+    gated = docs.join(
+        docs.groupBy("doc_id").count().select("doc_id"), "doc_id", "left_semi"
+    )
+    _, jobs = spark_jobs(lambda: C.cross_doc_boilerplate(gated))
+    assert jobs == 0
+    _, jobs = spark_jobs(lambda: C.decontaminate(gated, docs.limit(5)))
+    assert jobs == 0
+
+
+def test_load_table_schema_memo_follows_file_version(spark, tmp_path):
+    """load_table resolves a file's schema once per file version: a file
+    rewritten with another schema is read with the new one, and
+    concurrent first loads of one file agree."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    root = str(tmp_path)
+    pq.write_table(pa.table({"k": [1, 2]}), tmp_path / "t.parquet")
+    assert load_table(spark, root, "t").columns == ["k"]
+    pq.write_table(pa.table({"k": [1, 2], "v": ["a", "b"]}), tmp_path / "t.parquet")
+    back = load_table(spark, root, "t")
+    assert back.columns == ["k", "v"]
+    assert sorted(map(tuple, back.collect())) == [(1, "a"), (2, "b")]
+
+    pq.write_table(pa.table({"k": [1], "w": [1.5]}), tmp_path / "u.parquet")
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(8) as pool:
+            schemas = list(
+                pool.map(
+                    lambda _: load_table(spark, root, "u").schema,
+                    range(16),
+                    timeout=300,
+                )
+            )
+    finally:
+        sys.setswitchinterval(switch)
+    assert schemas[0].names == ["k", "w"]
+    assert all(s == schemas[0] for s in schemas)
 
 
 def test_read_json_permissive_corrupt_record_capture(spark, tmp_path):

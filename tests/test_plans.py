@@ -321,6 +321,31 @@ def test_bm25_is_one_lazy_plan_no_eager_stats_job(spark, sf_dir):
     assert "tok" in plan
 
 
+# The eight catalog queries perfbench's analytics_curation workload runs.
+BENCHMARK_MIX = (
+    "flagship_revenue",
+    "pricing_summary",
+    "tpch_q3_shipping",
+    "tpch_q5_region_revenue",
+    "tpch_q18_large_orders",
+    "window_topk",
+    "sessionize_gaps",
+    "asof_join",
+)
+
+
+def test_benchmark_mix_builds_without_spark_jobs(spark, sf_dir, spark_jobs):
+    """Building a query is planning only: once a session has loaded a
+    table (its schema is then known), building any of the benchmark mix
+    submits zero Spark jobs — no schema inference, no partition probe,
+    no eager action."""
+    for name in BENCHMARK_MIX:
+        QUERIES[name].fn(spark, sf_dir)
+    for name in BENCHMARK_MIX:
+        _, jobs = spark_jobs(lambda: QUERIES[name].fn(spark, sf_dir))
+        assert jobs == 0, name
+
+
 def test_jaccard_prefix_join_plan(spark, sf_dir):
     """Prefix-filter similarity join: candidate generation must be an
     equi-join on the shingle hash (never cartesian / nested-loop), the
