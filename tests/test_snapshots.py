@@ -118,13 +118,26 @@ def test_snapshot_merge_semantics(spark, tmp_path):
     assert old == {(1, 10.0), (2, 20.0)}
 
 
-def test_streaming_upsert_into_snapshot_table(spark, tmp_path):
+def test_streaming_upsert_into_snapshot_table(spark, tmp_path, monkeypatch):
     """Streaming sink → snapshot table: one atomic commit per non-empty
     micro-batch, converged contents equal the batch aggregate, and the
-    first batch's state is still readable via time travel."""
+    first batch's state is still readable via time travel. The sink
+    looks ``snapshots.snapshot_merge`` up when it runs, so a wrapper
+    patched onto that name (perfbench's commit span) sees every
+    commit."""
     from pyspark.sql import functions as F
 
+    from yelp_etl_spark.sources import snapshots as snapshots_module
     from yelp_etl_spark.streaming.windows import foreach_batch_upsert
+
+    merges = []
+    real_merge = snapshots_module.snapshot_merge
+
+    def counting_merge(*args, **kwargs):
+        merges.append(real_merge(*args, **kwargs))
+        return merges[-1]
+
+    monkeypatch.setattr(snapshots_module, "snapshot_merge", counting_merge)
 
     src = str(tmp_path / "src")
     rows = [(i % 5, float(i)) for i in range(40)]
@@ -154,6 +167,7 @@ def test_streaming_upsert_into_snapshot_table(spark, tmp_path):
     assert got == want
     snaps = snapshots(t)
     assert len(snaps) >= 2  # one commit per non-empty batch
+    assert merges == [s["snapshot_id"] for s in snaps]
     # intermediate state preserved for time travel
     assert snapshot_read(spark, t, snapshot_id=1).count() > 0
 
@@ -174,7 +188,44 @@ def test_append_schema_evolution_additive(spark, tmp_path):
     """Iceberg-style add-column evolution: an append with a NEW column
     reads old files as NULL for it; an append MISSING an old column
     keeps that column (nulls for new rows); a type change is rejected
-    at commit time."""
+    at commit time. The same rule binds both commits that carry the
+    parent's files on a partitioned table — append and dynamic
+    partition overwrite — and a refused type change writes no file."""
+    from yelp_etl_spark.sources.snapshots import snapshot_overwrite_partitions
+
+    def append(df, t):
+        return snapshot_write(df, t, mode="append")
+
+    def overwrite(df, t):
+        return snapshot_overwrite_partitions(df, t, ["p"])
+
+    for name, commit in (("append", append), ("overwrite", overwrite)):
+        t = str(tmp_path / f"partitioned_{name}")
+        snapshot_write(
+            spark.createDataFrame([(1, "x", "a")], "id long, p string, s string"),
+            t,
+            partition_by=["p"],
+        )
+        # each batch lands in its own partition, so the overwrite
+        # carries every earlier file
+        commit(
+            spark.createDataFrame(
+                [(2, "y", "b", 9.5)], "id long, p string, s string, score double"
+            ),
+            t,
+        )
+        commit(
+            spark.createDataFrame([(3, "z", 1.5)], "id long, p string, score double"),
+            t,
+        )
+        rows = {r.id: (r.s, r.score) for r in snapshot_read(spark, t).collect()}
+        assert rows == {1: ("a", None), 2: ("b", 9.5), 3: (None, 1.5)}, name
+        n_files = len(os.listdir(os.path.join(t, "data")))
+        with pytest.raises(ValueError, match="changes type"):
+            commit(spark.createDataFrame([("x", "w")], "id string, p string"), t)
+        assert len(os.listdir(os.path.join(t, "data"))) == n_files, name
+        assert len(snapshots(t)) == 3, name
+
     t = str(tmp_path / "tbl")
     snapshot_write(
         spark.createDataFrame([(1, "a")], "id long, s string"), t
@@ -809,6 +860,10 @@ def test_bucket_transform_spec_hidden_partitioning(spark, tmp_path):
     assert cur.filter(F.col("k") == 5).count() == 1
     assert cur.filter(F.col("k") == 5).collect()[0].id == 10_000
     assert cur.filter(F.col("k").isNull()).count() == 1
+    # a plain replace inherits the bucket spec: the inherited spec is
+    # checked against its SOURCE column k, not the field k_bucket8
+    sid = snapshot_write(df, t, mode="replace")
+    assert _load_manifest(t, sid)["partition_by"] == ["bucket(8, k)"]
 
 
 def test_metadata_tables(spark, tmp_path):
@@ -1167,6 +1222,7 @@ def test_bloom_spec_survives_replace_and_overwrite(spark, tmp_path):
     disables deliberately."""
     from yelp_etl_spark.sources.snapshots import (
         _load_manifest,
+        _read_pointer,
         snapshot_overwrite_partitions,
     )
 
@@ -1185,6 +1241,15 @@ def test_bloom_spec_survives_replace_and_overwrite(spark, tmp_path):
     m3 = _load_manifest(t, 3)
     assert m3.get("bloom_columns") == ["k"]
     assert all("bloom" in f for f in m3["files"])
+    # an overwrite batch without the bloom column refuses before any
+    # data file lands
+    n_files = len(os.listdir(os.path.join(t, "data")))
+    with pytest.raises(ValueError, match="bloom_columns"):
+        snapshot_overwrite_partitions(
+            df.filter("grp = 'B'").select("grp"), t, ["grp"]
+        )
+    assert len(os.listdir(os.path.join(t, "data"))) == n_files
+    assert _read_pointer(t) == 3
     # dropping the source column refuses with the [] escape named
     with pytest.raises(ValueError, match="bloom_columns=\\[\\]"):
         snapshot_write(df.select("grp"), t, mode="replace")

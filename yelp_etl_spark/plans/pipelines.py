@@ -150,6 +150,25 @@ def gold_weekly_business_stats(review_obt: DataFrame) -> DataFrame:
     )
 
 
+def gold_segment_weekly(order_obt: DataFrame) -> DataFrame:
+    """Market segment × order week rollup over the customer-enriched
+    order OBT (``cust_``-prefixed dim columns): order count, revenue in
+    exact integer cents and distinct customers — the gold table of
+    run_gold_pipeline and run_medallion."""
+    return order_obt.groupBy(
+        F.col("cust_c_mktsegment").alias("segment"),
+        F.to_date(F.date_trunc("week", F.col("o_orderdate"))).alias(
+            "week_start"
+        ),
+    ).agg(
+        F.count("*").cast("long").alias("n_orders"),
+        F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
+        .cast("long")
+        .alias("revenue_cents"),
+        F.countDistinct("c_custkey").cast("long").alias("n_customers"),
+    )
+
+
 def run_gold_pipeline(spark, sf_dir: str, table_dir: str) -> int:
     """The full silver → gold recipe the reference declares and leaves
     TODO (run-all-pipelines.sh:239), composed end to end from the
@@ -174,20 +193,9 @@ def run_gold_pipeline(spark, sf_dir: str, table_dir: str) -> int:
     )
     customer = load_table(spark, sf_dir, "customer")
     obt = enrich(orders, [Dimension("cust", customer, "c_custkey")])
-    gold = obt.groupBy(
-        F.col("cust_c_mktsegment").alias("segment"),
-        F.to_date(F.date_trunc("week", F.col("o_orderdate"))).alias(
-            "week_start"
-        ),
-    ).agg(
-        F.count("*").cast("long").alias("n_orders"),
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
-        .cast("long")
-        .alias("revenue_cents"),
-        F.countDistinct("c_custkey").cast("long").alias("n_customers"),
-    )
     return snapshot_write(
-        gold, table_dir, mode="replace", partition_by=["segment"]
+        gold_segment_weekly(obt), table_dir, mode="replace",
+        partition_by=["segment"],
     )
 
 
@@ -303,24 +311,12 @@ def run_medallion(spark, sf_dir: str, root: str) -> dict[str, int]:
         list(pool.map(_write_enriched, enriched.items()))
     spark.sparkContext.setJobDescription(None)
 
-    obt = spark.read.parquet(f"{root}/enriched/customer_orders")
-    gold = obt.groupBy(
-        F.col("cust_c_mktsegment").alias("segment"),
-        F.to_date(F.date_trunc("week", F.col("o_orderdate"))).alias(
-            "week_start"
-        ),
-    ).agg(
-        F.count("*").cast("long").alias("n_orders"),
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
-        .cast("long")
-        .alias("revenue_cents"),
-        F.countDistinct("c_custkey").cast("long").alias("n_customers"),
-    )
     from yelp_etl_spark.sources.snapshots import snapshot_write
 
+    obt = spark.read.parquet(f"{root}/enriched/customer_orders")
     snapshot_write(
-        gold, f"{root}/gold/segment_weekly", mode="replace",
-        partition_by=["segment"],
+        gold_segment_weekly(obt), f"{root}/gold/segment_weekly",
+        mode="replace", partition_by=["segment"],
     )
     return {
         layer: len(_os.listdir(f"{root}/{layer}"))

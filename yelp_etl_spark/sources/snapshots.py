@@ -24,6 +24,14 @@ commit: every commit kind builds its manifest with ``_next_manifest``,
 which carries them from the parent unless the commit deliberately
 replaces or resets one.
 
+Every commit that writes data files goes through ``_commit_data``,
+which owns what a data commit inherits from its table: the spec and
+bloom columns come from the parent unless passed; a commit that carries
+parent files records the parent's schema united with the batch's (a
+column type change refuses), a replace or rewrite the batch's own; the
+batch must hold the spec source and bloom columns and pass the CHECK
+constraints; only then are its data files written.
+
 Commit protocol (single-writer; see note below):
 1. Data files are FULLY written (to a scratch dir, then renamed into
    ``data/`` under fresh unique names) before any manifest references
@@ -50,6 +58,7 @@ import json
 import os
 import shutil
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -176,8 +185,11 @@ def _next_manifest(
       overwrite_partitions and binpack keep them, because they carry
       parent data files that the delete files mask (binpack refuses
       while any are pending).
-    - snapshot_write records the spec and bloom columns it resolved:
-      inherited unless passed, ``[]`` drops them deliberately.
+    - every data commit (_commit_data) records the spec and bloom
+      columns it resolved: inherited unless passed, ``[]`` drops them
+      deliberately. It validates the batch against ``constraints`` and
+      carries them unchanged — binpack included, so a rewrite cannot
+      land rows the table's constraints refuse.
     - set/drop_constraint replace ``constraints`` (a drop is always
       explicit), evolve_spec replaces ``partition_by`` and mor_delete
       appends to ``delete_files``.
@@ -542,6 +554,16 @@ def _bucket_expr(col: str, n: int):
     ).otherwise(F.pmod(F.xxhash64(F.col(col)), F.lit(n)))
 
 
+def _spec_exprs(partition_by: list[str] | None) -> dict:
+    """Each spec field's value as a column expression, by field name:
+    the source column for an identity field, its bucket for
+    ``bucket(N, col)``. Empty for no spec."""
+    return {
+        field: F.col(src) if n is None else _bucket_expr(src, n)
+        for field, src, n in _spec_fields(partition_by or [])
+    }
+
+
 def _parse_partition_dirs(rel_dir: str, fields: list[str]) -> dict:
     """Decode a Hive-style ``__p_field=value/...`` scratch path into the
     file's partition tuple (values as unescaped strings, NULL as
@@ -613,11 +635,8 @@ def _write_data_files(
                     "or a sentinel before partitioning on them"
                 )
         out = df
-        for field, src, n in fields:
-            out = out.withColumn(
-                f"__p_{field}",
-                F.col(src) if n is None else _bucket_expr(src, n),
-            )
+        for field, expr in _spec_exprs(partition_by).items():
+            out = out.withColumn(f"__p_{field}", expr)
         out.write.partitionBy(*[f"__p_{f}" for f, _, _ in fields]).parquet(
             scratch
         )
@@ -683,162 +702,168 @@ def snapshot_write(
     layer in front of the min/max zone maps. The per-file-single-tuple
     guarantee comes from writing through a scratch partitionBy on
     duplicated dunder columns (Spark's fanout writer splits tasks by
-    value), which are stripped from the files themselves."""
+    value), which are stripped from the files themselves.
+
+    ``partition_by`` and ``bloom_columns`` default to the table's, an
+    append records the union of the table's and the batch's schemas,
+    and ``publish=False`` stages the snapshot (write-audit-publish) —
+    the rules every data commit shares (_commit_data)."""
     if mode not in ("replace", "append", "rewrite"):
         raise ValueError(f"mode must be replace|append|rewrite, got {mode!r}")
     parent = _read_pointer(table_dir)
-    pm = None
-    # parse the parent manifest at most once per commit: manifests
-    # embed per-file bloom sidecars, so a double json parse is a
-    # multi-MB driver cost on a many-file table
-    parent_manifest = (
-        _load_manifest(table_dir, parent) if parent is not None else None
-    )
-    if mode in ("replace", "rewrite") and parent is not None and partition_by is None:
-        # replace/rewrite inherit the parent's partition spec too
-        # (Iceberg createOrReplace keeps the TABLE's spec): a plain
-        # replace on a partitioned table must not silently commit a
-        # spec-less manifest — that de-partitions the table, the next
-        # overwrite_partitions refuses, and pruned reads degrade to
-        # full listings. An explicit partition_by still re-specs, and
-        # an explicit partition_by=[] de-partitions deliberately.
-        partition_by = parent_manifest.get("partition_by")
-        if partition_by:
-            missing = [
-                f for f, _, _ in _spec_fields(partition_by)
-                if f not in df.columns
-            ]
-            if missing:
-                raise ValueError(
-                    f"replace inherits the table partition spec "
-                    f"{partition_by!r} but the new schema lacks source "
-                    f"column(s) {missing!r}: pass partition_by=[...] for "
-                    "a new spec, or partition_by=[] to de-partition the "
-                    "table explicitly"
-                )
-    if mode in ("replace", "rewrite") and parent is not None and bloom_columns is None:
-        # Bloom sidecars are a table property like the partition spec:
-        # a plain replace/rewrite (compaction included) must not
-        # silently stop building them — point_filter reads would
-        # degrade to full scans with no error. Same contract as the
-        # partition inherit above: missing source columns refuse
-        # loudly, bloom_columns=[] disables deliberately.
-        inherited_bloom = parent_manifest.get("bloom_columns")
-        if inherited_bloom:
-            missing = [c for c in inherited_bloom if c not in df.columns]
-            if missing:
-                raise ValueError(
-                    f"replace inherits the table bloom_columns "
-                    f"{inherited_bloom!r} but the new schema lacks "
-                    f"column(s) {missing!r}: pass bloom_columns=[...] for "
-                    "a new spec, or bloom_columns=[] to drop the sidecars "
-                    "explicitly"
-                )
-            bloom_columns = inherited_bloom
-    if mode == "append" and parent is not None:
-        pm = parent_manifest
-        # An append INHERITS the parent's partition spec (Iceberg: the
-        # spec belongs to the table, not the write) — without this, a
-        # plain append would silently de-partition the table and the
-        # next merge/compact would rewrite it spec-less. A caller-passed
-        # spec must MATCH the parent's; this layer has no spec
-        # evolution, so a mismatch (including spec'd append onto a
-        # spec-less table, which would mix tuple-less and tupled files
-        # in one manifest) refuses loudly.
-        parent_spec = pm.get("partition_by")
-        if partition_by is None:
-            partition_by = parent_spec
-        elif parent_spec is None or list(partition_by) != list(parent_spec):
-            raise ValueError(
-                f"append spec {list(partition_by)!r} != parent snapshot "
-                f"spec {parent_spec!r}: append with the parent's spec "
-                "(or omit partition_by to inherit it) — to change the "
-                "table's layout going forward, commit "
-                "snapshot_evolve_spec first"
-            )
-        if bloom_columns is None:
-            # sidecars are a table property like the partition spec:
-            # an append keeps building them for its new files
-            bloom_columns = pm.get("bloom_columns")
-    if bloom_columns:
-        from pyspark.sql.types import IntegralType, StringType
-
-        bad = [
-            c for c in bloom_columns
-            if c not in df.columns
-            or not isinstance(
-                df.schema[c].dataType, (IntegralType, StringType)
-            )
-        ]
-        if bad:
-            raise ValueError(
-                f"bloom_columns {bad!r} must be existing integer or "
-                "string columns: the sidecar's to-string rendering is "
-                "only engine-stable for those types (floats render "
-                "differently between pyarrow and Spark casts)"
-            )
-    # CHECK constraints are a table property (Delta's ADD CONSTRAINT):
-    # every write against a constrained table validates the INCOMING
-    # DataFrame before any data file lands — append checks the new
-    # rows only (existing data was checked when its constraint was
-    # added), replace/rewrite check the full replacement. One counting
-    # job per constrained write, the price Delta pays too; violations
-    # refuse the commit with per-constraint counts, so a bad upstream
-    # batch can never poison the table silently.
-    constraints = (
-        parent_manifest.get("constraints") if parent_manifest else None
-    )
-    if constraints:
-        _validate_constraints(df, constraints)
-    new_files = _write_data_files(df, table_dir, partition_by, bloom_columns)
-
-    # 2. new manifest = parent files (append) or just new files (replace)
-    schema = df.schema
-    if pm is not None:
-        # Additive schema evolution (Iceberg's add-column): the
-        # snapshot's schema is the UNION of parent and append schemas,
-        # so files missing a column read it as NULL and an append that
-        # lacks an old column can never silently drop it. Incompatible
-        # type changes fail here, at commit time, not at read time.
-        from pyspark.sql.types import StructField, StructType
-
-        old = StructType.fromJson(json.loads(pm["schema"]))
-        merged = list(old.fields)
-        by_name = {f.name: f for f in merged}
-        for f in schema.fields:
-            prev = by_name.get(f.name)
-            if prev is None:
-                merged.append(f)
-            elif prev.dataType != f.dataType:
-                raise ValueError(
-                    f"append changes type of column {f.name!r}: "
-                    f"{prev.dataType} -> {f.dataType}"
-                )
-        schema = StructType(
-            [StructField(f.name, f.dataType, True) for f in merged]
-        )
-    # write-audit-publish staging (Iceberg's WAP) when not publish: the
-    # snapshot is fully materialized and auditable by explicit id
-    # (snapshot_read(snapshot_id=...)), invisible to every default
-    # reader, and EXCLUSIVE — a staged snapshot holds the next sid, so
-    # concurrent commits fail loudly until snapshot_publish /
-    # snapshot_abandon resolves the audit. Crash-safety: an abandoned
-    # stage is just a manifest + unreferenced files, reclaimed by
-    # snapshot_abandon or expire-less vacuum flows.
-    # replace/rewrite start from no files and reset the delete list;
-    # an append keeps both (see _next_manifest)
-    resets = {} if pm is not None else {"files": [], "delete_files": None}
-    manifest = _next_manifest(
-        parent_manifest,
+    # parse the parent manifest once per commit: manifests embed
+    # per-file bloom sidecars, so a double parse is a multi-MB driver
+    # cost on a many-file table
+    pm = _load_manifest(table_dir, parent) if parent is not None else None
+    # an append carries the parent's files; replace/rewrite start empty
+    carry = pm["files"] if mode == "append" and pm is not None else None
+    return _commit_data(
+        df,
+        table_dir,
+        pm,
         mode,
+        carry,
+        partition_by=partition_by,
+        bloom_columns=bloom_columns,
+        publish=publish,
+    )
+
+
+def _union_schema(operation: str, *schemas: T.StructType) -> T.StructType:
+    """Additive schema evolution (Iceberg's add-column): the union of
+    ``schemas`` by column name in first-seen order, every column
+    nullable — files or versions that lack a column read it as NULL,
+    and a batch that lacks an old column can never silently drop it. A
+    column whose type differs between them refuses, at commit time
+    rather than at read time."""
+    types: dict = {}
+    for schema in schemas:
+        for f in schema.fields:
+            prev = types.setdefault(f.name, f.dataType)
+            if prev != f.dataType:
+                raise ValueError(
+                    f"{operation} changes type of column {f.name!r}: "
+                    f"{prev} -> {f.dataType}"
+                )
+    return T.StructType([T.StructField(n, t, True) for n, t in types.items()])
+
+
+def _commit_data(
+    df: DataFrame,
+    table_dir: str,
+    parent: dict | None,
+    operation: str,
+    carry: list[dict] | Callable[[list[dict]], list[dict]] | None = None,
+    *,
+    partition_by: list[str] | None = None,
+    bloom_columns: list[str] | None = None,
+    publish: bool = True,
+    replace_staged: bool = False,
+) -> int:
+    """Commit ``df`` as ``operation`` on top of ``parent`` (None for a
+    table's first commit) — the one path by which a commit writes data
+    files. ``carry`` is the parent entries the new snapshot keeps: a
+    list, or a function of the new entries (a dynamic overwrite keeps
+    the partitions the batch did not touch). None starts from no files
+    and resets the delete list (replace/rewrite, see _next_manifest).
+
+    1. The spec and bloom columns are the parent's unless passed
+       (``[]`` drops one deliberately). A commit that carries parent
+       files writes under the table's spec: a passed spec must equal
+       it (the layout changes only through snapshot_evolve_spec).
+    2. The schema: with ``carry``, the parent's united with the
+       batch's (_union_schema); otherwise the batch's own.
+    3. The batch must hold every spec source and bloom column, and
+       bloom columns must be integer or string.
+    4. The table's CHECK constraints validate the batch (Delta's ADD
+       CONSTRAINT: one aggregate job per constrained commit, with
+       per-constraint counts; the rows already in the table were
+       checked when each constraint was added).
+    5. Only then are the data files written, so a refusal above
+       leaves the table and its ``data/`` directory untouched.
+    6. The manifest commits. ``publish=False`` stages it instead
+       (Iceberg's write-audit-publish: readable by explicit id,
+       invisible to default readers, and holding the next id
+       exclusively until snapshot_publish or snapshot_abandon).
+       ``replace_staged`` swaps it, staged, for the staged manifest
+       already holding its id, then publishes it (snapshot_merge_3way
+       consuming a staged branch)."""
+    pm = parent or {}
+    carries = carry is not None
+    table_spec = pm.get("partition_by")
+    if partition_by is None:
+        partition_by = table_spec
+    elif carries and (table_spec is None or list(partition_by) != table_spec):
+        raise ValueError(
+            f"{operation} spec {list(partition_by)!r} != parent snapshot "
+            f"spec {table_spec!r}: a commit that keeps the table's files "
+            "writes under its spec — to change the table's layout going "
+            "forward, commit snapshot_evolve_spec first"
+        )
+    if bloom_columns is None:
+        bloom_columns = pm.get("bloom_columns")
+    schema = df.schema
+    if carries:
+        parent_schema = T.StructType.fromJson(json.loads(pm["schema"]))
+        schema = _union_schema(operation, parent_schema, schema)
+    sources = [src for _f, src, _n in _spec_fields(partition_by or [])]
+    if missing := [c for c in sources if c not in df.columns]:
+        raise ValueError(
+            f"{operation} writes under the partition spec {partition_by!r} "
+            f"but the batch lacks source column(s) {missing!r}: pass "
+            "partition_by=[...] for a new spec, or partition_by=[] to "
+            "de-partition the table explicitly"
+        )
+    if missing := [c for c in bloom_columns or [] if c not in df.columns]:
+        raise ValueError(
+            f"{operation} builds the bloom_columns {bloom_columns!r} but "
+            f"the batch lacks column(s) {missing!r}: pass "
+            "bloom_columns=[...] for a new list, or bloom_columns=[] to "
+            "drop the sidecars explicitly (snapshot_write)"
+        )
+    bloom_types = (T.IntegralType, T.StringType)
+    bad = [
+        c for c in bloom_columns or []
+        if not isinstance(df.schema[c].dataType, bloom_types)
+    ]
+    if bad:
+        raise ValueError(
+            f"bloom_columns {bad!r} must be integer or string columns: the "
+            "sidecar's to-string rendering is only engine-stable for those "
+            "types (floats render differently between pyarrow and Spark "
+            "casts)"
+        )
+    if pm.get("constraints"):
+        _validate_constraints(df, pm["constraints"])
+    new_files = _write_data_files(df, table_dir, partition_by, bloom_columns)
+    if callable(carry):
+        carry = carry(new_files)
+    manifest = _next_manifest(
+        parent,
+        operation,
+        carry or [],
         added=new_files,
         schema=schema.json(),
         partition_by=partition_by,
         bloom_columns=bloom_columns,
-        staged=not publish,
-        **resets,
+        staged=not publish or replace_staged,
+        **({} if carries else {"delete_files": None}),
     )
+    if replace_staged:
+        _replace_manifest(table_dir, manifest)
+        return snapshot_publish(table_dir, manifest["snapshot_id"])
     return _commit_manifest(table_dir, manifest, swap_pointer=publish)
+
+
+def _replace_manifest(table_dir: str, manifest: dict) -> None:
+    """Rewrite the manifest of ``manifest["snapshot_id"]`` in place:
+    a unique tmp file, then one atomic os.replace, so a reader sees the
+    old manifest or the new one, never a partial file."""
+    mpath = _manifest_path(table_dir, manifest["snapshot_id"])
+    tmp = f"{mpath}.{uuid.uuid4().hex}.tmp"
+    with open(tmp, "w") as fh:
+        json.dump(manifest, fh)
+    os.replace(tmp, mpath)
 
 
 def _validate_constraints(df: DataFrame, constraints: dict) -> None:
@@ -957,10 +982,7 @@ def snapshot_publish(table_dir: str, snapshot_id: int) -> int:
         # (The first-ever pointer may arrive here, retiring the marker.)
         _swap_pointer(table_dir, snapshot_id)
     manifest.pop("staged", None)
-    tmp = f"{mpath}.{uuid.uuid4().hex}.tmp"
-    with open(tmp, "w") as fh:
-        json.dump(manifest, fh)
-    os.replace(tmp, mpath)
+    _replace_manifest(table_dir, manifest)
     return snapshot_id
 
 
@@ -1432,27 +1454,23 @@ def snapshot_overwrite_partitions(
 
     Requires the parent snapshot to carry the SAME identity spec
     (files without partition info cannot be safely kept-or-replaced;
-    the commit refuses rather than guessing). The touched-tuple
-    collect is bounded by the number of distinct partitions in the
-    delta, not by rows."""
+    the commit refuses rather than guessing). The touched tuples come
+    from the new files' manifest entries, so choosing what to keep
+    costs no job. Like an append, the batch may add or omit columns
+    but not change a column's type, and it builds the table's bloom
+    sidecars and passes its constraints (_commit_data)."""
     parent = _read_pointer(table_dir)
     if parent is None:
         return snapshot_write(
             df, table_dir, mode="replace", partition_by=partition_by
         )
     pm = _load_manifest(table_dir, parent)
-    if pm.get("partition_by") != list(partition_by):
-        raise ValueError(
-            f"parent snapshot spec {pm.get('partition_by')!r} != "
-            f"{list(partition_by)!r}: dynamic overwrite needs a matching "
-            "identity spec on the parent"
-        )
-    fields = [f for f, _, _ in _spec_fields(partition_by)]
+    fields = [f for f, _, _ in _spec_fields(pm.get("partition_by") or [])]
     if any(
         "partition" not in f or any(c not in f["partition"] for c in fields)
         for f in pm["files"]
     ):
-        # files without the CURRENT spec's full partition tuple — an
+        # files without the table spec's full partition tuple — an
         # older layer version's tuple-less files, or files written
         # before a snapshot_evolve_spec under the previous layout —
         # cannot be safely kept-or-replaced; refuse BEFORE the data
@@ -1464,26 +1482,19 @@ def snapshot_overwrite_partitions(
             "table under the spec first (snapshot_write replace with "
             "partition_by)"
         )
-    # the overwrite inherits the table's bloom sidecar spec like every
-    # other write path — replaced partitions keep point-lookup skipping
-    bloom_columns = pm.get("bloom_columns")
-    if pm.get("constraints"):
-        # CHECK constraints bind every ingest path, not just
-        # snapshot_write (r9 review finding): validate the incoming
-        # partition replacement before any file lands
-        _validate_constraints(df, pm["constraints"])
-    new_files = _write_data_files(df, table_dir, partition_by, bloom_columns)
-    touched = {
-        tuple(f["partition"][c] for c in fields) for f in new_files
-    }
-    kept = [
-        f
-        for f in pm["files"]
-        if tuple(f["partition"][c] for c in fields) not in touched
-    ]
-    # kept partitions keep their delete files (see _next_manifest)
-    return _commit_manifest(
-        table_dir, _next_manifest(pm, "overwrite", kept, added=new_files)
+
+    def untouched(new_files: list[dict]) -> list[dict]:
+        touched = {tuple(f["partition"][c] for c in fields) for f in new_files}
+        return [
+            f
+            for f in pm["files"]
+            if tuple(f["partition"][c] for c in fields) not in touched
+        ]
+
+    # the spec must match the table's; kept partitions keep their
+    # delete files (see _next_manifest)
+    return _commit_data(
+        df, table_dir, pm, "overwrite", untouched, partition_by=partition_by
     )
 
 
@@ -1671,21 +1682,14 @@ def snapshot_compact(
             .drop("__cluster_tok")
         )
         return snapshot_write(clustered, table_dir, mode="rewrite")
-    if not spec:
-        return snapshot_write(df.repartition(n_out), table_dir, mode="rewrite")
-    # preserve the partition spec (Iceberg compaction rewrites WITHIN
+    # the rewrite inherits the spec (Iceberg compaction rewrites WITHIN
     # the spec): repartition on the spec fields so each output task
     # holds whole partitions — the fanout write then emits ~one file
     # per (task, partition) instead of files-per-partition × tasks
-    exprs = [
-        F.col(src) if n is None else _bucket_expr(src, n)
-        for _f, src, n in _spec_fields(spec)
-    ]
     return snapshot_write(
-        df.repartition(n_out, *exprs),
+        df.repartition(n_out, *_spec_exprs(spec).values()),
         table_dir,
         mode="rewrite",
-        partition_by=spec,
     )
 
 
@@ -1722,20 +1726,12 @@ def snapshot_merge(
     from yelp_etl_spark.operators.scd import merge_upsert
 
     parent = _read_pointer(table_dir)
-    parent_spec = (
-        _load_manifest(table_dir, parent).get("partition_by")
-        if parent is not None
-        else None
-    )
     if delete_condition is None:
         if parent is None:
             return snapshot_write(source, table_dir, mode="replace")
         target = snapshot_read(spark, table_dir)
         return snapshot_write(
-            merge_upsert(target, source, keys),
-            table_dir,
-            mode="replace",
-            partition_by=parent_spec,
+            merge_upsert(target, source, keys), table_dir, mode="replace"
         )
     deletes = source.filter(delete_condition).select(*keys)
     upserts = source.filter(
@@ -1753,9 +1749,7 @@ def snapshot_merge(
         merged = merge_upsert(
             target, upserts.select(*target.columns), keys
         ).join(deletes, keys, "left_anti")
-    return snapshot_write(
-        merged, table_dir, mode="replace", partition_by=parent_spec
-    )
+    return snapshot_write(merged, table_dir, mode="replace")
 
 
 def snapshot_mor_delete(
@@ -1895,21 +1889,10 @@ def snapshot_merge_3way(
     base = snapshot_read(spark, table_dir, base_id)
     ours = snapshot_read(spark, table_dir, ours_id)
     theirs = snapshot_read(spark, table_dir, theirs_id)
-    # merged schema = union of the three versions (additive evolution)
-    merged_fields: list = []
-    by_name: dict = {}
-    for df in (base, ours, theirs):
-        for f in df.schema.fields:
-            prev = by_name.get(f.name)
-            if prev is None:
-                by_name[f.name] = f
-                merged_fields.append(f)
-            elif prev.dataType != f.dataType:
-                raise ValueError(
-                    f"3-way merge: column {f.name!r} has diverged types "
-                    f"{prev.dataType} vs {f.dataType}"
-                )
-    cols = [f.name for f in merged_fields]
+    union = _union_schema(
+        "3-way merge", base.schema, ours.schema, theirs.schema
+    )
+    cols = union.fieldNames()
     val_cols = [c for c in cols if c not in keys]
 
     def aligned(df: DataFrame) -> DataFrame:
@@ -1917,7 +1900,7 @@ def snapshot_merge_3way(
         return df.select(
             *[
                 F.col(c) if c in have
-                else F.lit(None).cast(by_name[c].dataType).alias(c)
+                else F.lit(None).cast(union[c].dataType).alias(c)
                 for c in cols
             ]
         )
@@ -1967,23 +1950,15 @@ def snapshot_merge_3way(
         .select(*keys, *[F.col("__row")[c].alias(c) for c in val_cols])
         .select(*cols)
     )
-    parent = _read_pointer(table_dir)
-    parent_manifest = (
-        _load_manifest(table_dir, parent) if parent is not None else {}
-    )
-    spec = parent_manifest.get("partition_by")
-    theirs_manifest = _load_manifest(table_dir, theirs_id)
-    if not theirs_manifest.get("staged"):
-        return snapshot_write(
-            merged, table_dir, mode="replace", partition_by=spec
-        )
+    if not _load_manifest(table_dir, theirs_id).get("staged"):
+        return snapshot_write(merged, table_dir, mode="replace")
     # staged branch: atomic consume (see docstring) — merged data
     # files first, then os.replace the staged branch manifest with a
     # STAGED merge manifest reusing its id, then the publish tail.
     # Never abandon-then-commit: a crash between those two steps would
     # leave BOTH the branch and the merge as unreferenced orphans.
-    snapshot_id = (parent or 0) + 1
-    if theirs_id != snapshot_id:
+    parent = _read_pointer(table_dir)
+    if theirs_id != (parent or 0) + 1:
         # a stage holds parent+1 exclusively (snapshot_write refuses
         # concurrent commits while it exists), so anything else means
         # external manifest surgery — refuse rather than clobber, and
@@ -1993,28 +1968,13 @@ def snapshot_merge_3way(
             f"staged branch {theirs_id} does not sit directly above "
             f"the pointer ({parent}): refusing in-place consume"
         )
-    if parent_manifest.get("constraints"):
-        # the merge is an incoming replacement row set like any other
-        # write: validate before the data files land
-        _validate_constraints(merged, parent_manifest["constraints"])
-    new_files = _write_data_files(
-        merged, table_dir, spec, parent_manifest.get("bloom_columns")
-    )
-    manifest = _next_manifest(
-        parent_manifest,
+    return _commit_data(
+        merged,
+        table_dir,
+        _load_manifest(table_dir, parent) if parent is not None else None,
         "replace",
-        [],
-        added=new_files,
-        schema=merged.schema.json(),
-        staged=True,
-        delete_files=None,  # a replace resets the delete list
+        replace_staged=True,
     )
-    mpath = _manifest_path(table_dir, snapshot_id)
-    tmp = f"{mpath}.{uuid.uuid4().hex}.tmp"
-    with open(tmp, "w") as fh:
-        json.dump(manifest, fh)
-    os.replace(tmp, mpath)
-    return snapshot_publish(table_dir, snapshot_id)
 
 
 def snapshot_clone(src_dir: str, dst_dir: str) -> int:
@@ -2084,11 +2044,12 @@ def snapshot_binpack(
 
     Commits one atomic 'rewrite' snapshot (content identical by
     construction); parent spec and bloom sidecars carry over like
-    snapshot_compact. Refuses when merge-on-read delete files are
-    pending (a partial rewrite would bump rewritten rows' sequence
-    numbers past the delete files' — apply them first via a full
-    compact/rewrite, the same ordering rule as Iceberg's
-    rewrite_position_deletes)."""
+    snapshot_compact, and the rewritten rows pass the table's CHECK
+    constraints like every data commit's (_commit_data). Refuses when
+    merge-on-read delete files are pending (a partial rewrite would
+    bump rewritten rows' sequence numbers past the delete files' —
+    apply them first via a full compact/rewrite, the same ordering
+    rule as Iceberg's rewrite_position_deletes)."""
     sid, manifest = _current_manifest(table_dir)
     if manifest.get("delete_files"):
         raise ValueError(
@@ -2097,45 +2058,25 @@ def snapshot_binpack(
             "pass the delete files'): run a full snapshot_compact "
             "first to apply the deletes"
         )
-    from pyspark.sql.types import StructType
-
-    small, big = [], []
+    small, big, small_bytes = [], [], 0
     for e in manifest["files"]:
         size = os.path.getsize(os.path.join(table_dir, e["path"]))
-        (small if size < small_file_bytes else big).append(e)
+        if size < small_file_bytes:
+            small.append(e)
+            small_bytes += size
+        else:
+            big.append(e)
     if len(small) <= 1:
         return sid  # nothing worth rewriting: keep the snapshot as-is
-    schema = StructType.fromJson(json.loads(manifest["schema"]))
-    df_small = spark.read.schema(schema).parquet(
-        *[os.path.join(table_dir, e["path"]) for e in small]
+    schema = T.StructType.fromJson(json.loads(manifest["schema"]))
+    df_small = (
+        spark.read.schema(schema)
+        .parquet(*[os.path.join(table_dir, e["path"]) for e in small])
+        .repartition(
+            max(1, -(-small_bytes // small_file_bytes)),
+            *_spec_exprs(manifest.get("partition_by")).values(),
+        )
     )
-    spec = manifest.get("partition_by")
-    # maintenance INHERITS the table's bloom property (the
-    # snapshot_compact rule) — a caller-supplied list here would bypass
-    # snapshot_write's type validation and could desync the recorded
-    # property from the sidecars actually built
-    bloom_columns = manifest.get("bloom_columns")
-    n_out = max(
-        1,
-        -(
-            -sum(
-                os.path.getsize(os.path.join(table_dir, e["path"]))
-                for e in small
-            )
-            // small_file_bytes
-        ),
-    )
-    if spec:
-        exprs = [
-            F.col(src) if n is None else _bucket_expr(src, n)
-            for _f, src, n in _spec_fields(spec)
-        ]
-        df_small = df_small.repartition(n_out, *exprs)
-    else:
-        df_small = df_small.repartition(n_out)
-    new_files = _write_data_files(df_small, table_dir, spec, bloom_columns)
-    # a rewrite of already-validated rows: constraints carry without
-    # re-validation
-    return _commit_manifest(
-        table_dir, _next_manifest(manifest, "rewrite", big, added=new_files)
-    )
+    # the rewrite inherits the spec and bloom columns and carries the
+    # files already at size untouched
+    return _commit_data(df_small, table_dir, manifest, "rewrite", big)
