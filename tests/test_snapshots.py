@@ -447,36 +447,183 @@ def test_metadata_ops_ignore_unswapped_manifest(spark, tmp_path):
     assert snapshot_read(spark, t).count() == 20
 
 
-def test_concurrent_commit_fails_loudly(spark, tmp_path):
+def test_concurrent_commit_fails_loudly(spark, tmp_path, monkeypatch):
     """Two writers that both read parent N must not silently lose a
     commit: the second manifest create hits the exclusive link and
-    raises, and recovery (confirm no live writer, reclaim orphans)
-    makes the retry succeed against the WINNER's state."""
+    raises. One row per case. The first forges the racing writer's
+    manifest before a plain write; recovery (confirm no live writer,
+    reclaim orphans) then makes the retry succeed against the
+    winner's state. Every other row is an operation that reads the
+    table and then commits, with a racing commit inside it (a hook
+    that fires after its read, before its commit): an append, or for
+    a 3-way merge consuming a staged branch, the branch's publish. The
+    operation must raise, the racer's rows and snapshot survive, and
+    vacuum reclaims exactly the loser's data files."""
     import json as _json
 
+    from yelp_etl_spark.operators import scd
+    from yelp_etl_spark.sources import snapshots as snap
     from yelp_etl_spark.sources.snapshots import (
         ConcurrentCommitError,
+        _load_manifest,
         _manifest_path,
+        _read_pointer,
         remove_orphaned_manifests,
+        snapshot_binpack,
+        snapshot_compact,
+        snapshot_merge,
+        snapshot_merge_3way,
+        snapshot_publish,
+    )
+
+    def rows(*ids):
+        return spark.createDataFrame(
+            [(i, f"v{i}") for i in ids], "id long, v string"
+        )
+
+    flagged = spark.createDataFrame(
+        [(1, "x", True), (50, "y", False)], "id long, v string, __del boolean"
+    )
+    cur = _read_pointer
+
+    def forge(t):
+        # the racer won the create of manifest N+1 but has not swapped
+        # the pointer yet
+        with open(_manifest_path(t, cur(t) + 1), "w") as fh:
+            _json.dump({"forged": True}, fh)
+        return []
+
+    def append(t):
+        snapshot_write(rows(100, 101), t, mode="append")
+        return [100, 101]
+
+    def stage(t):  # a staged branch that appends row 41
+        return snapshot_write(rows(41), t, mode="append", publish=False)
+
+    def publish(t):  # the branch the 3-way merge is consuming
+        snapshot_publish(t, cur(t) + 1)
+        return [41]
+
+    # (case, the hook the race fires in (None: before the operation),
+    # the race (returns the ids it committed), the operation)
+    cases = [
+        ("forged manifest", None, forge,
+         lambda t: snapshot_write(rows(7), t)),
+        ("merge", (scd, "merge_upsert"), append,
+         lambda t: snapshot_merge(spark, rows(1, 50), t, ["id"])),
+        ("merge with deletes", (scd, "merge_upsert"), append,
+         lambda t: snapshot_merge(
+             spark, flagged, t, ["id"], delete_condition=F.col("__del"))),
+        ("compact", (snap, "_spec_exprs"), append,
+         lambda t: snapshot_compact(spark, t)),
+        ("compact cluster_by", (snap, "_scan"), append,
+         lambda t: snapshot_compact(spark, t, cluster_by="id")),
+        ("3-way merge", (snap, "_union_schema"), append,
+         lambda t: snapshot_merge_3way(
+             spark, t, cur(t), cur(t), cur(t), ["id"])),
+        ("3-way merge staged", (snap, "_scan"), publish,
+         lambda t: snapshot_merge_3way(
+             spark, t, cur(t), cur(t), stage(t), ["id"])),
+        ("binpack", (snap, "_spec_exprs"), append,
+         lambda t: snapshot_binpack(spark, t, small_file_bytes=2**30)),
+    ]
+    for case, hook, race, op in cases:
+        t = str(tmp_path / case.replace(" ", "_"))
+        snapshot_write(rows(*range(20)).repartition(2), t)
+        n_snapshots = len(snapshots(t))
+        data_before = set(os.listdir(os.path.join(t, "data")))
+        fired, won = [], []
+        if hook is None:
+            won += race(t)
+        else:
+            owner, attr = hook
+
+            def racing(*a, _real=getattr(owner, attr), _t=t, _race=race,
+                       **kw):
+                out = _real(*a, **kw)
+                if not fired:
+                    fired.append(True)
+                    won.extend(_race(_t))
+                return out
+
+            monkeypatch.setattr(owner, attr, racing)
+        with pytest.raises(ConcurrentCommitError):
+            op(t)
+        assert hook is None or fired, case  # the race ran inside op
+        monkeypatch.undo()
+        # the winner's state reads back: the racer's rows are not lost
+        got = sorted(r.id for r in snapshot_read(spark, t).collect())
+        assert got == [*range(20), *won], case
+        assert len(snapshots(t)) == n_snapshots + bool(fired), case
+        # the loser's failure left no partial manifest behind
+        assert not [
+            f for f in os.listdir(os.path.join(t, "manifests"))
+            if f.endswith(".tmp")
+        ], case
+        # vacuum reclaims exactly the loser's data files
+        racer_files = {
+            os.path.basename(e["path"])
+            for e in _load_manifest(t, cur(t))["files"]
+        } - data_before
+        assert vacuum(t) >= 1, case
+        assert set(os.listdir(os.path.join(t, "data"))) == (
+            data_before | racer_files
+        ), case
+    # crash-orphan recovery path, on the forged row's table: reclaim
+    # manifests above the pointer, then the retry commits
+    t = str(tmp_path / "forged_manifest")
+    assert remove_orphaned_manifests(t) == [2]
+    assert snapshot_write(rows(7), t) == 2
+    assert [r.id for r in snapshot_read(spark, t).collect()] == [7]
+
+
+def test_read_then_commit_parses_one_manifest(spark, tmp_path, monkeypatch):
+    """An operation that reads the table and then commits looks up its
+    parent once: one manifest parse serves both its read and its
+    commit, so the snapshot it reads is the snapshot it commits on (a
+    second lookup could see a commit that landed in between)."""
+    from yelp_etl_spark.sources import snapshots as snap
+    from yelp_etl_spark.sources.snapshots import (
+        _read_pointer,
+        snapshot_binpack,
+        snapshot_compact,
+        snapshot_merge,
+        snapshot_set_constraint,
     )
 
     t = str(tmp_path / "tbl")
-    snapshot_write(spark.range(0, 20), t)
-    # forge the racing writer: its manifest-2 exists (it won the create)
-    with open(_manifest_path(t, 2), "w") as fh:
-        _json.dump({"forged": True}, fh)
-    with pytest.raises(ConcurrentCommitError):
-        snapshot_write(spark.range(0, 5), t)
-    # loser's failure left no partial state: table still reads, no tmp
-    assert snapshot_read(spark, t).count() == 20
-    assert not [
-        f for f in os.listdir(os.path.join(t, "manifests")) if f.endswith(".tmp")
+    snapshot_write(
+        spark.createDataFrame(
+            [(i, f"v{i}") for i in range(10)], "id long, v string"
+        ).repartition(2),
+        t,
+    )
+    upsert = spark.createDataFrame([(1, "u"), (20, "n")], "id long, v string")
+    ops = [
+        ("merge", lambda: snapshot_merge(spark, upsert, t, ["id"])),
+        ("merge with deletes", lambda: snapshot_merge(
+            spark, upsert.withColumn("__del", F.col("id") == 1), t, ["id"],
+            delete_condition=F.col("__del"))),
+        ("compact", lambda: snapshot_compact(spark, t)),
+        ("compact cluster_by",
+         lambda: snapshot_compact(spark, t, cluster_by="id")),
+        ("set_constraint",
+         lambda: snapshot_set_constraint(spark, t, "id_nonneg", "id >= 0")),
+        ("binpack", lambda: snapshot_binpack(spark, t, small_file_bytes=2**30)),
     ]
-    # crash-orphan recovery path: reclaim manifests above the pointer
-    assert remove_orphaned_manifests(t) == [2]
-    assert snapshot_write(spark.range(0, 5), t) == 2
-    assert snapshot_read(spark, t).count() == 5
-    assert vacuum(t) >= 1  # the failed attempt's data files collected
+    real = snap._load_manifest
+    parsed = []
+    monkeypatch.setattr(
+        snap, "_load_manifest",
+        lambda d, sid: parsed.append(sid) or real(d, sid),
+    )
+    for name, op in ops:
+        if name == "binpack":  # needs more than one small file
+            snapshot_write(upsert, t, mode="append")
+        parent = _read_pointer(t)
+        parsed.clear()
+        assert op() == parent + 1, name
+        assert parsed == [parent], name
 
 
 def test_commit_stats_executor_side_matches_driver(spark, tmp_path):
@@ -1990,6 +2137,65 @@ def test_binpack_rewrites_only_small_files(spark, tmp_path):
     assert snapshot_binpack(spark, t, small_file_bytes=20_000) == sid
 
 
+def test_binpack_applies_pending_deletes(spark, tmp_path):
+    """binpack reads its small files through the pending merge-on-read
+    deletes: the rewrite holds only live rows under the new sequence
+    number, and the carried big files keep the delete files that mask
+    them. Deleted keys stay deleted (in a big file and in a small
+    one), and a key re-inserted after its delete survives."""
+    from yelp_etl_spark.sources.snapshots import (
+        _load_manifest,
+        _read_pointer,
+        snapshot_binpack,
+        snapshot_mor_delete,
+    )
+
+    t = str(tmp_path / "tbl")
+    schema = "k long, part string, v string"
+    # one big file per partition (distinct payloads so parquet
+    # compression cannot shrink it under the threshold)
+    snapshot_write(
+        spark.createDataFrame(
+            [(k, "ab"[k % 2], f"{k:064d}") for k in range(20000)], schema
+        ).repartition(1),
+        t,
+        partition_by=["part"],
+    )
+
+    def small(*ks):
+        return spark.createDataFrame(
+            [(k, "ab"[k % 2], "tiny") for k in ks], schema
+        ).repartition(1)
+
+    snapshot_write(small(30_001, 30_002), t, mode="append")
+    snapshot_mor_delete(
+        spark, t, spark.createDataFrame([(4,), (5,), (30_001,)], "k long"),
+        ["k"],
+    )
+    snapshot_write(small(5), t, mode="append")  # re-insert a deleted key
+    for k in (30_003, 30_004, 30_005):
+        snapshot_write(small(k), t, mode="append")
+    before = _load_manifest(t, _read_pointer(t))
+    want = sorted(map(tuple, snapshot_read(spark, t).collect()))
+    big_paths = {
+        e["path"] for e in before["files"]
+        if os.path.getsize(os.path.join(t, e["path"])) >= 20_000
+    }
+    assert len(big_paths) == 2 and before["delete_files"]
+
+    sid = snapshot_binpack(spark, t, small_file_bytes=20_000)
+    after = _load_manifest(t, sid)
+    assert after["operation"] == "rewrite"
+    assert after["delete_files"] == before["delete_files"]
+    assert big_paths <= {e["path"] for e in after["files"]}
+    assert len(after["files"]) < len(before["files"])
+    got = sorted(map(tuple, snapshot_read(spark, t).collect()))
+    assert got == want
+    keys = [r[0] for r in got]
+    assert 4 not in keys and 30_001 not in keys
+    assert [r for r in got if r[0] == 5] == [(5, "b", "tiny")]
+
+
 def test_clone_supports_mor_deletes_on_borrowed_files(spark, tmp_path):
     """Review fix: borrowed file entries keep source sequence numbers
     and the clone's history starts at the source's counter, so a
@@ -2250,7 +2456,8 @@ def test_check_constraints_survive_every_commit_path(spark, tmp_path):
         for p in _TABLE_PROPERTIES:
             old, new = parent.get(p), m.get(p)
             if p not in want:
-                # binpack refuses pending deletes, so it carries none
+                # binpack follows the compact, which reset the
+                # delete list, so it has none to carry
                 assert old or (kind, p) == ("binpack", "delete_files"), (
                     kind, p)
                 assert new == old, (kind, p, old, new)

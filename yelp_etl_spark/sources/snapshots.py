@@ -33,6 +33,10 @@ batch must hold the spec source and bloom columns and pass the CHECK
 constraints; only then are its data files written.
 
 Commit protocol (single-writer; see note below):
+0. An operation looks up its parent snapshot ONCE: the rows it reads
+   (``_scan``) and the commit it makes both use that manifest, so a
+   commit that lands in between fails the operation with
+   ConcurrentCommitError instead of being silently overwritten.
 1. Data files are FULLY written (to a scratch dir, then renamed into
    ``data/`` under fresh unique names) before any manifest references
    them — a crash mid-write leaves only unreferenced files, invisible
@@ -130,6 +134,13 @@ def _load_manifest(table_dir: str, snapshot_id: int) -> dict:
         return json.load(fh)
 
 
+def _parent_manifest(table_dir: str) -> dict | None:
+    """The committed manifest a commit builds on (None: no table yet),
+    parsed once per operation (manifests embed bloom sidecars)."""
+    sid = _read_pointer(table_dir)
+    return None if sid is None else _load_manifest(table_dir, sid)
+
+
 def _current_manifest(table_dir: str) -> tuple[int, dict]:
     """The committed snapshot id and its manifest; FileNotFoundError
     when the table has no committed snapshot."""
@@ -178,13 +189,12 @@ def _next_manifest(
     replaces a property and ``None``/empty drops it. The deliberate
     replacements, by commit kind:
 
-    - replace/rewrite (snapshot_write, compaction, snapshot_merge, the
-      staged snapshot_merge_3way) reset ``delete_files``: they start
-      from a DataFrame that snapshot_read already applied the deletes
-      to (Iceberg's rewrite_position_deletes cleanup). append,
-      overwrite_partitions and binpack keep them, because they carry
-      parent data files that the delete files mask (binpack refuses
-      while any are pending).
+    - replace/rewrite (snapshot_write, compaction, snapshot_merge,
+      snapshot_merge_3way) reset ``delete_files``: they start from a
+      DataFrame that _scan already applied the deletes to (Iceberg's
+      rewrite_position_deletes cleanup). append, overwrite_partitions
+      and binpack keep them, because they carry parent data files that
+      the delete files mask (binpack reads its rewrite through them).
     - every data commit (_commit_data) records the spec and bloom
       columns it resolved: inherited unless passed, ``[]`` drops them
       deliberately. It validates the batch against ``constraints`` and
@@ -389,10 +399,12 @@ def _commit_manifest(
     compare-and-swap: two writers that both read parent N race to
     create manifest N+1, and the loser fails LOUDLY instead of
     silently clobbering the winner's committed file list (lost
-    update). Written to a unique tmp first so a fully-NAMED manifest
-    is always complete, then published with os.link — atomic and
-    EEXCL on POSIX (the object-store analogue is a conditional PUT /
-    If-None-Match; Iceberg delegates the same race to its catalog).
+    update) — read-then-commit operations included, as each reads the
+    parent it commits on (step 0 of the commit protocol). Written to a
+    unique tmp first so a fully-NAMED manifest is always complete,
+    then published with os.link — atomic and EEXCL on POSIX (the
+    object-store analogue is a conditional PUT / If-None-Match;
+    Iceberg delegates the same race to its catalog).
 
     On EEXIST, disambiguate before failing. (a) The pointer already
     reached snapshot_id: another writer COMMITTED first and our parent
@@ -710,11 +722,7 @@ def snapshot_write(
     the rules every data commit shares (_commit_data)."""
     if mode not in ("replace", "append", "rewrite"):
         raise ValueError(f"mode must be replace|append|rewrite, got {mode!r}")
-    parent = _read_pointer(table_dir)
-    # parse the parent manifest once per commit: manifests embed
-    # per-file bloom sidecars, so a double parse is a multi-MB driver
-    # cost on a many-file table
-    pm = _load_manifest(table_dir, parent) if parent is not None else None
+    pm = _parent_manifest(table_dir)
     # an append carries the parent's files; replace/rewrite start empty
     carry = pm["files"] if mode == "append" and pm is not None else None
     return _commit_data(
@@ -920,8 +928,7 @@ def snapshot_set_constraint(
             f"constraint {name!r} already set to "
             f"{constraints[name]!r}: snapshot_drop_constraint first"
         )
-    current = snapshot_read(spark, table_dir)
-    _validate_constraints(current, {name: predicate})
+    _validate_constraints(_scan(spark, table_dir, pm), {name: predicate})
     constraints[name] = predicate
     return _commit_manifest(
         table_dir,
@@ -1018,12 +1025,12 @@ def snapshot_tag(
     Atomic os.replace, so a tag move is all-or-nothing."""
     if not _TAG_RE.match(name):
         raise ValueError(f"tag name {name!r} must match {_TAG_RE.pattern}")
-    sid = snapshot_id if snapshot_id is not None else _read_pointer(table_dir)
+    ptr = _read_pointer(table_dir)
+    sid = snapshot_id if snapshot_id is not None else ptr
     if sid is None:
         raise FileNotFoundError(f"no committed snapshot in {table_dir}")
     if not os.path.exists(_manifest_path(table_dir, sid)):
         raise FileNotFoundError(f"no manifest for snapshot {sid}")
-    ptr = _read_pointer(table_dir)
     if ptr is None or sid > ptr:
         # staged / crash-orphaned manifests are not committed history:
         # a tag on one dangles the moment it is abandoned or swept,
@@ -1235,9 +1242,23 @@ def snapshot_read(
             return lo <= value <= hi
 
         files = [f for f in files if overlaps(f)]
-    from pyspark.sql.types import StructType
+    return _scan(spark, table_dir, manifest, files, schema_manifest["schema"])
 
-    schema = StructType.fromJson(json.loads(schema_manifest["schema"]))
+
+def _scan(
+    spark: SparkSession,
+    table_dir: str,
+    manifest: dict,
+    files: list[dict] | None = None,
+    schema: str | None = None,
+) -> DataFrame:
+    """The rows of ``files`` (default: all of ``manifest``'s) under the
+    Spark JSON ``schema`` (default: the manifest's), merge-on-read
+    deletes applied: the one path from a resolved manifest to a
+    DataFrame, for snapshot_read and every read-then-commit operation."""
+    if files is None:
+        files = manifest["files"]
+    schema = T.StructType.fromJson(json.loads(schema or manifest["schema"]))
     if not files:
         return spark.createDataFrame([], schema)
     dels = manifest.get("delete_files") or []
@@ -1404,29 +1425,23 @@ def vacuum(table_dir: str) -> int:
     Iceberg's remove_orphan_files, which uses an age cutoff for the
     same reason)."""
     mdir = os.path.join(table_dir, "manifests")
-    live = set()
-    for f in _committed_manifest_names(table_dir):
-        m = json.load(open(os.path.join(mdir, f)))
-        live |= {fl["path"] for fl in m["files"]}
-        # merge-on-read delete files are as live as the data files
-        # they mask: collecting one would resurrect deleted rows in
-        # every snapshot that references it
-        live |= {
-            p for d in m.get("delete_files", []) for p in d["paths"]
-        }
-    # a STAGED (write-audit-publish) snapshot above the pointer is not
-    # committed but IS intentional: its files must survive vacuum or
-    # the audit would read a half-deleted snapshot. Crash orphans
-    # (named manifests above the pointer WITHOUT the flag) stay
-    # collectible as before.
+    # one pointer lookup: a manifest committed between two lookups
+    # would count as neither committed nor staged and lose its files
     ptr = _read_pointer(table_dir)
+    live = set()
     for f in _manifest_names(mdir):
-        sid = _manifest_sid(f)
-        if ptr is not None and sid <= ptr:
-            continue
         m = json.load(open(os.path.join(mdir, f)))
-        if m.get("staged"):
+        # committed manifests are live, and so is a STAGED
+        # (write-audit-publish) snapshot above the pointer: not
+        # committed but intentional, its files must survive or the
+        # audit would read a half-deleted snapshot. Crash orphans
+        # (named manifests above the pointer WITHOUT the flag) are
+        # collectible.
+        if (ptr is not None and _manifest_sid(f) <= ptr) or m.get("staged"):
             live |= {fl["path"] for fl in m["files"]}
+            # merge-on-read delete files are as live as the data files
+            # they mask: collecting one would resurrect deleted rows in
+            # every snapshot that references it
             live |= {
                 p for d in m.get("delete_files", []) for p in d["paths"]
             }
@@ -1459,12 +1474,10 @@ def snapshot_overwrite_partitions(
     costs no job. Like an append, the batch may add or omit columns
     but not change a column's type, and it builds the table's bloom
     sidecars and passes its constraints (_commit_data)."""
-    parent = _read_pointer(table_dir)
-    if parent is None:
-        return snapshot_write(
-            df, table_dir, mode="replace", partition_by=partition_by
-        )
-    pm = _load_manifest(table_dir, parent)
+    pm = _parent_manifest(table_dir)
+    if pm is None:
+        return _commit_data(df, table_dir, None, "replace",
+                            partition_by=partition_by)
     fields = [f for f, _, _ in _spec_fields(pm.get("partition_by") or [])]
     if any(
         "partition" not in f or any(c not in f["partition"] for c in fields)
@@ -1588,10 +1601,12 @@ def snapshot_compact(
     file lists; the small files are reclaimed later by
     expire_snapshots + vacuum — compaction never deletes anything
     in-band, which is what makes it safe to run while readers are
-    live. The streaming-sink small-files problem at 100 TB is exactly
-    this maintenance loop (writers.compact_parquet_dir is the
-    bare-parquet form; this is the snapshot-layer form with time
-    travel preserved).
+    live. A commit landing between its read and its commit fails it
+    (ConcurrentCommitError) instead of losing its rows to the rewrite.
+    The streaming-sink small-files
+    problem at 100 TB is exactly this maintenance loop
+    (writers.compact_parquet_dir is the bare-parquet form; this is the
+    snapshot-layer form with time travel preserved).
 
     ``cluster_by=<column>`` additionally SORT-ORDERS the rewrite
     (Iceberg's rewrite with a sort order / binpack→sort strategy):
@@ -1606,7 +1621,7 @@ def snapshot_compact(
         for f in manifest["files"]
     )
     n_out = max(1, -(-total // target_file_bytes))
-    df = snapshot_read(spark, table_dir)
+    df = _scan(spark, table_dir, manifest)
     spec = manifest.get("partition_by")
     if cluster_by is not None:
         if spec:
@@ -1675,22 +1690,20 @@ def snapshot_compact(
         token = F.element_at(
             F.array(*[F.lit(tok[p]) for p in range(n_out)]), bucket + 1
         )
-        clustered = (
+        df = (
             df.withColumn("__cluster_tok", token)
             .repartition(n_out, "__cluster_tok")
             .sortWithinPartitions(cluster_by)
             .drop("__cluster_tok")
         )
-        return snapshot_write(clustered, table_dir, mode="rewrite")
-    # the rewrite inherits the spec (Iceberg compaction rewrites WITHIN
-    # the spec): repartition on the spec fields so each output task
-    # holds whole partitions — the fanout write then emits ~one file
-    # per (task, partition) instead of files-per-partition × tasks
-    return snapshot_write(
-        df.repartition(n_out, *_spec_exprs(spec).values()),
-        table_dir,
-        mode="rewrite",
-    )
+    else:
+        # the rewrite inherits the spec (Iceberg compaction rewrites
+        # WITHIN the spec): repartition on the spec fields so each
+        # output task holds whole partitions — the fanout write then
+        # emits ~one file per (task, partition) instead of
+        # files-per-partition × tasks
+        df = df.repartition(n_out, *_spec_exprs(spec).values())
+    return _commit_data(df, table_dir, manifest, "rewrite")
 
 
 def snapshot_merge(
@@ -1718,38 +1731,33 @@ def snapshot_merge(
     single keyed shuffle family, broadcastable when the delta is
     small.
 
-    Merge, compaction, and rollback all PRESERVE the parent snapshot's
-    partition spec — a maintenance or merge commit must never silently
-    turn a partitioned table into an unpartitioned one (that would
-    make the next dynamic overwrite refuse and every partition-pruned
-    read degrade to a full listing)."""
+    The merge keeps the table's spec and bloom columns (_commit_data)
+    and reads the target from the snapshot it commits on, so a writer
+    that commits in between fails it with ConcurrentCommitError instead
+    of having its rows silently dropped by the replace."""
     from yelp_etl_spark.operators.scd import merge_upsert
 
-    parent = _read_pointer(table_dir)
+    pm = _parent_manifest(table_dir)
+    target = None if pm is None else _scan(spark, table_dir, pm)
     if delete_condition is None:
-        if parent is None:
-            return snapshot_write(source, table_dir, mode="replace")
-        target = snapshot_read(spark, table_dir)
-        return snapshot_write(
-            merge_upsert(target, source, keys), table_dir, mode="replace"
-        )
-    deletes = source.filter(delete_condition).select(*keys)
-    upserts = source.filter(
-        ~F.coalesce(delete_condition, F.lit(False))
-    )
-    if parent is None:
-        # no target schema to project onto yet: strip engine-internal
-        # dunder columns (the CDC op-flag convention) so a bootstrap
-        # merge does not bake the flag into the table schema forever
-        merged = upserts.drop(
-            *[c for c in upserts.columns if c.startswith("__")]
+        merged = (
+            source if target is None else merge_upsert(target, source, keys)
         )
     else:
-        target = snapshot_read(spark, table_dir)
-        merged = merge_upsert(
-            target, upserts.select(*target.columns), keys
-        ).join(deletes, keys, "left_anti")
-    return snapshot_write(merged, table_dir, mode="replace")
+        deletes = source.filter(delete_condition).select(*keys)
+        upserts = source.filter(~F.coalesce(delete_condition, F.lit(False)))
+        if target is None:
+            # no target schema to project onto yet: strip engine-internal
+            # dunder columns (the CDC op-flag convention) so a bootstrap
+            # merge does not bake the flag into the table schema forever
+            merged = upserts.drop(
+                *[c for c in upserts.columns if c.startswith("__")]
+            )
+        else:
+            merged = merge_upsert(
+                target, upserts.select(*target.columns), keys
+            ).join(deletes, keys, "left_anti")
+    return _commit_data(merged, table_dir, pm, "replace")
 
 
 def snapshot_mor_delete(
@@ -1886,6 +1894,7 @@ def snapshot_merge_3way(
     (the snapshot_merge rule)."""
     if on_conflict not in ("theirs", "ours", "fail"):
         raise ValueError(f"on_conflict must be theirs|ours|fail: {on_conflict}")
+    pm = _parent_manifest(table_dir)  # the commit protocol's step 0
     base = snapshot_read(spark, table_dir, base_id)
     ours = snapshot_read(spark, table_dir, ours_id)
     theirs = snapshot_read(spark, table_dir, theirs_id)
@@ -1951,13 +1960,13 @@ def snapshot_merge_3way(
         .select(*cols)
     )
     if not _load_manifest(table_dir, theirs_id).get("staged"):
-        return snapshot_write(merged, table_dir, mode="replace")
+        return _commit_data(merged, table_dir, pm, "replace")
     # staged branch: atomic consume (see docstring) — merged data
     # files first, then os.replace the staged branch manifest with a
     # STAGED merge manifest reusing its id, then the publish tail.
     # Never abandon-then-commit: a crash between those two steps would
     # leave BOTH the branch and the merge as unreferenced orphans.
-    parent = _read_pointer(table_dir)
+    parent = (pm or {}).get("snapshot_id")
     if theirs_id != (parent or 0) + 1:
         # a stage holds parent+1 exclusively (snapshot_write refuses
         # concurrent commits while it exists), so anything else means
@@ -1968,13 +1977,7 @@ def snapshot_merge_3way(
             f"staged branch {theirs_id} does not sit directly above "
             f"the pointer ({parent}): refusing in-place consume"
         )
-    return _commit_data(
-        merged,
-        table_dir,
-        _load_manifest(table_dir, parent) if parent is not None else None,
-        "replace",
-        replace_staged=True,
-    )
+    return _commit_data(merged, table_dir, pm, "replace", replace_staged=True)
 
 
 def snapshot_clone(src_dir: str, dst_dir: str) -> int:
@@ -2045,19 +2048,12 @@ def snapshot_binpack(
     Commits one atomic 'rewrite' snapshot (content identical by
     construction); parent spec and bloom sidecars carry over like
     snapshot_compact, and the rewritten rows pass the table's CHECK
-    constraints like every data commit's (_commit_data). Refuses when
-    merge-on-read delete files are pending (a partial rewrite would
-    bump rewritten rows' sequence numbers past the delete files' —
-    apply them first via a full compact/rewrite, the same ordering
-    rule as Iceberg's rewrite_position_deletes)."""
+    constraints like every data commit's (_commit_data). The small
+    files are read through the pending merge-on-read deletes (_scan)
+    of the manifest the rewrite commits on: the rewrite holds only live
+    rows under the new sequence number, and the carried files keep
+    theirs and the delete files that mask them."""
     sid, manifest = _current_manifest(table_dir)
-    if manifest.get("delete_files"):
-        raise ValueError(
-            "snapshot_binpack with pending merge-on-read delete files "
-            "would un-mask rewritten rows (their new sequence numbers "
-            "pass the delete files'): run a full snapshot_compact "
-            "first to apply the deletes"
-        )
     small, big, small_bytes = [], [], 0
     for e in manifest["files"]:
         size = os.path.getsize(os.path.join(table_dir, e["path"]))
@@ -2068,14 +2064,9 @@ def snapshot_binpack(
             big.append(e)
     if len(small) <= 1:
         return sid  # nothing worth rewriting: keep the snapshot as-is
-    schema = T.StructType.fromJson(json.loads(manifest["schema"]))
-    df_small = (
-        spark.read.schema(schema)
-        .parquet(*[os.path.join(table_dir, e["path"]) for e in small])
-        .repartition(
-            max(1, -(-small_bytes // small_file_bytes)),
-            *_spec_exprs(manifest.get("partition_by")).values(),
-        )
+    df_small = _scan(spark, table_dir, manifest, small).repartition(
+        max(1, -(-small_bytes // small_file_bytes)),
+        *_spec_exprs(manifest.get("partition_by")).values(),
     )
     # the rewrite inherits the spec and bloom columns and carries the
     # files already at size untouched
