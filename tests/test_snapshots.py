@@ -504,8 +504,9 @@ def test_concurrent_commit_fails_loudly(spark, tmp_path, monkeypatch):
         snapshot_publish(t, cur(t) + 1)
         return [41]
 
-    # (case, the hook the race fires in (None: before the operation),
-    # the race (returns the ids it committed), the operation)
+    # (case, the hook the race fires in (None: before the operation;
+    # an optional third item is the number of calls to let pass
+    # first), the race (returns the ids it committed), the operation)
     cases = [
         ("forged manifest", None, forge,
          lambda t: snapshot_write(rows(7), t)),
@@ -524,6 +525,12 @@ def test_concurrent_commit_fails_loudly(spark, tmp_path, monkeypatch):
         ("3-way merge staged", (snap, "_scan"), publish,
          lambda t: snapshot_merge_3way(
              spark, t, cur(t), cur(t), stage(t), ["id"])),
+        # the branch is published while the consume writes its data
+        # files (the staging write is the hook's first call)
+        ("3-way merge staged, published mid-write",
+         (snap, "_write_data_files", 1), publish,
+         lambda t: snapshot_merge_3way(
+             spark, t, cur(t), cur(t), stage(t), ["id"])),
         ("binpack", (snap, "_spec_exprs"), append,
          lambda t: snapshot_binpack(spark, t, small_file_bytes=2**30)),
     ]
@@ -536,12 +543,14 @@ def test_concurrent_commit_fails_loudly(spark, tmp_path, monkeypatch):
         if hook is None:
             won += race(t)
         else:
-            owner, attr = hook
+            owner, attr, *skip = hook
+            calls = []
 
             def racing(*a, _real=getattr(owner, attr), _t=t, _race=race,
-                       **kw):
+                       _calls=calls, _skip=sum(skip), **kw):
                 out = _real(*a, **kw)
-                if not fired:
+                _calls.append(True)
+                if not fired and len(_calls) > _skip:
                     fired.append(True)
                     won.extend(_race(_t))
                 return out
@@ -555,6 +564,11 @@ def test_concurrent_commit_fails_loudly(spark, tmp_path, monkeypatch):
         got = sorted(r.id for r in snapshot_read(spark, t).collect())
         assert got == [*range(20), *won], case
         assert len(snapshots(t)) == n_snapshots + bool(fired), case
+        # the racer's commit is current and unchanged: for the staged
+        # consume, the published branch was not rewritten in place
+        assert _load_manifest(t, cur(t))["operation"] == (
+            "append" if fired else "replace"
+        ), case
         # the loser's failure left no partial manifest behind
         assert not [
             f for f in os.listdir(os.path.join(t, "manifests"))
@@ -1188,6 +1202,74 @@ def test_partition_filter_renders_values_like_the_writer(spark, tmp_path):
     snapshot_write(df, t2, mode="replace", partition_by=["score"])
     got2 = snapshot_read(spark, t2, partition_filter={"score": 5.0})
     assert sorted(r.id for r in got2.collect()) == [1, 2]
+
+
+def test_partition_filter_prunes_every_field_type(spark, tmp_path, spark_jobs):
+    """Filter values map to partition values through the writer's own
+    spec expressions. For identity fields of type boolean, double, date
+    and timestamp, and for a bucket field, a filter on a value or on
+    NULL lists fewer files than the table and returns the rows of the
+    matching row filter: exactly those for an identity field, and all
+    of them among the rest of their bucket for a bucket field. A read
+    filtering on an identity and a bucket field submits one Spark job
+    while its DataFrame is built."""
+    import datetime as dt
+
+    from yelp_etl_spark.sources.snapshots import _load_manifest
+
+    d1, d2 = dt.date(2024, 1, 1), dt.date(2024, 2, 29)
+    ts1 = dt.datetime(2024, 1, 1, 12, 30, 15, 250000)
+    ts2 = dt.datetime(2024, 3, 1)
+    typed = spark.createDataFrame(
+        [
+            (1, True, 5.0, d1, ts1),
+            (2, False, 5.0, d2, ts2),
+            (3, True, 7.5, d1, ts2),
+            (4, None, None, None, None),
+            (5, False, 1e20, d2, ts1),
+        ],
+        "id long, flag boolean, score double, day date, ts timestamp",
+    )
+    bucketed = spark.createDataFrame(
+        [(i, "AB"[i % 2] if i % 7 else None) for i in range(40)]
+        + [(None, "A")],
+        "id long, g string",
+    )
+    tables = [
+        (typed, ["flag", "score", "day", "ts"], {
+            "flag": [True, False, None],
+            "score": [5.0, 1e20, None],
+            "day": [d1, d2, None],
+            "ts": [ts1, ts2, None],
+        }),
+        (bucketed, ["g", "bucket(4, id)"], {
+            "g": ["A", None], "id": [5, None],
+        }),
+    ]
+
+    def key(r):
+        return repr(tuple(r))
+
+    for i, (df, spec, probes) in enumerate(tables):
+        t = str(tmp_path / f"tbl{i}")
+        sid = snapshot_write(df.repartition(2), t, partition_by=spec)
+        n_files = len(_load_manifest(t, sid)["files"])
+        for col, values in probes.items():
+            for v in values:
+                got = snapshot_read(spark, t, partition_filter={col: v})
+                cond = F.col(col).isNull() if v is None else F.col(col) == v
+                if col not in spec:  # a bucket holds other values too
+                    got = got.filter(cond)
+                assert sorted(got.collect(), key=key) == sorted(
+                    df.filter(cond).collect(), key=key
+                ), (col, v)
+                assert len(got.inputFiles()) < n_files, (col, v)
+    got, n_jobs = spark_jobs(
+        lambda: snapshot_read(spark, t, partition_filter={"g": "A", "id": 5})
+    )
+    assert n_jobs == 1
+    cond = (F.col("g") == "A") & (F.col("id") == 5)
+    assert got.filter(cond).collect() == bucketed.filter(cond).collect()
 
 
 def test_empty_string_partition_value_refused(spark, tmp_path):

@@ -646,13 +646,14 @@ def bigram_nll(
     micro-nats (classify.py's convention), so per-document sums are
     exact BIGINT under any partitioning; the final average is one
     exact division. Plan: per-doc `lead` window for bigrams (one doc-
-    keyed shuffle), three vocab-scale model tables reduced from the
-    pair table and joined back (AQE broadcasts when small), one
-    per-doc aggregate. Never all-pairs.
+    keyed shuffle), one pre-aggregation to per-(doc, a, b) counts that
+    feeds both the model tables and the score join, three vocab-scale
+    model tables reduced from the pair table and joined back (AQE
+    broadcasts when small), one per-doc aggregate. Never all-pairs.
     """
-    # ONE token-scale aggregate to per-(doc, a, b) counts: the
-    # zero-exchange bigram subtree is evaluated exactly once (its
-    # exchange is the reuse point for every consumer below), and the
+    # ONE token-scale aggregate to per-(doc, a, b) counts: the bigram
+    # subtree is evaluated once; its doc-keyed exchange is the reuse
+    # point for every consumer below, and the
     # model join + per-doc score run over the smaller distinct-triple
     # table — sum(nab · nll_q) is exact integer algebra, identical to
     # summing the per-row nll_q it replaces (nll_q depends only on

@@ -2072,10 +2072,9 @@ def q_kneser_ney_bigram_nll(spark: SparkSession, sf_dir: str) -> DataFrame:
     from yelp_etl_spark.functions.text import adjacent_bigrams
 
     docs = _t(spark, sf_dir, "documents")
-    # ONE token-scale aggregate to per-(doc, a, b) counts — the
-    # zero-exchange bigram subtree is evaluated exactly once (this
-    # exchange is the reuse point for the model AND score consumers),
-    # and the score join runs over distinct triples, not every bigram
+    # ONE token-scale aggregate to per-(doc, a, b) counts — the bigram
+    # subtree is evaluated once; its doc-keyed exchange is the reuse
+    # point for the model AND score consumers, and the score join runs over distinct triples, not every bigram
     # occurrence. sum(nab · nll_q) is exact integer algebra identical
     # to the per-occurrence sum (nll_q depends only on (a, b)).
     grouped = adjacent_bigrams(docs, "doc_id", "text").groupBy(

@@ -8,7 +8,7 @@ Iceberg runtime; this is the same guarantee surface, minimally).
 Layout:
 
     table_dir/
-      data/<uuid>-partNNNNN.parquet     immutable data files
+      data/<prefix>-NNNNN.parquet       immutable data files
       manifests/manifest-0000000001.json  one per snapshot
       _current                          pointer file (atomic os.replace)
 
@@ -358,7 +358,8 @@ class ConcurrentCommitError(RuntimeError):
     update this error prevents) or a previous writer crashed between
     its manifest write and pointer swap. Run
     ``remove_orphaned_manifests`` after confirming no writer is live,
-    then retry."""
+    then retry. A 3-way merge consuming a staged branch also raises it
+    when the branch is published or abandoned during the merge."""
 
 
 def remove_orphaned_manifests(table_dir: str) -> list[int]:
@@ -601,90 +602,66 @@ def _write_data_files(
 ) -> list[dict]:
     """Step 1 of every commit: fully write ``df``'s data files (scratch
     write, rename under fresh unique names) and return their manifest
-    entries (path + footer stats + identity-partition tuple). No
-    manifest references them yet, so a crash here leaves only
-    unreferenced files, invisible to every reader and reclaimed by
-    vacuum."""
+    entries (path + footer stats + partition tuple, the tuple only
+    under a spec with fields). No manifest references them yet, so a
+    crash here leaves only unreferenced files, invisible to every
+    reader and reclaimed by vacuum. A table without a spec is a spec
+    with no fields: the same scratch write, with nothing to partition
+    by."""
     os.makedirs(os.path.join(table_dir, "data"), exist_ok=True)
     os.makedirs(os.path.join(table_dir, "manifests"), exist_ok=True)
     scratch = os.path.join(table_dir, f".commit-{uuid.uuid4().hex}")
     prefix = uuid.uuid4().hex[:12]
-    renamed = []  # (manifest-relative path, absolute path)
-    partitions: list[dict | None] = []
-    if partition_by:
-        fields = _spec_fields(partition_by)
-        # Empty-string identity partition values are refused at commit
-        # time: Spark's Hive-style scratch layout writes '' and NULL to
-        # the SAME __HIVE_DEFAULT_PARTITION__ directory, so the two
-        # would collapse into one manifest tuple — and a later dynamic
-        # overwrite of the '' partition would silently delete the NULL
-        # partition's rows (and partition_filter='' would under-read).
-        # One narrow pruned-column scan per commit, string identity
-        # sources only.
-        from pyspark.sql.types import StringType as _StrT
-
-        str_srcs = [
-            src
-            for _f, src, n in fields
-            if n is None
-            and src in df.columns
-            and isinstance(df.schema[src].dataType, _StrT)
-        ]
-        if str_srcs:
-            probe = df.select(
-                *[
-                    F.max(F.when(F.col(c) == "", F.lit(1))).alias(c)
-                    for c in str_srcs
-                ]
-            ).collect()[0]
-            offenders = [c for c in str_srcs if probe[c] is not None]
-            if offenders:
-                raise ValueError(
-                    f"empty-string value(s) in identity partition "
-                    f"column(s) {offenders}: the Hive scratch layout "
-                    "cannot distinguish '' from NULL "
-                    f"({_HIVE_NULL_DIR}) — map empty strings to NULL "
-                    "or a sentinel before partitioning on them"
-                )
-        out = df
-        for field, expr in _spec_exprs(partition_by).items():
-            out = out.withColumn(f"__p_{field}", expr)
-        out.write.partitionBy(*[f"__p_{f}" for f, _, _ in fields]).parquet(
-            scratch
-        )
-        field_names = [f for f, _, _ in fields]
-        i = 0
-        for root, _dirs, fnames in sorted(os.walk(scratch)):
-            for f in sorted(fnames):
-                if not f.endswith(".parquet"):
-                    continue
-                dst_name = f"{prefix}-{i:05d}.parquet"
-                i += 1
-                dst = os.path.join(table_dir, "data", dst_name)
-                os.rename(os.path.join(root, f), dst)
-                renamed.append((os.path.join("data", dst_name), dst))
-                partitions.append(
-                    _parse_partition_dirs(
-                        os.path.relpath(root, scratch), field_names
-                    )
-                )
-    else:
-        df.write.parquet(scratch)
-        for f in sorted(os.listdir(scratch)):
+    spec = _spec_fields(partition_by or [])
+    fields = [f for f, _, _ in spec]
+    # Empty-string identity partition values are refused at commit
+    # time: Spark's Hive-style scratch layout writes '' and NULL to the
+    # SAME __HIVE_DEFAULT_PARTITION__ directory, so the two would
+    # collapse into one manifest tuple — and a later dynamic overwrite
+    # of the '' partition would silently delete the NULL partition's
+    # rows (and partition_filter='' would under-read). One narrow
+    # pruned-column scan per commit, string identity sources only.
+    str_srcs = [
+        src
+        for _f, src, n in spec
+        if n is None
+        and src in df.columns
+        and isinstance(df.schema[src].dataType, T.StringType)
+    ]
+    if str_srcs:
+        probe = df.select(
+            *[F.max(F.when(F.col(c) == "", F.lit(1))).alias(c) for c in str_srcs]
+        ).collect()[0]
+        offenders = [c for c in str_srcs if probe[c] is not None]
+        if offenders:
+            raise ValueError(
+                f"empty-string value(s) in identity partition "
+                f"column(s) {offenders}: the Hive scratch layout "
+                "cannot distinguish '' from NULL "
+                f"({_HIVE_NULL_DIR}) — map empty strings to NULL "
+                "or a sentinel before partitioning on them"
+            )
+    out = df
+    for field, expr in _spec_exprs(partition_by).items():
+        out = out.withColumn(f"__p_{field}", expr)
+    out.write.partitionBy(*[f"__p_{f}" for f in fields]).parquet(scratch)
+    renamed = []  # (manifest-relative path, absolute path, partition)
+    for root, _dirs, fnames in sorted(os.walk(scratch)):
+        for f in sorted(fnames):
             if not f.endswith(".parquet"):
                 continue
-            dst_name = f"{prefix}-{f.split('-')[1]}.parquet"
+            dst_name = f"{prefix}-{len(renamed):05d}.parquet"
             dst = os.path.join(table_dir, "data", dst_name)
-            os.rename(os.path.join(scratch, f), dst)
-            renamed.append((os.path.join("data", dst_name), dst))
-            partitions.append(None)
+            os.rename(os.path.join(root, f), dst)
+            part = _parse_partition_dirs(os.path.relpath(root, scratch), fields)
+            renamed.append((os.path.join("data", dst_name), dst, part))
     shutil.rmtree(scratch)
     stats = _gather_file_stats(
-        df.sparkSession, [a for _, a in renamed], bloom_columns
+        df.sparkSession, [a for _, a, _ in renamed], bloom_columns
     )
     return [
-        {"path": rel, **st, **({"partition": p} if p is not None else {})}
-        for (rel, _), st, p in zip(renamed, stats, partitions)
+        {"path": rel, **st, **({"partition": p} if fields else {})}
+        for (rel, _, p), st in zip(renamed, stats)
     ]
 
 
@@ -858,6 +835,21 @@ def _commit_data(
         **({} if carries else {"delete_files": None}),
     )
     if replace_staged:
+        # the branch may have been published (or abandoned) while the
+        # data files were written: replacing its manifest then would
+        # rewrite committed history in place. The new data files stay
+        # unreferenced for vacuum.
+        sid = manifest["snapshot_id"]
+        try:
+            staged = _load_manifest(table_dir, sid).get("staged")
+        except FileNotFoundError:
+            staged = False
+        if _read_pointer(table_dir) != pm.get("snapshot_id") or not staged:
+            raise ConcurrentCommitError(
+                f"staged branch {sid} in {table_dir!r} was published or "
+                "abandoned while the merge wrote its data files: the "
+                "merge did not commit"
+            )
         _replace_manifest(table_dir, manifest)
         return snapshot_publish(table_dir, manifest["snapshot_id"])
     return _commit_manifest(table_dir, manifest, swap_pointer=publish)
@@ -1098,13 +1090,17 @@ def snapshot_read(
     semantics (skipping alone keeps whole files that merely overlap).
 
     ``partition_filter={col: value, ...}`` keeps only files whose
-    manifest-recorded identity-partition tuple matches every given
-    value (stringified; None matches the NULL partition). Exact
-    pruning — a partitioned file holds exactly one tuple — so unlike
-    min/max skipping it needs no residual row filter on the partition
-    columns. Files without recorded partition info (committed before
-    the spec, or under a different spec) are conservatively KEPT;
-    combine with a row-level .filter() when the table mixes specs.
+    manifest-recorded partition tuple matches every given value. The
+    values are evaluated by the writer's own ``_spec_exprs`` (an
+    identity field takes the value, a ``bucket(N, col)`` field its
+    bucket; None matches the NULL partition), so reader and writer
+    cannot disagree on a partition value. Exact pruning on identity
+    fields — a partitioned file holds exactly one tuple — so unlike
+    min/max skipping it needs no residual row filter on those columns;
+    a bucket field keeps the value's whole bucket. Files without
+    recorded partition info (committed before the spec, or under a
+    different spec) are conservatively KEPT; combine with a row-level
+    .filter() when the table mixes specs.
 
     ``point_filter={col: value, ...}`` applies Bloom-sidecar file
     skipping (for tables written with ``bloom_columns``): files whose
@@ -1161,58 +1157,35 @@ def snapshot_read(
         files = [f for f in files if _bloom_keeps(f)]
     if partition_filter:
         # Hidden partitioning: filters name SOURCE columns and raw
-        # values; the spec maps each to its manifest field(s) — an
-        # identity field matches the value rendered by SPARK'S OWN
-        # string cast under the column's declared type (the manifest
-        # tuples come from Spark's partition-directory names, which
-        # use Spark's rendering: 'true'/'false' for booleans, '5.0'
-        # for doubles — Python str() would render 'True'/'5' and
-        # silently prune every file), a bucket(N, col) field matches
-        # the COMPUTED bucket of the value (same Spark hash the writer
-        # used). Both are one 1-row local expression per filter
-        # column, so reader and writer can never drift.
-        from pyspark.sql.types import StructType as _St
-
-        spec = _spec_fields(manifest.get("partition_by") or [])
-        schema_fields = {
-            f.name: f
-            for f in _St.fromJson(json.loads(manifest["schema"])).fields
-        }
-
-        def _spark_render(col: str, value) -> str:
-            fld = schema_fields.get(col)
-            if fld is None:
-                return str(value)
-            probe = spark.createDataFrame([(value,)], _St([fld]))
-            return probe.select(
-                F.col(col).cast("string").alias("s")
-            ).collect()[0]["s"]
-
+        # values. The writer's own _spec_exprs map them to partition
+        # values, over a one-row frame typed by the manifest schema,
+        # and the cast to string is the rendering the scratch write's
+        # directory names recorded ('true', '5.0'; NULL stays NULL).
+        # A filtered column that is no source of the spec maps through
+        # an identity entry, which matches files written under an
+        # older spec. A column the schema lacks is in no file's tuple
+        # (every tuple's sources are schema columns), so it prunes
+        # nothing. One Spark job for the whole filter.
+        schema = T.StructType.fromJson(json.loads(manifest["schema"]))
+        filt = {c: v for c, v in partition_filter.items() if c in schema.names}
+        spec = manifest.get("partition_by") or []
+        srcs = [src for _f, src, _n in _spec_fields(spec)]
+        entries = [e for e, src in zip(spec, srcs) if src in filt]
+        entries += [c for c in filt if c not in srcs]
         wanted: dict[str, str | None] = {}
-        for src, value in partition_filter.items():
-            for field, col, n in spec:
-                if col != src:
-                    continue
-                if n is None:
-                    wanted[field] = (
-                        None if value is None else _spark_render(col, value)
-                    )
-                elif value is None:
-                    wanted[field] = None
-                else:
-                    probe = spark.createDataFrame(
-                        [(value,)], _St([schema_fields[col]])
-                    )
-                    bucket = probe.select(
-                        _bucket_expr(col, n).alias("b")
-                    ).collect()[0]["b"]
-                    wanted[field] = str(bucket)
-            if not any(col == src for _, col, _n in spec):
-                # not a partition source under this spec: identity
-                # fallback for tables written before spec strings
-                wanted[src] = (
-                    None if value is None else _spark_render(src, value)
-                )
+        if filt:
+            row = spark.createDataFrame(
+                [tuple(filt.values())],
+                T.StructType(
+                    [T.StructField(c, schema[c].dataType) for c in filt]
+                ),
+            )
+            wanted = row.select(
+                *[
+                    e.cast("string").alias(field)
+                    for field, e in _spec_exprs(entries).items()
+                ]
+            ).collect()[0].asDict()
 
         def tuple_matches(f: dict) -> bool:
             part = f.get("partition")

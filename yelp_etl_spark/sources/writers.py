@@ -65,7 +65,9 @@ def write_table(df: DataFrame, target: str, spec: WriteSpec | None = None) -> No
         # Native manifest-snapshot table (sources/snapshots.py): atomic
         # replace/append with time travel — the in-sandbox stand-in for
         # the Iceberg branch below, same createOrReplace guarantee.
-        # Fail loudly on spec fields this layer doesn't implement yet
+        # The snapshot layer has its own identity and bucket(N, col)
+        # specs (snapshot_write(partition_by=...)), but WriteSpec's
+        # layout fields are not translated into them here: fail loudly
         # rather than silently writing a different layout than asked.
         from yelp_etl_spark.sources.snapshots import snapshot_write
 
