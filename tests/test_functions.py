@@ -114,6 +114,25 @@ def test_minhash_deterministic_across_partitioning(spark):
     assert a == b
 
 
+def test_minhash_candidate_pairs_pins_no_cache(spark, spark_jobs):
+    """The banded signatures both join sides scan are neither persisted
+    nor checkpointed: building the pairs runs no job, running them
+    computes the signatures once (the second side reuses the first
+    side's exchanges), and afterwards no cached plan of theirs is left
+    in the session (a persist buried in the returned plan could never
+    be unpersisted)."""
+    df = spark.createDataFrame(
+        [(i, f"doc {i} shared prefix words here plus suffix {i % 3}") for i in range(12)],
+        "doc_id long, text string",
+    )
+    pairs, n_jobs = spark_jobs(lambda: D.minhash_candidate_pairs(df, 3, 32, 8))
+    assert n_jobs == 0
+    assert pairs.collect()
+    qe = pairs._jdf.queryExecution()
+    assert "ReusedExchange" in qe.executedPlan().toString()
+    assert "InMemoryRelation" not in qe.withCachedData().toString()
+
+
 def test_simhash_near_duplicates_close(spark):
     base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     near = base + " lambda"

@@ -703,6 +703,94 @@ def test_snapshot_merge_delete_branch(spark, tmp_path):
     assert snapshot_read(spark, t, snapshot_id=s1).count() == 4
 
 
+def test_merge_null_key_replay_and_delete(spark, tmp_path):
+    """Merge keys match null-safely: replaying a batch whose key has a
+    NULL part leaves one row for it (the streaming sink's exactly-once
+    claim rests on replays being idempotent), and a NULL-keyed delete
+    removes its row."""
+    from yelp_etl_spark.sources.snapshots import snapshot_merge
+
+    t = str(tmp_path / "tbl")
+    schema = "id long, seg string, v double"
+    snapshot_write(
+        spark.createDataFrame([(1, "a", 1.0), (2, None, 2.0)], schema), t
+    )
+    batch = spark.createDataFrame([(2, None, 20.0)], schema)
+    for _ in range(2):
+        snapshot_merge(spark, batch, t, ["id", "seg"])
+    assert sorted(map(tuple, snapshot_read(spark, t).collect())) == [
+        (1, "a", 1.0), (2, None, 20.0)
+    ]
+    delete = spark.createDataFrame(
+        [(2, None, None, True)], f"{schema}, __del boolean"
+    )
+    snapshot_merge(
+        spark, delete, t, ["id", "seg"], delete_condition=F.col("__del")
+    )
+    assert [tuple(r) for r in snapshot_read(spark, t).collect()] == [
+        (1, "a", 1.0)
+    ]
+
+
+def test_merge_rewrites_only_touched_buckets(spark, tmp_path, spark_jobs):
+    """Copy-on-write MERGE scoped by the spec: on a ``bucket(4, id)``
+    table merged on ``id``, a batch whose keys fall in one bucket reads
+    and rewrites only that bucket's files, and carries the others (same
+    path and seq) into an 'overwrite' commit. Choosing the files is one
+    distinct query over the batch (two jobs: its shuffle stage and its
+    collect); when the spec's source is no key it runs no job, and
+    every file is chosen."""
+    from yelp_etl_spark.sources.snapshots import (
+        _current_manifest,
+        _merge_scope,
+        snapshot_merge,
+    )
+
+    t = str(tmp_path / "tbl")
+    snapshot_write(
+        spark.range(40).withColumn("v", F.lit("old")).repartition(2), t,
+        partition_by=["bucket(4, id)"],
+    )
+    before = _current_manifest(t)[1]
+
+    def bucket(e):
+        return e["partition"]["id_bucket4"]
+
+    b = bucket(before["files"][0])
+    in_bucket = [e for e in before["files"] if bucket(e) == b]
+    ids = sorted(
+        r.id
+        for r in spark.read.parquet(
+            *[os.path.join(t, e["path"]) for e in in_bucket]
+        ).collect()
+    )
+    batch = spark.createDataFrame(
+        [(i, "new") for i in ids[:2]], "id long, v string"
+    )
+    (chosen, rest), n_jobs = spark_jobs(
+        lambda: _merge_scope(batch, before, ["id"])
+    )
+    assert (chosen, n_jobs) == (in_bucket, 2)
+    assert rest and all(bucket(e) != b for e in rest)
+    (chosen, rest), n_jobs = spark_jobs(
+        lambda: _merge_scope(batch, before, ["v"])
+    )
+    assert (chosen, rest, n_jobs) == (before["files"], [], 0)
+
+    snapshot_merge(spark, batch, t, ["id"])
+    after = _current_manifest(t)[1]
+    assert after["operation"] == "overwrite"
+
+    def others(m):
+        return [(e["path"], e["seq"]) for e in m["files"] if bucket(e) != b]
+
+    assert others(after) == others(before)
+    written = [e for e in after["files"] if e["seq"] == after["snapshot_id"]]
+    assert written and all(bucket(e) == b for e in written)
+    got = {r.id: r.v for r in snapshot_read(spark, t).collect()}
+    assert got == {i: "new" if i in ids[:2] else "old" for i in range(40)}
+
+
 def test_snapshot_compact_rewrites_without_content_change(spark, tmp_path):
     """rewrite_data_files semantics: compaction shrinks the file count
     in a NEW snapshot labeled 'rewrite', content is bit-identical, the

@@ -183,55 +183,69 @@ def test_foreach_batch_upsert_converges(spark, events_dir, tmp_path):
     assert got == want
 
 
-def test_foreach_batch_upsert_partition_scoped(spark, tmp_path):
-    """With partition_columns, a micro-batch touching one partition must
-    leave every other partition's files byte-identical (never read,
-    listed, or rewritten) while merging correctly into the touched one."""
-    import hashlib
-    import os
+_SEG_SCHEMA = "user_id long, seg string, total double"
 
-    from pyspark.sql import functions as F
 
+def _stream_into_snapshot_table(spark, tmp_path, seed, batch, keys):
+    """Seed a snapshot table partitioned by ``seg``, stream ``batch``
+    into it as one micro-batch and return the manifests before and
+    after, and the table's rows."""
+    from yelp_etl_spark.sources.snapshots import (
+        _current_manifest,
+        snapshot_read,
+        snapshot_write,
+    )
     from yelp_etl_spark.streaming.windows import foreach_batch_upsert
 
-    def _snap(target, part):
-        d = os.path.join(target, part)
-        return {
-            f: hashlib.md5(open(os.path.join(d, f), "rb").read()).hexdigest()
-            for f in sorted(os.listdir(d))
-            if not f.startswith(("_", "."))
-        }
-
     target = str(tmp_path / "serving")
-    seed = spark.createDataFrame(
-        [(1, "a", 10.0), (2, "a", 20.0), (3, "b", 30.0), (4, "c", 40.0)],
-        "user_id long, seg string, total double",
+    snapshot_write(
+        spark.createDataFrame(seed, _SEG_SCHEMA).repartition(2), target,
+        partition_by=["seg"],
     )
-    seed.coalesce(1).write.partitionBy("seg").parquet(target)
-    before_b = _snap(target, "seg=b")
-    before_c = _snap(target, "seg=c")
-
+    before = _current_manifest(target)[1]
     src = str(tmp_path / "src")
-    spark.createDataFrame(
-        [(1, "a", 11.0), (5, "a", 50.0)],
-        "user_id long, seg string, total double",
-    ).write.parquet(src)
-    stream = spark.readStream.schema(seed.schema).parquet(src)
+    spark.createDataFrame(batch, _SEG_SCHEMA).write.parquet(src)
+    stream = spark.readStream.schema(_SEG_SCHEMA).parquet(src)
     foreach_batch_upsert(
-        stream,
-        target,
-        ["user_id", "seg"],  # partition cols must be part of the key
-        str(tmp_path / "ckpt"),
-        partition_columns=["seg"],
+        stream, target, keys, str(tmp_path / "ckpt"), snapshot_table=True
     )
-
-    assert _snap(target, "seg=b") == before_b
-    assert _snap(target, "seg=c") == before_c
-    got = {
+    rows = {
         (r.user_id, r.seg, r.total)
-        for r in spark.read.parquet(target).collect()
+        for r in snapshot_read(spark, target).collect()
     }
-    assert got == {
+    return before, _current_manifest(target)[1], rows
+
+
+def _assert_only_partition_rewritten(before, after, seg):
+    """Every file outside partition ``seg`` is carried (same path and
+    seq) and every file the merge wrote lies in it."""
+
+    def entries(m, keep):
+        return [
+            (e["path"], e["seq"]) for e in m["files"]
+            if keep(e["partition"]["seg"])
+        ]
+
+    assert after["operation"] == "overwrite"
+    others = entries(before, lambda v: v != seg)
+    assert others and entries(after, lambda v: v != seg) == others
+    written = [e for e in after["files"] if e["seq"] == after["snapshot_id"]]
+    assert written and all(e["partition"]["seg"] == seg for e in written)
+
+
+def test_foreach_batch_upsert_partition_scoped(spark, tmp_path):
+    """On a snapshot table partitioned by a merge key, a micro-batch
+    touching one partition carries every other partition's files
+    untouched (no new file for them) while merging correctly into the
+    touched one."""
+    before, after, rows = _stream_into_snapshot_table(
+        spark, tmp_path,
+        [(1, "a", 10.0), (2, "a", 20.0), (3, "b", 30.0), (4, "c", 40.0)],
+        [(1, "a", 11.0), (5, "a", 50.0)],
+        ["user_id", "seg"],
+    )
+    _assert_only_partition_rewritten(before, after, "a")
+    assert rows == {
         (1, "a", 11.0),  # updated
         (2, "a", 20.0),  # untouched row in touched partition survives
         (3, "b", 30.0),
@@ -338,59 +352,32 @@ def test_checkpoint_restart_processes_new_files_exactly_once(spark, sf_dir, tmp_
     )
 
 
-def test_partition_scoped_upsert_rejects_movable_keys(spark, tmp_path):
-    """partition_columns not covered by the merge keys = a key could
-    move partitions and be duplicated by the pruned read — rejected."""
-    import pytest as _pytest
-
-    from yelp_etl_spark.streaming.windows import foreach_batch_upsert
-
-    src = str(tmp_path / "src")
-    spark.createDataFrame(
-        [(1, "a", 1.0)], "user_id long, seg string, total double"
-    ).write.parquet(src)
-    stream = spark.readStream.schema(
-        spark.read.parquet(src).schema
-    ).parquet(src)
-    with _pytest.raises(ValueError, match="subset of the merge keys"):
-        foreach_batch_upsert(
-            stream,
-            str(tmp_path / "t"),
-            ["user_id"],
-            str(tmp_path / "ckpt"),
-            partition_columns=["seg"],
-        )
+def test_partition_scoped_upsert_moved_key_keeps_one_row(spark, tmp_path):
+    """A spec whose source is not a merge key does not scope the merge:
+    a key that moves between partitions replaces its old row instead
+    of being duplicated beside it."""
+    _before, after, rows = _stream_into_snapshot_table(
+        spark, tmp_path,
+        [(1, "a", 1.0), (2, "b", 2.0)],
+        [(1, "b", 5.0)],
+        ["user_id"],
+    )
+    assert after["operation"] == "replace"
+    assert rows == {(1, "b", 5.0), (2, "b", 2.0)}
 
 
 def test_partition_scoped_upsert_null_partition(spark, tmp_path):
-    """Rows in the NULL partition must merge null-safely — the pruned
-    read matches the null partition instead of pruning everything and
-    wiping the pre-existing rows there."""
-    from yelp_etl_spark.streaming.windows import foreach_batch_upsert
-
-    target = str(tmp_path / "serving")
-    seed = spark.createDataFrame(
+    """Rows in the NULL partition merge null-safely: the batch's NULL
+    tuple chooses the null partition's files, and its replacement row
+    replaces the old one instead of landing beside it."""
+    before, after, rows = _stream_into_snapshot_table(
+        spark, tmp_path,
         [(1, None, 10.0), (2, None, 20.0), (3, "b", 30.0)],
-        "user_id long, seg string, total double",
-    )
-    seed.coalesce(1).write.partitionBy("seg").parquet(target)
-    src = str(tmp_path / "src")
-    spark.createDataFrame(
-        [(1, None, 11.0)], "user_id long, seg string, total double"
-    ).write.parquet(src)
-    stream = spark.readStream.schema(seed.schema).parquet(src)
-    foreach_batch_upsert(
-        stream,
-        target,
+        [(1, None, 11.0)],
         ["user_id", "seg"],
-        str(tmp_path / "ckpt"),
-        partition_columns=["seg"],
     )
-    got = {
-        (r.user_id, r.seg, r.total)
-        for r in spark.read.parquet(target).collect()
-    }
-    assert got == {(1, None, 11.0), (2, None, 20.0), (3, "b", 30.0)}
+    _assert_only_partition_rewritten(before, after, None)
+    assert rows == {(1, None, 11.0), (2, None, 20.0), (3, "b", 30.0)}
 
 
 def test_foreach_batch_upsert_recovers_from_swap_crash(spark, events_dir, tmp_path):

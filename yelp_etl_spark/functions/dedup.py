@@ -191,11 +191,12 @@ def minhash_candidate_pairs(
             )
         ).alias("bb"),
     ).select("id", "sig", "bb.band", "bb.bucket")
-    # Both sides of the candidate self-join scan `banded`; without a
-    # persist Spark recomputes the whole signature lineage twice. In a
-    # production pipeline signatures would be a materialized table —
-    # the cache is the in-query equivalent (5k docs × bands rows here).
-    banded = banded.persist()
+    # Both sides of the candidate self-join scan `banded`, and Spark
+    # reuses the identical signature and band exchanges for the second
+    # side (ReusedExchange), so the signatures are computed once with
+    # no cut. A persist here would pin a cache no caller can unpersist;
+    # a lazy checkpoint would run the signature stage while the pairs
+    # are built (AQE materializes its shuffles).
     a = banded.alias("a")
     b = banded.alias("b")
     pairs = (

@@ -19,6 +19,28 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
+def anti_join_keys(
+    df: DataFrame,
+    other: DataFrame,
+    keys: list[str],
+    null_safe: bool = False,
+) -> DataFrame:
+    """The rows of ``df`` whose ``keys`` tuple is not in ``other``.
+    ``null_safe=True`` matches NULL key values to each other (<=>
+    semantics); the default equality never matches a NULL key."""
+    if not null_safe:
+        return df.join(other.select(*keys), keys, "left_anti")
+    t = df.alias("__t")
+    s = other.select(*keys).alias("__s")
+    cond = None
+    for k in keys:
+        c = F.col(f"__t.{k}").eqNullSafe(F.col(f"__s.{k}"))
+        cond = c if cond is None else (cond & c)
+    return t.join(s, cond, "left_anti").select(
+        *[F.col(f"__t.{c}") for c in df.columns]
+    )
+
+
 def merge_upsert(
     target: DataFrame,
     source: DataFrame,
@@ -39,19 +61,7 @@ def merge_upsert(
     a NULL-keyed target row never matches and its replacement is
     DUPLICATED instead of applied. SQL MERGE has the same foot-gun;
     Spark's anti-join on column names shares it."""
-    if not null_safe:
-        unchanged = target.join(source.select(*keys), keys, "left_anti")
-        return unchanged.unionByName(source)
-    t = target.alias("__t")
-    s = source.select(*keys).alias("__s")
-    cond = None
-    for k in keys:
-        c = F.col(f"__t.{k}").eqNullSafe(F.col(f"__s.{k}"))
-        cond = c if cond is None else (cond & c)
-    unchanged = t.join(s, cond, "left_anti").select(
-        *[F.col(f"__t.{c}") for c in target.columns]
-    )
-    return unchanged.unionByName(source)
+    return anti_join_keys(target, source, keys, null_safe).unionByName(source)
 
 
 def scd2_history(

@@ -5627,59 +5627,6 @@ GROUP BY 1
 """
 
 
-def q_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ordered funnel (signup → click → purchase): per user, each step
-    counts only if it happens strictly after the previous step's first
-    occurrence — the MATCH_RECOGNIZE-style sequence semantics, built
-    from ONE conditional aggregate per user using min-over-filter
-    chained via integer epoch-micros (no self-joins: the per-user
-    event set collapses in a single shuffle, then step predicates are
-    pure column arithmetic)."""
-    events = _t(spark, sf_dir, "events")
-    us = F.unix_micros(F.col("ts"))
-    per_user = events.groupBy("user_id").agg(
-        F.min(F.when(F.col("event_type") == "signup", us)).alias("t1"),
-        F.sort_array(
-            F.collect_list(F.when(F.col("event_type") == "click", us))
-        ).alias("clicks"),
-        F.sort_array(
-            F.collect_list(F.when(F.col("event_type") == "purchase", us))
-        ).alias("purchases"),
-    )
-    t2 = F.array_min(F.filter("clicks", lambda c: c > F.col("t1")))
-    stepped = per_user.withColumn("t2", t2).withColumn(
-        "t3", F.array_min(F.filter("purchases", lambda p: p > F.col("t2")))
-    )
-    return stepped.agg(
-        F.count("*").cast("long").alias("n_users"),
-        F.count("t1").cast("long").alias("reached_signup"),
-        F.count("t2").cast("long").alias("reached_click"),
-        F.count("t3").cast("long").alias("reached_purchase"),
-    )
-
-
-ORACLE_FUNNEL = """
-WITH per_user AS (
-  SELECT user_id,
-         MIN(CASE WHEN event_type = 'signup' THEN epoch_us(ts) END) AS t1,
-         list_sort(list(CASE WHEN event_type = 'click' THEN epoch_us(ts) END)) AS clicks,
-         list_sort(list(CASE WHEN event_type = 'purchase' THEN epoch_us(ts) END)) AS purchases
-  FROM events GROUP BY user_id
-), stepped AS (
-  SELECT t1,
-         list_min(list_filter(clicks, c -> c > t1)) AS t2_,
-         list_min(list_filter(purchases,
-                  p -> p > list_min(list_filter(clicks, c -> c > t1)))) AS t3_
-  FROM per_user
-)
-SELECT CAST(COUNT(*) AS BIGINT) AS n_users,
-       CAST(COUNT(t1) AS BIGINT) AS reached_signup,
-       CAST(COUNT(t2_) AS BIGINT) AS reached_click,
-       CAST(COUNT(t3_) AS BIGINT) AS reached_purchase
-FROM stepped
-"""
-
-
 def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cohort retention matrix: users grouped by first-activity week
     (cohort), counted as retained in each later week they were active.
@@ -7562,7 +7509,6 @@ _QUERIES_UNORDERED: dict[str, QuerySpec] = {
     "count_min_freq": QuerySpec(q_count_min, ORACLE_COUNT_MIN, "ext:mergeable CMS sketch"),
     "rollup_cascade": QuerySpec(q_rollup_cascade, ORACLE_ROLLUP_CASCADE, "ext:multi-res rollup"),
     "interval_overlap": QuerySpec(q_interval_overlap, ORACLE_INTERVAL_OVERLAP, "grid overlap join"),
-    "funnel_conversion": QuerySpec(q_funnel_conversion, ORACLE_FUNNEL, "ordered funnel"),
     "cohort_retention": QuerySpec(q_cohort_retention, ORACLE_COHORT, "cohort matrix"),
     "bloom_prune_join": QuerySpec(q_bloom_prune, ORACLE_BLOOM_PRUNE, "bloom prefilter join"),
     "bfs_reachability": QuerySpec(q_bfs_reach, ORACLE_BFS, "recursive CTE / BFS"),
@@ -7613,6 +7559,8 @@ _QUERIES_UNORDERED: dict[str, QuerySpec] = {
 from yelp_etl_spark.plans.catalog_ext import EXTRA_QUERIES as _EXTRA_QUERIES  # noqa: E402
 
 for _name, (_fn, _oracle, _ops) in _EXTRA_QUERIES.items():
+    if _name in _QUERIES_UNORDERED:
+        raise ValueError(f"catalog query {_name!r} is registered twice")
     _QUERIES_UNORDERED[_name] = QuerySpec(_fn, _oracle, _ops)
 
 # The driver's correctness gate oracle-verifies the FIRST 50 entries of

@@ -1679,6 +1679,43 @@ def snapshot_compact(
     return _commit_data(df, table_dir, manifest, "rewrite")
 
 
+def _merge_scope(
+    source: DataFrame, manifest: dict, keys: list[str]
+) -> tuple[list[dict], list[dict]]:
+    """(chosen, rest): the files a keyed merge of ``source`` reads and
+    rewrites, and the ones it carries untouched. Only when every spec
+    source is a key does a key have one partition value; then a file
+    whose recorded tuple the batch's ``_spec_exprs`` (over the table's
+    types, cast to string: one distinct query) never evaluate to
+    cannot hold a batch key. A file with no tuple, or missing a current
+    spec field, is always chosen; under any other spec every file is,
+    with no job."""
+    files = manifest["files"]
+    spec = manifest.get("partition_by") or []
+    fields = [f for f, _s, _n in _spec_fields(spec)]
+    sources = list(dict.fromkeys(src for _f, src, _n in _spec_fields(spec)))
+    if not fields or not set(sources) <= set(keys):
+        return files, []
+    schema = T.StructType.fromJson(json.loads(manifest["schema"]))
+    typed = source.select(
+        *[F.col(c).cast(schema[c].dataType).alias(c) for c in sources]
+    )
+    touched = {
+        tuple(r)
+        for r in typed.select(
+            *[e.cast("string").alias(f) for f, e in _spec_exprs(spec).items()]
+        ).distinct().collect()
+    }
+
+    def holds(f: dict) -> bool:
+        part = f.get("partition") or {}
+        return any(c not in part for c in fields) or (
+            tuple(part[c] for c in fields) in touched
+        )
+
+    return [f for f in files if holds(f)], [f for f in files if not holds(f)]
+
+
 def snapshot_merge(
     spark: SparkSession,
     source: DataFrame,
@@ -1690,7 +1727,8 @@ def snapshot_merge(
     committed as one atomic snapshot: readers see the pre-merge table
     or the post-merge table, never an intermediate state, and the
     pre-merge snapshot stays time-travelable. First merge into an
-    empty table is the initial insert.
+    empty table is the initial insert. Keys match null-safely, so
+    replaying a batch with a NULL key part leaves one row.
 
     ``delete_condition`` (a Column over ``source``) adds the
     WHEN MATCHED THEN DELETE branch of the full MERGE statement
@@ -1704,17 +1742,28 @@ def snapshot_merge(
     single keyed shuffle family, broadcastable when the delta is
     small.
 
+    When every spec source is a key, only the partitions the batch
+    touches are read and rewritten, and the other files are carried
+    into an ``'overwrite'`` commit (_merge_scope, Iceberg's
+    copy-on-write MERGE); otherwise the table is rewritten
+    (``'replace'``).
+
     The merge keeps the table's spec and bloom columns (_commit_data)
     and reads the target from the snapshot it commits on, so a writer
     that commits in between fails it with ConcurrentCommitError instead
     of having its rows silently dropped by the replace."""
-    from yelp_etl_spark.operators.scd import merge_upsert
+    from yelp_etl_spark.operators.scd import anti_join_keys, merge_upsert
 
     pm = _parent_manifest(table_dir)
-    target = None if pm is None else _scan(spark, table_dir, pm)
+    target, rest = None, []
+    if pm is not None:
+        chosen, rest = _merge_scope(source, pm, keys)
+        target = _scan(spark, table_dir, pm, chosen)
     if delete_condition is None:
         merged = (
-            source if target is None else merge_upsert(target, source, keys)
+            source
+            if target is None
+            else merge_upsert(target, source, keys, null_safe=True)
         )
     else:
         deletes = source.filter(delete_condition).select(*keys)
@@ -1727,10 +1776,17 @@ def snapshot_merge(
                 *[c for c in upserts.columns if c.startswith("__")]
             )
         else:
-            merged = merge_upsert(
-                target, upserts.select(*target.columns), keys
-            ).join(deletes, keys, "left_anti")
-    return _commit_data(merged, table_dir, pm, "replace")
+            merged = anti_join_keys(
+                merge_upsert(
+                    target, upserts.select(*target.columns), keys,
+                    null_safe=True,
+                ),
+                deletes, keys, null_safe=True,
+            )
+    # carried files keep the delete files that mask them, like binpack
+    return _commit_data(
+        merged, table_dir, pm, "overwrite" if rest else "replace", rest or None
+    )
 
 
 def snapshot_mor_delete(

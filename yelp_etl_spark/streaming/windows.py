@@ -353,71 +353,45 @@ def foreach_batch_upsert(
     target_path: str,
     keys: list[str],
     checkpoint_dir: str,
-    partition_columns: list[str] | None = None,
     snapshot_table: bool = False,
 ) -> None:
     """Streaming upsert sink: every micro-batch is MERGEd into a keyed
-    parquet target via foreachBatch + operators/scd.py merge_upsert —
-    the standard 'stream into a serving table' pattern when the sink
-    has no native streaming support.
+    target via foreachBatch + operators/scd.py merge_upsert — the
+    standard 'stream into a serving table' pattern when the sink has no
+    native streaming support.
 
     Exactly-once notes: foreachBatch gives at-least-once delivery with
-    a (batch_id, checkpoint) pair identifying replays; because
-    merge_upsert is idempotent on the keys (replaying a batch rewrites
-    the same rows to the same values), the target converges to
-    exactly-once contents. On a real deployment the target would be an
-    Iceberg/Delta table whose MERGE INTO commits atomically per batch —
-    parquet overwrite here keeps the test env dependency-free while
-    exercising the identical dataflow.
+    a (batch_id, checkpoint) pair identifying replays; because the
+    merge is idempotent on the keys (replaying a batch rewrites the
+    same rows to the same values; keys match null-safely, so a NULL
+    key part does not duplicate its row), the target converges to
+    exactly-once contents.
 
-    Scale: WITHOUT ``partition_columns`` every batch re-reads and
-    rewrites the whole target — O(table) work and cache per batch, only
-    acceptable for small serving tables. WITH ``partition_columns``
-    (the 100 TB configuration) the target is stored partitioned on
-    them and each batch touches ONLY the partitions its rows land in:
-    the target read is partition-pruned to the batch's partition
-    values (collected — bounded by how many partitions a micro-batch
-    spans, typically 1-2 date partitions), the merge anti-join sees
-    just those rows, and the write goes through dynamic partition
-    overwrite so untouched partitions are never read, listed, or
-    rewritten. Sink cost then tracks batch size + touched-partition
-    size, not table size. The Iceberg/Delta analog is MERGE INTO with
-    partition predicates. Partition-scoping is only sound when a key
-    cannot MOVE between partitions (otherwise the pruned read would
-    miss its old row and leave duplicates), so ``partition_columns``
-    must be a subset of ``keys`` — enforced below; NULL partition
-    values are matched null-safely.
+    ``snapshot_table=True`` targets a sources/snapshots.py table: each
+    micro-batch lands as ONE atomic snapshot commit (snapshot_merge),
+    so a concurrent reader sees whole-batch boundaries only — never a
+    half-applied batch — and each batch's pre-state stays
+    time-travelable until expire+vacuum. This is the streaming MERGE
+    INTO shape of a real lakehouse sink. Partition scoping is a
+    property of the table's spec: when every source column of the spec
+    is one of ``keys``, a batch reads and rewrites only the partitions
+    its rows land in and carries every other partition's files
+    untouched, so the sink's cost tracks batch size plus touched
+    partition size, not table size. Create such a table before
+    streaming, e.g. ``snapshot_write(seed, target_path,
+    partition_by=["seg"])`` with ``"seg"`` among ``keys``. Under any
+    other spec every batch rewrites the whole table, so a key that
+    moves partitions keeps one row.
 
-    ``snapshot_table=True`` targets a sources/snapshots.py table
-    instead: each micro-batch lands as ONE atomic snapshot commit
-    (snapshot_merge), so a concurrent reader sees whole-batch
-    boundaries only — never a half-applied batch — and each batch's
-    pre-state stays time-travelable until expire+vacuum. This is the
-    streaming MERGE INTO shape of a real lakehouse sink.
+    Otherwise the target is a plain parquet directory that every batch
+    re-reads and rewrites whole — O(table) work per batch, only
+    acceptable for small serving tables.
     """
     from yelp_etl_spark.operators.scd import merge_upsert
     from yelp_etl_spark.sources.snapshots import snapshot_merge
-    from yelp_etl_spark.sources.writers import (
-        _swapped_dir,
-        overwrite_partitions_dynamic,
-    )
-
-    if snapshot_table and partition_columns:
-        raise ValueError(
-            "snapshot_table=True does not implement partition-scoped "
-            "merging; pass one or the other (a silent fallback would "
-            "turn the requested O(batch) sink cost into O(table))"
-        )
-    if partition_columns and not set(partition_columns) <= set(keys):
-        raise ValueError(
-            "partition_columns must be a subset of the merge keys: a key "
-            "that moved partitions would be missed by the pruned read and "
-            f"duplicated (partition_columns={partition_columns}, keys={keys})"
-        )
+    from yelp_etl_spark.sources.writers import _swapped_dir
 
     def _merged(batch_df: DataFrame) -> DataFrame:
-        import functools
-        import operator
         import os
 
         exists = os.path.isdir(target_path) and any(
@@ -425,33 +399,9 @@ def foreach_batch_upsert(
         )
         if not exists:
             return batch_df
-        # schema pinned to the batch's: partition-directory type
-        # inference must not re-type key columns ('00123' dirs
-        # inferring as INT would collapse/duplicate keys)
         target = batch_df.sparkSession.read.schema(batch_df.schema).parquet(
             target_path
         )
-        if partition_columns:
-            # Static partition-pruning predicate from the batch's
-            # partition tuples (bounded collect): the scan lists and
-            # reads only the touched partition directories.
-            touched = (
-                batch_df.select(*partition_columns).distinct().collect()
-            )
-            pred = functools.reduce(
-                operator.or_,
-                (
-                    functools.reduce(
-                        operator.and_,
-                        # null-safe: a NULL partition value must match
-                        # the null partition, not prune everything
-                        (F.col(c).eqNullSafe(F.lit(r[c])) for c in partition_columns),
-                    )
-                    for r in touched
-                ),
-            )
-            target = target.filter(pred)
-        # null_safe: a nullable partition column sits in the key
         return merge_upsert(target, batch_df, keys, null_safe=True)
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
@@ -460,17 +410,6 @@ def foreach_batch_upsert(
             return
         if snapshot_table:
             snapshot_merge(spark, batch_df, target_path, keys)
-        elif partition_columns:
-            # Materialize before overwriting directories being read.
-            # (Remaining crash window: Spark's dynamic-overwrite commit
-            # replaces the touched partitions at job commit; a crash
-            # inside that commit can need a replay of this batch, which
-            # the checkpoint guarantees. For fully atomic per-batch
-            # publication use snapshot_table=True.)
-            out = _merged(batch_df).cache()
-            out.count()
-            overwrite_partitions_dynamic(out, target_path, partition_columns)
-            out.unpersist()
         else:
             # Never truncate-in-place: write the merged table to a
             # sibling temp dir and rename-swap it in, so a crash
