@@ -46,6 +46,21 @@ def test_bloom_word_table_is_bounded(spark):
     assert bloom.count() <= 1024 // 32
 
 
+def test_bloom_prune_runs_build_side_at_call(spark, spark_jobs):
+    """The lineage cut in bloom_prune is lazy (eager=False), yet under
+    AQE taking it executes the build side: calling bloom_prune submits
+    one Spark job before any action on the pruned frame. A cut that
+    truly defers the build side would change this count to 0."""
+    build = spark.range(0, 100).select(F.col("id").alias("k"))
+    probe = spark.range(0, 1000).select(F.col("id").alias("k"))
+    bloom = bloom_build(build, "k", n_bits=1024, n_hashes=3)
+    kept, n_jobs = spark_jobs(
+        lambda: bloom_prune(probe, bloom, "k", n_bits=1024, n_hashes=3)
+    )
+    assert n_jobs == 1
+    assert kept.filter(F.col("k") < 100).count() == 100
+
+
 def test_checksum_order_and_partitioning_invariant(spark):
     df = spark.range(0, 2000).select(
         F.col("id").alias("k"), (F.col("id") % 7).alias("v")

@@ -640,33 +640,57 @@ def test_read_then_commit_parses_one_manifest(spark, tmp_path, monkeypatch):
         assert parsed == [parent], name
 
 
-def test_commit_stats_executor_side_matches_driver(spark, tmp_path):
-    """Past _DRIVER_STATS_MAX files the footer stats come from a
-    distributed mapInPandas pass — the manifest must be identical to
-    what the (small-commit) driver loop computes: same rows, same
-    min/max per file, so file skipping keeps working."""
+def test_commit_stats_read_on_driver(spark, tmp_path, spark_jobs):
+    """Every commit reads its data files' footer stats on the driver
+    (_file_stats), however many files it writes. On a table shaped like
+    perfbench's CDC table (20 000 rows, spec ["part"], 16 files, merged
+    on ["id"]) a merge that writes more than 8 files submits 2 Spark
+    jobs, none of which reads the written files back; every manifest
+    entry's rows/min/max (and Bloom sidecar, on a bloom table of 16
+    files) is exactly _file_stats of its file; and min/max file
+    skipping still prunes."""
     from yelp_etl_spark.sources.snapshots import (
-        _DRIVER_STATS_MAX,
         _file_stats,
         _load_manifest,
+        snapshot_merge,
     )
 
+    def entries_match_file_stats(t, sid, bloom_columns=None):
+        m = _load_manifest(t, sid)
+        for f in m["files"]:
+            direct = _file_stats(os.path.join(t, f["path"]), bloom_columns)
+            assert {k: f.get(k) for k in direct} == direct, f["path"]
+        return m
+
+    def rows(lo, hi):
+        return spark.range(lo, hi).select(
+            "id",
+            (F.col("id") % 8).cast("int").alias("part"),
+            (F.col("id") * 7 % 1000).alias("amount"),
+        )
+
     t = str(tmp_path / "tbl")
-    n_parts = _DRIVER_STATS_MAX + 4  # force the distributed path
-    df = spark.range(0, 10_000).repartition(n_parts)
-    snapshot_write(df, t)
-    m = _load_manifest(t, 1)
-    assert len(m["files"]) == n_parts
-    assert sum(f["rows"] for f in m["files"]) == 10_000
-    for f in m["files"]:
-        direct = _file_stats(os.path.join(t, f["path"]))
-        assert f["rows"] == direct["rows"]
-        assert f["min"] == direct["min"]
-        assert f["max"] == direct["max"]
-    # and the skipping contract still holds on the distributed stats
-    pruned = snapshot_read(spark, t, prune=("id", "==", 9_999))
-    assert pruned.count() < 10_000
-    assert pruned.filter(F.col("id") == 9_999).count() == 1
+    snapshot_write(rows(0, 20_000).repartition(2), t, partition_by=["part"])
+    assert len(_load_manifest(t, 1)["files"]) == 16
+    sid, n_jobs = spark_jobs(
+        lambda: snapshot_merge(spark, rows(19_900, 20_100), t, ["id"])
+    )
+    assert n_jobs == 2
+    m = entries_match_file_stats(t, sid)
+    assert len(m["files"]) > 8
+    assert sum(f["rows"] for f in m["files"]) == 20_100
+    pruned = snapshot_read(spark, t, prune=("id", "==", 20_050))
+    assert len(pruned.inputFiles()) < len(m["files"])
+    assert pruned.filter(F.col("id") == 20_050).count() == 1
+
+    tb = str(tmp_path / "bloom")
+    snapshot_write(
+        rows(0, 20_000).repartition(2), tb, partition_by=["part"],
+        bloom_columns=["id"],
+    )
+    mb = entries_match_file_stats(tb, 1, ["id"])
+    assert len(mb["files"]) == 16
+    assert all("id" in f["bloom"] for f in mb["files"])
 
 
 def test_snapshot_merge_delete_branch(spark, tmp_path):

@@ -116,10 +116,12 @@ def bloom_prune(
     rows, so materialization is trivially cheap): Catalyst does not
     reuse the broadcast exchange across the k renamed joins, and
     without the cut the build-side scan + aggregate would re-execute
-    once per hash seed. Lazily (eager=False): the build side
-    materializes at the pruned frame's FIRST action, not at query
-    construction — plan-only consumers (schema lints, explain) pay
-    nothing.
+    once per hash seed. The cut is lazy (eager=False), but under AQE a
+    lazy checkpoint still executes the build side's physical plan when
+    it is taken, and ``bloom_build`` ends in an aggregate: calling
+    ``bloom_prune`` submits the build side's Spark job before any
+    action on the pruned frame
+    (tests/test_integrity.py::test_bloom_prune_runs_build_side_at_call).
     """
     from yelp_etl_spark.functions.checkpoint import truncate_lineage
 

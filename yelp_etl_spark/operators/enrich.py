@@ -10,8 +10,8 @@ Generalizations over the reference:
 - optional broadcast hint per dimension — at 100 TB the fact side is
   huge while true dimensions (region/nation/...) are small; broadcasting
   them removes the shuffle entirely. Big dimensions co-located with the
-  fact via bucketing use storage-partitioned joins instead
-  (sources/writers.py SPJ_CONFS).
+  fact via bucketing join without a shuffle instead
+  (sources/writers.py write_bucketed_table).
 """
 
 from __future__ import annotations

@@ -42,7 +42,8 @@ Commit protocol (single-writer; see note below):
    them — a crash mid-write leaves only unreferenced files, invisible
    to every reader.
 2. The manifest (file list + per-file row counts and column min/max
-   pulled from parquet footers) is written as a new numbered file.
+   read on the driver from parquet footers) is written as a new
+   numbered file.
 3. ``_current`` is swapped with ``os.replace`` — POSIX-atomic, so a
    reader resolves either the old snapshot or the new one, never a mix.
 
@@ -230,9 +231,10 @@ def _next_manifest(
     return {k: v for k, v in manifest.items() if v or k in _MANIFEST_KEYS}
 
 
-def _file_bloom(path: str, bloom_columns: list[str]) -> dict:
+def _file_bloom(table, bloom_columns: list[str]) -> dict:
     """Per-file Bloom sidecar for point-lookup file skipping: for each
-    declared column, the DISTINCT values in this file fold into a
+    declared column, the DISTINCT values in this file (``table``, its
+    pyarrow data projected to ``bloom_columns``) fold into a
     sparse {word: bits} map using the repo's portable md5 bit
     positions (functions/integrity.py py_bit_positions — the same
     convention the Spark expressions replay). ~`_BLOOM_SIDE_BITS/8`
@@ -241,14 +243,10 @@ def _file_bloom(path: str, bloom_columns: list[str]) -> dict:
     integer/string columns — their to-string rendering is identical
     between pyarrow values here and Spark's cast on the probe side;
     floats are refused upstream."""
-    import pyarrow.parquet as pq
-
     from yelp_etl_spark.functions.integrity import py_bit_positions
 
     out: dict = {}
-    cols = [c for c in bloom_columns]
-    table = pq.ParquetFile(path).read(columns=cols)
-    for c in cols:
+    for c in bloom_columns:
         words: dict[int, int] = {}
         vals = set(table[c].to_pylist())
         vals.discard(None)
@@ -273,14 +271,19 @@ _BLOOM_SIDE_K = 3
 
 def _file_stats(path: str, bloom_columns: list[str] | None = None) -> dict:
     """Per-file row count and numeric column min/max from the parquet
-    footer (pyarrow metadata — no data read). These power manifest-level
-    file skipping, the scan feature that makes a 100 TB table affordable
-    to point-query: a predicate prunes FILES before Spark ever lists
-    them. With ``bloom_columns``, one single-column-projection data
-    read per declared column adds the Bloom sidecar (_file_bloom)."""
+    footer, read on the driver (pyarrow metadata — no data read). These
+    power manifest-level file skipping: a predicate prunes FILES before
+    Spark ever lists them. With ``bloom_columns``, one projected data
+    read of the same open file adds the Bloom sidecar (_file_bloom).
+
+    Commits call this in a plain loop, one file at a time. On 4 vCPU,
+    16 and 64 files with a Bloom column (20 000 and 128 000 rows) took
+    0.14-0.25 s and 0.77-0.93 s this way, and 1.9-2.0 s and 5.1-5.7 s
+    as a warm Spark job; without one, the loop takes under 10 ms."""
     import pyarrow.parquet as pq
 
-    md = pq.ParquetFile(path).metadata
+    pf = pq.ParquetFile(path)
+    md = pf.metadata
     mins: dict = {}
     maxs: dict = {}
     for rg in range(md.num_row_groups):
@@ -304,52 +307,8 @@ def _file_stats(path: str, bloom_columns: list[str] | None = None) -> dict:
         "max": maxs,
     }
     if bloom_columns:
-        st["bloom"] = _file_bloom(path, bloom_columns)
+        st["bloom"] = _file_bloom(pf.read(columns=bloom_columns), bloom_columns)
     return st
-
-
-_DRIVER_STATS_MAX = 8
-
-
-def _gather_file_stats(
-    spark: SparkSession,
-    paths: list[str],
-    bloom_columns: list[str] | None = None,
-) -> list[dict]:
-    """Per-file footer stats for ``paths``, read EXECUTOR-side past a
-    constant bound. At 100 TB / ~1e5 files, serial driver-side footer
-    reads are the commit's dominant cost (minutes of driver I/O per
-    commit); Iceberg collects data-file stats task-side during the
-    write and assembles only the manifest on the driver — same model
-    here: one mapInPandas pass over the file list, one collected row
-    per file (bounded by the manifest the driver must hold anyway).
-    Below the bound a local loop avoids paying a Spark job's
-    scheduling overhead on every small commit."""
-    if len(paths) <= _DRIVER_STATS_MAX:
-        return [_file_stats(p, bloom_columns) for p in paths]
-
-    def footer_stats(batches):
-        import pandas as pd
-
-        for b in batches:
-            yield pd.DataFrame(
-                {
-                    "path": b["path"],
-                    "stats": [
-                        json.dumps(_file_stats(p, bloom_columns))
-                        for p in b["path"]
-                    ],
-                }
-            )
-
-    rows = (
-        spark.createDataFrame([(p,) for p in paths], "path string")
-        .repartition(min(len(paths), 64))
-        .mapInPandas(footer_stats, "path string, stats string")
-        .collect()
-    )
-    by_path = {r["path"]: json.loads(r["stats"]) for r in rows}
-    return [by_path[p] for p in paths]
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -603,11 +562,15 @@ def _write_data_files(
     """Step 1 of every commit: fully write ``df``'s data files (scratch
     write, rename under fresh unique names) and return their manifest
     entries (path + footer stats + partition tuple, the tuple only
-    under a spec with fields). No manifest references them yet, so a
-    crash here leaves only unreferenced files, invisible to every
-    reader and reclaimed by vacuum. A table without a spec is a spec
-    with no fields: the same scratch write, with nothing to partition
-    by."""
+    under a spec with fields). The stats are read on the driver, one
+    ``_file_stats`` per renamed file; no Spark job reads the files
+    back. (Iceberg gathers them task-side during the write; a table
+    whose footer reads outgrow the driver would move them into the
+    write, not into a second job.) No manifest references the files
+    yet, so a crash here leaves only unreferenced files, invisible to
+    every reader and reclaimed by vacuum. A table without a spec is a
+    spec with no fields: the same scratch write, with nothing to
+    partition by."""
     os.makedirs(os.path.join(table_dir, "data"), exist_ok=True)
     os.makedirs(os.path.join(table_dir, "manifests"), exist_ok=True)
     scratch = os.path.join(table_dir, f".commit-{uuid.uuid4().hex}")
@@ -656,12 +619,13 @@ def _write_data_files(
             part = _parse_partition_dirs(os.path.relpath(root, scratch), fields)
             renamed.append((os.path.join("data", dst_name), dst, part))
     shutil.rmtree(scratch)
-    stats = _gather_file_stats(
-        df.sparkSession, [a for _, a, _ in renamed], bloom_columns
-    )
     return [
-        {"path": rel, **st, **({"partition": p} if fields else {})}
-        for (rel, _, p), st in zip(renamed, stats)
+        {
+            "path": rel,
+            **_file_stats(dst, bloom_columns),
+            **({"partition": p} if fields else {}),
+        }
+        for rel, dst, p in renamed
     ]
 
 

@@ -145,21 +145,6 @@ def write_bucketed_table(
     writer.saveAsTable(name)
 
 
-# The SPJ/bucketed-join conf bundle the reference scatters across jobs
-# (enrich.py:35-43, extract.py:29) — applied as one explicit call.
-SPJ_CONFS = {
-    "spark.sql.sources.v2.bucketing.enabled": "true",
-    "spark.sql.sources.v2.bucketing.pushPartValues.enabled": "true",
-    "spark.sql.sources.v2.bucketing.partiallyClusteredDistribution.enabled": "true",
-    "spark.sql.bucketing.coalesceBucketsInJoin.enabled": "true",
-}
-
-
-def enable_storage_partitioned_joins(spark) -> None:
-    for k, v in SPJ_CONFS.items():
-        spark.conf.set(k, v)
-
-
 def compact_parquet_dir(
     spark,
     path: str,
