@@ -35,36 +35,6 @@ def test_partitioned_write_survives_roundtrip(spark, sf_dir, tmp_path):
     assert one_year.count() == src.filter(F.col("order_year") == 1996).count()
 
 
-def test_zorder_layout_prunes_files(spark, sf_dir, tmp_path):
-    """Z-order clustering must shrink per-file key ranges enough that a
-    point probe on EITHER clustered column touches strictly fewer files
-    than the unclustered layout (which matches every file)."""
-    from yelp_etl_spark.sources.layout import (
-        file_stats,
-        files_matching_point,
-        write_zordered,
-    )
-    from yelp_etl_spark.sources.readers import load_table
-
-    li = load_table(spark, sf_dir, "lineitem")
-    plain_dir, z_dir = str(tmp_path / "plain"), str(tmp_path / "zord")
-    li.repartition(8).write.mode("overwrite").parquet(plain_dir)
-    write_zordered(li, z_dir, ["l_partkey", "l_suppkey"], num_files=8)
-
-    plain = file_stats(spark, plain_dir, ["l_partkey", "l_suppkey"])
-    zord = file_stats(spark, z_dir, ["l_partkey", "l_suppkey"])
-    assert zord.count() == 8
-    # same rows, different layout
-    n_plain = sum(r.n_rows for r in plain.collect())
-    n_z = sum(r.n_rows for r in zord.collect())
-    assert n_plain == n_z == li.count()
-    # hash layout scatters ranges -> every file matches a point probe
-    assert files_matching_point(plain, "l_partkey", 57) == 8
-    # z-order localizes BOTH dimensions
-    assert files_matching_point(zord, "l_partkey", 57) <= 4
-    assert files_matching_point(zord, "l_suppkey", 3) <= 6
-
-
 def test_events_ntz_cast_requires_utc_session(spark, sf_dir):
     """The timestamp_ntz->timestamp normalization in load_table is only
     value-preserving under a UTC session zone; a non-UTC session must

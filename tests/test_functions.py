@@ -933,19 +933,61 @@ def test_embedding_neardup_lsh_recall_and_precision(spark):
     assert found >= 0.85, f"recall {found}"
 
 
-def test_lsh_params_scale_with_corpus_size():
-    from yelp_etl_spark.functions.similarity import lsh_params_for
+def test_lsh_signatures_match_duckdb_bucket_sql(spark, sf_dir):
+    """Every band of lsh_signatures equals DuckDB's lsh_bucket_sql of
+    that band on the same vectors: the bucket the oracle twins rebuild
+    is the one the engine joins on."""
+    import os
 
-    _, bits_small = lsh_params_for(1_000)
-    _, bits_big = lsh_params_for(1_000_000)
-    _, bits_huge = lsh_params_for(10_000_000_000)
-    assert bits_small < bits_big < bits_huge
-    assert bits_huge <= 30
-    # bucket occupancy stays ~target: N / 2^bits in [target/2, target]
-    for n in (10_000, 10_000_000, 1_000_000_000):
-        _, bits = lsh_params_for(n, target_bucket_size=64)
-        occ = n / 2**bits
-        assert 32 <= occ <= 64.0001
+    import duckdb
+
+    from yelp_etl_spark.sources.readers import load_table
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    sig = S.lsh_signatures(emb, 64, 4, 8, seed=42)
+    got = {r.id: list(r.buckets) for r in sig.select("id", "buckets").collect()}
+    cols = ", ".join(S.lsh_bucket_sql(64, 8, 42, band) for band in range(4))
+    path = os.path.join(sf_dir, "embeddings.parquet")
+    with duckdb.connect() as con:
+        rows = con.execute(
+            f"SELECT vec_id, {cols} FROM (SELECT vec_id, "
+            f"CAST(embedding AS DOUBLE[]) AS emb FROM '{path}')"
+        ).fetchall()
+    want = {r[0]: list(r[1:]) for r in rows}
+    assert len(want) == emb.count() and got == want
+    # the hash spreads: every band uses more than a handful of buckets
+    for band in range(4):
+        assert len({b[band] for b in got.values()}) > 16, band
+
+
+def test_lsh_topk_bucket_is_band_zero_of_signature(spark, sf_dir):
+    """An 8-plane lsh_topk bucket is band 0 of the 4×8 near-duplicate
+    signature: a 1×8 signature equals that band for every vector, and
+    lsh_topk returns, per query, min(k, bucket size - 1) neighbors, all
+    from the query's band-0 bucket."""
+    from collections import Counter
+
+    from yelp_etl_spark.sources.readers import load_table
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    band0 = {
+        r.id: r.buckets[0]
+        for r in S.lsh_signatures(emb, 64, 4, 8).select("id", "buckets").collect()
+    }
+    one = {
+        r.id: r.buckets[0]
+        for r in S.lsh_signatures(emb, 64, 1, 8).select("id", "buckets").collect()
+    }
+    assert one == band0
+
+    k = 5
+    queries = emb.filter(F.col("vec_id") % 101 == 0)
+    out = S.lsh_topk(emb, queries, dim=64, k=k, n_planes=8).collect()
+    assert out and all(band0[r.query_id] == band0[r.neighbor_id] for r in out)
+    size = Counter(band0.values())
+    per_query = Counter(r.query_id for r in out)
+    for (qid,) in queries.select("vec_id").collect():
+        assert per_query[qid] == min(k, size[band0[qid]] - 1), qid
 
 
 def test_pq_topk_recall_on_clustered_vectors(spark):

@@ -258,26 +258,6 @@ def test_mp4_metadata_v0_and_v1_boxes(spark):
         assert got[i].mp4_duration_s is None and got[i].mp4_width is None
 
 
-def test_byte_features_arrow_matches_pandas_twin(spark):
-    """extract_byte_features_arrow must produce bit-identical features
-    to the mapInPandas form on the same blobs (incl. empty + null)."""
-    from yelp_etl_spark.functions.multimodal import (
-        extract_byte_features,
-        extract_byte_features_arrow,
-    )
-
-    rows = [
-        (0, b"hello world, plain ascii text here"),
-        (1, bytes(range(256)) * 3),
-        (2, b"\x00" * 64),
-        (3, b""),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, content binary")
-    a = sorted(map(tuple, extract_byte_features(df).collect()))
-    b = sorted(map(tuple, extract_byte_features_arrow(df).collect()))
-    assert a == b
-
-
 def test_pcm_int16_stats_known_waveform(spark):
     from pyspark.sql import functions as F
 

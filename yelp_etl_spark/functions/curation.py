@@ -31,35 +31,11 @@ driver.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from yelp_etl_spark.functions.sampling import fraction_threshold, hash_prefix
 from yelp_etl_spark.functions.text import tokens
-
-
-def _token_ngrams(tok: Column, n: int) -> Column:
-    """Array of space-joined token n-grams (plan-time expression).
-    Guarded: F.sequence(1, stop) with stop < 1 would generate a
-    DESCENDING [1, 0] sequence, so short docs return an empty array.
-
-    CAUTION (measured): feeding this a computed ``tok`` expression —
-    e.g. ``tokens(text)`` — lets CollapseProject re-inline the
-    tokenizer into every element_at inside the lambda, i.e. n regex
-    parses of the full text PER GRAM (30× slowdown at sf0.1). Use it
-    only on a materialized array column; the operators below use the
-    exploded/window form (_token_ngram_rows) instead, which runs the
-    tokenizer exactly once per document."""
-    count = F.size(tok) - (n - 1)
-    grams = F.transform(
-        F.sequence(F.lit(1), count),
-        lambda i: F.concat_ws(
-            " ", *[F.element_at(tok, i + j) for j in range(n)]
-        ),
-    )
-    return F.when(count > 0, grams).otherwise(
-        F.expr("CAST(array() AS ARRAY<STRING>)")
-    )
 
 
 def _token_rows(
@@ -111,9 +87,10 @@ def repetition_metrics(
 
     Shape: tokenizer once per doc (posexplode), one window + three
     aggregates ALL keyed on the doc id — a single shuffle partitioning
-    reused end to end. (The array-expression form re-inlined the
-    tokenizer per gram — see _token_ngrams — and ran 30× slower at
-    sf0.1.) Lowercased word tokens match functions.text.
+    reused end to end. (The array-expression form, an n-gram array
+    built over ``tokens(text)``, let CollapseProject re-inline the
+    tokenizer into every gram and ran 30× slower at sf0.1.) Lowercased
+    word tokens match functions.text.
     """
     grams = _token_ngram_rows(_token_rows(df, id_col, text_col), id_col, ngram)
     per_doc = grams.groupBy(id_col).agg(

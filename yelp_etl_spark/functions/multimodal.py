@@ -452,73 +452,6 @@ def mp4_metadata(
     return src.mapInPandas(scan, schema)
 
 
-def extract_byte_features_arrow(
-    df: DataFrame, blob_col: str = "content"
-) -> DataFrame:
-    """mapInArrow twin of extract_byte_features: identical features,
-    but the batch crosses the JVM/Python boundary as Arrow
-    RecordBatches and the payload bytes are read straight out of the
-    Arrow binary buffer — no pandas materialization, no per-row Python
-    bytes objects boxed into an object-dtype column. For blob-heavy
-    batches that conversion IS the dominant cost of the mapInPandas
-    form, so this is the shape to prefer when the UDF only reads the
-    binary column. Same map-only, zero-shuffle plan.
-    """
-    import numpy as np
-    import pyarrow as pa
-
-    out_fields = [
-        ("byte_entropy", pa.float64()),
-        ("entropy_micro", pa.int64()),
-        ("printable_ratio", pa.float64()),
-        ("null_ratio", pa.float64()),
-        ("mean_byte", pa.float64()),
-        ("distinct_bytes", pa.int32()),
-    ]
-    out_schema = (
-        ", ".join(f"{name} {dtype}" for name, dtype in df.dtypes)
-        + ", "
-        + BYTE_FEATURE_SCHEMA
-    )
-
-    def process(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            col = batch.column(batch.schema.get_field_index(blob_col))
-            feats = [[] for _ in out_fields]
-            for payload in col:
-                raw = payload.as_py()
-                b = (
-                    np.frombuffer(raw, dtype=np.uint8)
-                    if raw
-                    else np.empty(0, dtype=np.uint8)
-                )
-                if len(b) == 0:
-                    vals = (0.0, 0, 0.0, 0.0, 0.0, 0)
-                else:
-                    counts = np.bincount(b, minlength=256)
-                    nz = counts[counts > 0].astype(np.int64)
-                    p = nz / len(b)
-                    qc = np.floor(np.log2(nz) * 1e6 + 0.5).astype(np.int64)
-                    qn = int(np.floor(np.log2(len(b)) * 1e6 + 0.5))
-                    vals = (
-                        float(-(p * np.log2(p)).sum()),
-                        qn - int((nz * qc).sum()) // len(b),
-                        float(counts[32:127].sum() / len(b)),
-                        float(counts[0] / len(b)),
-                        float(b.mean()),
-                        int((counts > 0).sum()),
-                    )
-                for acc, v in zip(feats, vals):
-                    acc.append(v)
-            arrays = list(batch.columns) + [
-                pa.array(acc, type=t) for acc, (_, t) in zip(feats, out_fields)
-            ]
-            names = list(batch.schema.names) + [n for n, _ in out_fields]
-            yield pa.RecordBatch.from_arrays(arrays, names=names)
-
-    return df.mapInArrow(process, schema=out_schema)
-
-
 def pcm_int16_stats(
     df: DataFrame,
     blob_col: str = "content",

@@ -1,14 +1,19 @@
 """Embedding similarity search: brute-force cosine top-k and an
 LSH-bucketed approximate variant for scale.
 
-Everything runs on Catalyst array built-ins (zip_with / aggregate) —
-JVM-side, no Python. At 100 TB the brute-force variant is O(Q×N) work
-distributed as: broadcast the (small) query set, one map-only pass over
-candidates, then a per-query top-k via aggregation — no shuffle of the
-candidate table itself.
+Per-pair scoring runs on Catalyst array built-ins (zip_with /
+aggregate), JVM-side. Per-vector work that is a matrix product runs
+numpy over Arrow batches in ``mapInPandas``: the LSH signatures
+(``lsh_signatures``), IVF list assignment, PQ encoding and scoring,
+and the blocked all-pairs GEMM. At 100 TB the brute-force variant is
+O(Q×N) work distributed as: broadcast the (small) query set, one
+map-only pass over candidates, then a per-query top-k via a window —
+no shuffle of the candidate table itself.
 
 The scale path is random-hyperplane LSH (sign sketches): candidates and
 queries hash into buckets; the join only scores within-bucket pairs.
+Near-duplicate pairs and top-k search hash through the one signature
+table ``lsh_signatures`` builds.
 """
 
 from __future__ import annotations
@@ -34,10 +39,30 @@ def squared_norm(a: Column) -> Column:
     )
 
 
+def _cosine_from_norms(a: Column, b: Column, n2_a: Column, n2_b: Column) -> Column:
+    """dot / sqrt(n2_a * n2_b) over precomputed squared norms — inside
+    a pair join the per-pair work is then a single dot product."""
+    return dot(a, b) / F.sqrt(n2_a * n2_b)
+
+
 def cosine(a: Column, b: Column) -> Column:
     """cosine = dot / sqrt(|a|^2 * |b|^2) — single-sqrt form for exact
     parity with DuckDB's list_cosine_similarity formulation."""
-    return dot(a, b) / F.sqrt(squared_norm(a) * squared_norm(b))
+    return _cosine_from_norms(a, b, squared_norm(a), squared_norm(b))
+
+
+def _rank_topk(scored: DataFrame, k: int, score_col: str = "cosine_sim") -> DataFrame:
+    """Keep each query's ``k`` best (query_id, neighbor_id, score) rows,
+    score descending with neighbor id as the tiebreak, and number them
+    1..k in a long ``rank`` column."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc(score_col), F.asc("neighbor_id")
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", score_col, F.col("rank").cast("long"))
+    )
 
 
 def brute_force_topk(
@@ -66,22 +91,15 @@ def brute_force_topk(
     pairs = cand.crossJoin(F.broadcast(qry)).filter(
         F.col("neighbor_id") != F.col("query_id")
     )
-    sim = dot(F.col("__qvec"), F.col("__cvec")) / F.sqrt(
-        F.col("__qn2") * F.col("__cn2")
+    sim = _cosine_from_norms(
+        F.col("__qvec"), F.col("__cvec"), F.col("__qn2"), F.col("__cn2")
     )
     scored = pairs.select(
         "query_id",
         "neighbor_id",
         F.round(sim, round_digits).alias("cosine_sim"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine_sim"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim", F.col("rank").cast("long"))
-    )
+    return _rank_topk(scored, k)
 
 
 def embedding_neardup_pairs(
@@ -93,18 +111,17 @@ def embedding_neardup_pairs(
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: all (a, b) with a < b and
     cosine ≥ threshold. This is the exact all-pairs formulation (the
-    dedup oracle); at 100 TB pre-bucket with lsh_topk's hyperplane
-    sketches and verify only within-bucket candidates."""
-    # Norms are computed ONCE per vector before the pair join — inside
-    # the join the per-pair work is a single dot product. (cosine() per
-    # pair re-derives both norms: measured 20×+ slower at 2M pairs.)
+    dedup oracle); at 100 TB pre-bucket with lsh_signatures and verify
+    only within-bucket candidates (embedding_neardup_pairs_lsh)."""
+    # Norms are computed ONCE per vector before the pair join. (cosine()
+    # per pair re-derives both norms: measured 20×+ slower at 2M pairs.)
     v = df.select(
         F.col(id_col).alias("id"), as_double_array(F.col(vec_col)).alias("__v")
     ).withColumn("__n2", squared_norm(F.col("__v")))
     a, b = v.alias("a"), v.alias("b")
     pairs = a.join(b, F.col("a.id") < F.col("b.id"))
-    sim = dot(F.col("a.__v"), F.col("b.__v")) / F.sqrt(
-        F.col("a.__n2") * F.col("b.__n2")
+    sim = _cosine_from_norms(
+        F.col("a.__v"), F.col("b.__v"), F.col("a.__n2"), F.col("b.__n2")
     )
     return pairs.select(
         F.col("a.id").alias("id_a"),
@@ -223,22 +240,15 @@ def ivf_topk(
     pairs = cand_assigned.join(F.broadcast(qry_assigned), "list_id").filter(
         F.col("neighbor_id") != F.col("query_id")
     )
-    sim = dot(F.col("__qvec"), F.col("__cvec")) / F.sqrt(
-        F.col("__qn2") * F.col("__cn2")
+    sim = _cosine_from_norms(
+        F.col("__qvec"), F.col("__cvec"), F.col("__qn2"), F.col("__cn2")
     )
     scored = pairs.select(
         "query_id",
         "neighbor_id",
         F.round(sim, 4).alias("cosine_sim"),
     ).dropDuplicates(["query_id", "neighbor_id"])
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine_sim"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim", F.col("rank").cast("long"))
-    )
+    return _rank_topk(scored, k)
 
 
 def embedding_neardup_pairs_blocked(
@@ -323,33 +333,79 @@ def embedding_neardup_pairs_blocked(
     return bp.mapInPandas(gemm, "id_a long, id_b long, cosine_sim double")
 
 
-def lsh_params_for(
-    n_vectors: int,
-    target_bucket_size: int = 64,
-    n_bands: int = 4,
-    max_bits: int = 30,
-) -> tuple[int, int]:
-    """Size banded-LSH (n_bands, n_bits) for a corpus of ``n_vectors``.
+def random_hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
+    """Deterministic pseudo-random hyperplanes, drawn on the driver from
+    a seeded ``random.Random``: plain floats that a SQL oracle can
+    embed verbatim. The first ``n`` planes of a seed do not depend on
+    ``n_planes``, so an 8-plane bucket is band 0 of a 4×8 signature."""
+    import random
 
-    Within-bucket candidate pairs grow ~(N/2^bits)²·2^bits per band, so
-    bits must scale with log2(N) to hold per-bucket work constant — a
-    FIXED bit width goes superlinear as data grows (measured: the 4×8
-    catalog config is ~linear at sf0.1 but slope ~16 on a 10×
-    replica probe). This returns bits = ceil(log2(N / target_bucket)),
-    keeping expected bucket occupancy ≈ target_bucket_size; recall at a
-    given cosine threshold then follows 1-(1-p^bits)^bands, so raise
-    n_bands when raising bits if recall must hold.
+    rng = random.Random(seed)
+    return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_planes)]
 
-    Note exact duplicates always share every bucket regardless of
-    sizing — run exact dedup (functions/dedup.exact_dedup) BEFORE
-    near-dup candidate generation, as a production pipeline does.
+
+def lsh_signatures(
+    df: DataFrame,
+    dim: int,
+    n_bands: int,
+    n_bits: int,
+    seed: int = 42,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Banded random-hyperplane sign signatures: one row per vector,
+    ``(id, vec, n2, buckets)``, where ``vec`` is the vector as
+    array<double>, ``n2`` its squared norm and ``buckets[b]`` the
+    band-``b`` bucket id. Band b hashes with planes
+    ``b*n_bits .. (b+1)*n_bits - 1`` of ``random_hyperplanes(dim,
+    n_bands*n_bits, seed)``: bit i = sign(vec · plane), first plane =
+    most significant bit. Vectors with high cosine similarity collide
+    with high probability; ``lsh_bucket_sql`` builds the same bucket
+    in DuckDB.
+
+    Map-only: one numpy (batch × dim) @ (dim × bands·bits) product per
+    Arrow batch, no shuffle. The Catalyst form (one interpreted dot
+    expression per plane per row) ran 2× slower on 800×32 vectors
+    (4 vCPU, warm session).
     """
-    import math
+    import numpy as np
 
-    if n_vectors <= target_bucket_size:
-        return n_bands, 4
-    bits = math.ceil(math.log2(n_vectors / target_bucket_size))
-    return n_bands, max(4, min(bits, max_bits))
+    pmat = np.array(
+        random_hyperplanes(dim, n_bands * n_bits, seed), dtype=np.float64
+    )  # (bands*bits, dim)
+    weights = 2 ** np.arange(n_bits - 1, -1, -1)
+    src = df.select(
+        F.col(id_col).alias("id"), as_double_array(F.col(vec_col)).alias("vec")
+    )
+    out_schema = T.StructType(
+        [
+            src.schema["id"],
+            src.schema["vec"],
+            T.StructField("n2", T.DoubleType()),
+            T.StructField("buckets", T.ArrayType(T.LongType())),
+        ]
+    )
+
+    def go(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            vecs = np.array(pdf["vec"].to_list(), dtype=np.float64)
+            # Quantize the plane dot before taking the sign: the GEMM's
+            # summation order differs from a sequential dot (the DuckDB
+            # oracle's list_dot_product), and a ULP-level sign flip near
+            # 0 would put a vector in different buckets per engine. A
+            # 1e-9 round (mirrored in lsh_bucket_sql) absorbs that.
+            bits = np.round(vecs @ pmat.T, 9) >= 0  # (n, bands*bits)
+            buckets = (
+                bits.reshape(len(vecs), n_bands, n_bits) * weights
+            ).sum(axis=2)  # (n, bands)
+            yield pdf.assign(
+                n2=(vecs * vecs).sum(axis=1),
+                buckets=list(buckets.astype(np.int64)),
+            )
+
+    return src.mapInPandas(go, out_schema)
 
 
 def embedding_neardup_pairs_lsh(
@@ -367,66 +423,28 @@ def embedding_neardup_pairs_lsh(
     generation — the 100 TB default (the exact all-pairs forms,
     embedding_neardup_pairs / _blocked, are the small-N witnesses).
 
-    Banded random-hyperplane LSH: each vector gets ``n_bands`` bucket
-    ids (``n_bits`` sign bits each); a pair is a CANDIDATE iff it
-    collides in at least one band, and candidates are verified with the
-    exact cosine ≥ threshold. Semantics are fully deterministic (planes
-    seeded, plan-time constants), so the result is reproducible and
-    oracle-checkable — recall vs the exact all-pairs answer is the
-    standard banded-LSH curve 1-(1-p^bits)^bands, p = 1-θ/π (≈0.89 for
-    cosine 0.95 at 4×8; tune bands/bits per threshold).
+    Banded random-hyperplane LSH (``lsh_signatures``): each vector gets
+    ``n_bands`` bucket ids (``n_bits`` sign bits each); a pair is a
+    CANDIDATE iff it collides in at least one band, and candidates are
+    verified with the exact cosine ≥ threshold. Semantics are fully
+    deterministic (planes seeded, plan-time constants), so the result
+    is reproducible and oracle-checkable — recall vs the exact
+    all-pairs answer is the standard banded-LSH curve
+    1-(1-p^bits)^bands, p = 1-θ/π (≈0.89 for cosine 0.95 at 4×8; tune
+    bands/bits per threshold). Bucket occupancy is ~N/2^bits, so at a
+    fixed bit width the candidate count grows with N²: raise bits with
+    log2(N) (and bands with bits, if recall must hold).
 
-    Scale shape: bucket assignment is one numpy GEMM per Arrow batch
-    (map-only); candidate generation is an EQUI-join on (band, bucket)
-    — shuffle-partitionable, skew-salvageable, never a cross join; the
-    per-pair exact dot runs only on the pruned candidate set, JVM-side.
-    Shuffled bytes carry (id, band, bucket) plus one vector fetch join
-    per side — each vector moves O(n_bands + matches) times, not O(N).
+    Scale shape: the signatures are map-only; candidate generation is
+    an EQUI-join on (band, bucket) — shuffle-partitionable,
+    skew-salvageable, never a cross join; the per-pair exact dot runs
+    only on the pruned candidate set, JVM-side. Shuffled bytes carry
+    (id, band, bucket) plus one vector fetch join per side — each
+    vector moves O(n_bands + matches) times, not O(N).
     """
-    import numpy as np
-
-    planes = random_hyperplanes(dim, n_bands * n_bits, seed)
-    pmat = np.array(planes, dtype=np.float64)  # (bands*bits, dim)
-    weights = 2 ** np.arange(n_bits - 1, -1, -1)
-
-    src = df.select(
-        F.col(id_col).alias("id"), as_double_array(F.col(vec_col)).alias("__v")
+    hashed = lsh_signatures(df, dim, n_bands, n_bits, seed, id_col, vec_col).select(
+        "id", F.posexplode("buckets").alias("band", "bucket")
     )
-    bucket_schema = T.StructType(
-        [
-            src.schema["id"],
-            T.StructField("band", T.IntegerType()),
-            T.StructField("bucket", T.LongType()),
-        ]
-    )
-
-    def assign(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            vecs = np.array(pdf["__v"].to_list(), dtype=np.float64)
-            # Quantize the plane dot before taking the sign: the GEMM's
-            # summation order differs from a sequential dot (the DuckDB
-            # oracle's list_dot_product), and a ULP-level sign flip near
-            # 0 would put a vector in different buckets per engine. A
-            # 1e-9 round (mirrored in the oracle SQL) absorbs that.
-            bits = np.round(vecs @ pmat.T, 9) >= 0  # (n, bands*bits)
-            buckets = (
-                bits.reshape(len(vecs), n_bands, n_bits) * weights
-            ).sum(axis=2)  # (n, bands)
-            yield pd.DataFrame(
-                {
-                    "id": pdf["id"].to_numpy().repeat(n_bands),
-                    "band": np.tile(
-                        np.arange(n_bands, dtype=np.int32), len(vecs)
-                    ),
-                    "bucket": buckets.astype(np.int64).ravel(),
-                }
-            )
-
-    hashed = src.mapInPandas(assign, bucket_schema)
     a, b = hashed.alias("a"), hashed.alias("b")
     candidates = (
         a.join(
@@ -439,7 +457,11 @@ def embedding_neardup_pairs_lsh(
         # a pair colliding in several bands must be scored once
         .dropDuplicates(["id_a", "id_b"])
     )
-    v = src.withColumn("__n2", squared_norm(F.col("__v")))
+    # The vectors are fetched from the source, not from the signatures,
+    # so the numpy pass runs once per vector.
+    v = df.select(
+        F.col(id_col).alias("id"), as_double_array(F.col(vec_col)).alias("__v")
+    ).withColumn("__n2", squared_norm(F.col("__v")))
     va = v.select(
         F.col("id").alias("id_a"),
         F.col("__v").alias("__va"),
@@ -450,8 +472,8 @@ def embedding_neardup_pairs_lsh(
         F.col("__v").alias("__vb"),
         F.col("__n2").alias("__nb"),
     )
-    sim = dot(F.col("__va"), F.col("__vb")) / F.sqrt(
-        F.col("__na") * F.col("__nb")
+    sim = _cosine_from_norms(
+        F.col("__va"), F.col("__vb"), F.col("__na"), F.col("__nb")
     )
     return (
         candidates.join(va, "id_a")
@@ -463,30 +485,6 @@ def embedding_neardup_pairs_lsh(
         )
         .filter(F.col("cosine_sim") >= threshold)
     )
-
-
-def random_hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
-    """Deterministic pseudo-random hyperplanes (no numpy needed on
-    executors — these are plan-time literals)."""
-    import random
-
-    rng = random.Random(seed)
-    return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_planes)]
-
-
-def lsh_bucket(vec: Column, planes: list[list[float]]) -> Column:
-    """Sign-sketch bucket id: bit i = sign(vec · plane_i). Vectors with
-    high cosine similarity collide with high probability."""
-    bits = [
-        F.when(dot(vec, F.array(*[F.lit(w) for w in plane])) >= 0, F.lit(1)).otherwise(
-            F.lit(0)
-        )
-        for plane in planes
-    ]
-    bucket = F.lit(0)
-    for bit in bits:
-        bucket = bucket * 2 + bit
-    return bucket
 
 
 def lsh_topk(
@@ -501,73 +499,32 @@ def lsh_topk(
 ) -> DataFrame:
     """Approximate top-k: score only within-LSH-bucket pairs. At scale
     this turns the O(Q×N) cross join into an equi-join on bucket id —
-    shuffle-partitionable and skew-manageable (salt hot buckets)."""
-    import numpy as np
+    shuffle-partitionable and skew-manageable (salt hot buckets). The
+    bucket is a one-band ``lsh_signatures`` of ``n_planes`` bits, which
+    also carries each vector and its squared norm to the join."""
 
-    planes = random_hyperplanes(dim, n_planes, seed)
-    # Bucket assignment as one numpy matmul per Arrow batch (bit i =
-    # sign(vec · plane_i), first plane = MSB — same bits as the
-    # lsh_bucket expression form, kept above for single-column use):
-    # n_planes interpreted dot expressions per row don't survive wide
-    # batches; (batch × dim) @ (dim × n_planes) does. Map-only either
-    # way — zero shuffle before the bucket equi-join.
-    pmat = np.array(planes, dtype=np.float64)  # (n_planes, dim)
-    weights = 2 ** np.arange(n_planes - 1, -1, -1)
-
-    def bucketed(df: DataFrame, id_alias: str, vec_alias: str, n2_alias: str) -> DataFrame:
-        src = df.select(
-            F.col(id_col).alias(id_alias),
-            as_double_array(F.col(vec_col)).alias(vec_alias),
-        )
-        out_schema = T.StructType(
-            [
-                src.schema[id_alias],
-                src.schema[vec_alias],
-                T.StructField(n2_alias, T.DoubleType()),
-                T.StructField("bucket", T.LongType()),
-            ]
+    def bucketed(df: DataFrame, id_alias: str, side: str) -> DataFrame:
+        return lsh_signatures(df, dim, 1, n_planes, seed, id_col, vec_col).select(
+            F.col("id").alias(id_alias),
+            F.col("vec").alias(f"__{side}vec"),
+            F.col("n2").alias(f"__{side}n2"),
+            F.col("buckets").getItem(0).alias("bucket"),
         )
 
-        def go(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                vecs = np.array(pdf[vec_alias].to_list(), dtype=np.float64)
-                # round before the sign so BLAS-vs-sequential summation
-                # order can't flip a bucket bit for dots ~0 (same
-                # quantization as embedding_neardup_pairs_lsh, which
-                # makes the bucketing oracle-replicable in SQL)
-                bits = np.round(vecs @ pmat.T, 9) >= 0
-                yield pdf.assign(
-                    **{
-                        n2_alias: (vecs * vecs).sum(axis=1),
-                        "bucket": (bits * weights).sum(axis=1),
-                    }
-                )
-
-        return src.mapInPandas(go, out_schema)
-
-    cand = bucketed(candidates, "neighbor_id", "__cvec", "__cn2")
-    qry = bucketed(queries, "query_id", "__qvec", "__qn2")
+    cand = bucketed(candidates, "neighbor_id", "c")
+    qry = bucketed(queries, "query_id", "q")
     pairs = cand.join(F.broadcast(qry), "bucket").filter(
         F.col("neighbor_id") != F.col("query_id")
     )
-    sim = dot(F.col("__qvec"), F.col("__cvec")) / F.sqrt(
-        F.col("__qn2") * F.col("__cn2")
+    sim = _cosine_from_norms(
+        F.col("__qvec"), F.col("__cvec"), F.col("__qn2"), F.col("__cn2")
     )
     scored = pairs.select(
         "query_id",
         "neighbor_id",
         F.round(sim, 4).alias("cosine_sim"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine_sim"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim", F.col("rank").cast("long"))
-    )
+    return _rank_topk(scored, k)
 
 
 def random_projection(
@@ -843,25 +800,17 @@ def pq_topk(
                     }
                 )
 
-    partial = src.mapInPandas(score, out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("approx_cosine"), F.asc("neighbor_id")
-    )
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "neighbor_id", "approx_cosine", F.col("rank").cast("long")
-        )
-    )
+    return _rank_topk(src.mapInPandas(score, out_schema), k, "approx_cosine")
 
 
-def lsh_bucket_sql(dim: int, n_planes: int, seed: int = 42) -> str:
-    """DuckDB expression rebuilding lsh_topk's seeded hyperplane bucket
-    id over a ``emb`` DOUBLE[] column — shared by every ANN oracle twin
-    (repr() round-trips the plane doubles exactly; sign bits MSB-first,
-    dots rounded at 9 digits exactly like the Spark side)."""
-    planes = random_hyperplanes(dim, n_planes, seed)
+def lsh_bucket_sql(dim: int, n_planes: int, seed: int = 42, band: int = 0) -> str:
+    """DuckDB expression rebuilding band ``band`` of
+    ``lsh_signatures(df, dim, n_bands, n_planes, seed)`` (n_bands >
+    band) over a ``emb`` DOUBLE[] column; band 0 is lsh_topk's bucket.
+    Shared by every ANN oracle twin (repr() round-trips the plane
+    doubles exactly; sign bits MSB-first, dots rounded at 9 digits
+    exactly like the Spark side)."""
+    planes = random_hyperplanes(dim, (band + 1) * n_planes, seed)[band * n_planes :]
 
     def lit(plane: list[float]) -> str:
         return "[" + ", ".join(repr(x) for x in plane) + "]"

@@ -1586,6 +1586,22 @@ def q_embedding_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _lsh_bands_sql(dim: int, n_bands: int, n_bits: int, seed: int) -> tuple[str, str]:
+    """The DuckDB twin of ``lsh_signatures``' bands: the ``bucket_<b>``
+    select list of an ``h`` CTE over ``emb``, and the any-band
+    collision predicate between its aliases ``a`` and ``b``."""
+    from yelp_etl_spark.functions.similarity import lsh_bucket_sql
+
+    buckets_sql = ",\n         ".join(
+        f"{lsh_bucket_sql(dim, n_bits, seed, band)} AS bucket_{band}"
+        for band in range(n_bands)
+    )
+    band_match = " OR ".join(
+        f"a.bucket_{band} = b.bucket_{band}" for band in range(n_bands)
+    )
+    return buckets_sql, band_match
+
+
 def _oracle_embedding_neardup_lsh(
     dim: int = 64,
     n_bands: int = 4,
@@ -1599,30 +1615,9 @@ def _oracle_embedding_neardup_lsh(
     same rounded cosine threshold. Both sides ROUND the plane dot to 9
     digits before the sign so BLAS-vs-sequential summation order can't
     flip a bucket bit near 0 (ADVICE r2)."""
-    from yelp_etl_spark.functions.similarity import random_hyperplanes
-
-    planes = random_hyperplanes(dim, n_bands * n_bits, seed)
-
-    def lit(plane: list[float]) -> str:
-        return "[" + ", ".join(repr(x) for x in plane) + "]"
-
-    bucket_cols = []
-    for band in range(n_bands):
-        terms = [
-            "(CASE WHEN ROUND(list_dot_product(emb, "
-            f"{lit(planes[band * n_bits + i])}), 9) >= 0 "
-            f"THEN {2 ** (n_bits - 1 - i)} ELSE 0 END)"
-            for i in range(n_bits)
-        ]
-        bucket_cols.append(
-            "(" + " + ".join(terms) + f") AS bucket_{band}"
-        )
-    buckets_sql = ",\n         ".join(bucket_cols)
-    band_match = " OR ".join(
-        f"a.bucket_{band} = b.bucket_{band}" for band in range(n_bands)
-    )
     from yelp_etl_spark.functions.similarity import cosine_sim_sql
 
+    buckets_sql, band_match = _lsh_bands_sql(dim, n_bands, n_bits, seed)
     cos = cosine_sim_sql("a", "b")
     return f"""
 WITH v AS (
@@ -1898,28 +1893,9 @@ def _oracle_semantic_dedup(
     stage, the identical seeded hyperplanes / quantized sign buckets as
     ORACLE_EMBEDDING_NEARDUP_LSH, a recursive-CTE transitive closure
     for the components, and the same canonical-keep aggregation."""
-    from yelp_etl_spark.functions.similarity import random_hyperplanes
-
-    planes = random_hyperplanes(dim, n_bands * n_bits, seed)
-
-    def lit(plane: list[float]) -> str:
-        return "[" + ", ".join(repr(x) for x in plane) + "]"
-
-    bucket_cols = []
-    for band in range(n_bands):
-        terms = [
-            "(CASE WHEN ROUND(list_dot_product(emb, "
-            f"{lit(planes[band * n_bits + i])}), 9) >= 0 "
-            f"THEN {2 ** (n_bits - 1 - i)} ELSE 0 END)"
-            for i in range(n_bits)
-        ]
-        bucket_cols.append("(" + " + ".join(terms) + f") AS bucket_{band}")
-    buckets_sql = ",\n         ".join(bucket_cols)
-    band_match = " OR ".join(
-        f"a.bucket_{band} = b.bucket_{band}" for band in range(n_bands)
-    )
     from yelp_etl_spark.functions.similarity import cosine_sim_sql
 
+    buckets_sql, band_match = _lsh_bands_sql(dim, n_bands, n_bits, seed)
     cos = cosine_sim_sql("a", "b")
     return f"""
 WITH RECURSIVE exact AS (

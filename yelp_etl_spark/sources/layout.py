@@ -1,4 +1,4 @@
-"""Data-layout operators: z-order clustering and per-file zone maps.
+"""Data-layout operators: z-order clustering.
 
 The reference's layout surface is identity partitions + hash buckets
 (write.py:45-53 — SURVEY.md §2.1 S5/S6). Hash buckets co-locate joins
@@ -13,13 +13,14 @@ code: normalize → interleave (bitwise expressions, whole-stage codegen)
 → repartitionByRange → sortWithinPartitions → write.
 
 At 100 TB the win is at the scan: a 1%-selective range predicate on a
-z-ordered table reads ~1% of files instead of 100% — no engine change
-needed, parquet footer stats do the pruning.
+z-ordered table reads ~1% of files instead of 100%. A snapshot table
+records each data file's min/max in its manifest (sources/snapshots.py
+``_file_stats``), and ``snapshot_read(prune=...)`` skips on them.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -75,54 +76,3 @@ def zorder_key(
     return with_bounds.withColumn("__z", _interleave(codes, bits)).drop(
         *[f"__lo_{c}" for c in columns], *[f"__hi_{c}" for c in columns]
     )
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    columns: list[str],
-    num_files: int,
-    bits: int = 16,
-) -> None:
-    """Write ``df`` as parquet clustered by the z-order of ``columns``:
-    range-partition on the z-key (each file owns a contiguous z-range =
-    a small hyper-rectangle of the key space) and sort within files so
-    parquet row-group stats are tight too. One extra shuffle at write
-    time buys min/max pruning on every clustered column at read time."""
-    keyed = zorder_key(df, columns, bits)
-    (
-        keyed.repartitionByRange(num_files, F.col("__z"))
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
-def file_stats(
-    spark: SparkSession, path: str, columns: list[str]
-) -> DataFrame:
-    """Per-file zone map: (file, count, min/max of each column) — the
-    same statistics parquet footers carry, surfaced as a DataFrame for
-    layout audits and skipping estimates. One scan, one tiny aggregate
-    keyed by input_file_name."""
-    df = spark.read.parquet(path)
-    return df.groupBy(F.input_file_name().alias("file")).agg(
-        F.count("*").alias("n_rows"),
-        *[
-            f
-            for c in columns
-            for f in (
-                F.min(c).alias(f"min_{c}"),
-                F.max(c).alias(f"max_{c}"),
-            )
-        ],
-    )
-
-
-def files_matching_point(stats: DataFrame, column: str, value) -> int:
-    """How many files could contain ``column = value`` per the zone
-    map — the read amplification of a point probe under this layout."""
-    return stats.filter(
-        (F.col(f"min_{column}") <= value) & (F.col(f"max_{column}") >= value)
-    ).count()

@@ -113,52 +113,6 @@ def stream_dedup(
     )
 
 
-def running_user_totals_tws(events: DataFrame) -> DataFrame:
-    """Per-user running totals on Spark 4's transformWithState API —
-    the successor of applyInPandasWithState (running_user_totals below
-    keeps the classic form). Differences that matter at scale: named
-    state variables (ValueState/ListState/MapState) instead of one
-    opaque tuple, per-variable TTL, timers, and a RocksDB-backed state
-    store with changelog checkpointing — incremental state snapshots
-    instead of full-file uploads, the difference between minutes and
-    seconds of checkpoint time at 100 TB-of-state.
-
-    Requires the RocksDB state store provider conf and the
-    ``protobuf`` Python package (the Arrow state-server protocol);
-    tests/test_streaming_tws.py documents that env boundary with a
-    skip-marker, mirroring the Iceberg sink test.
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("totals", "n long, total double")
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, total = self._state.get() if self._state.exists() else (0, 0.0)
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            self._state.update((n, total))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "total_value": [total]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=_RunningTotals(),
-        outputStructType="user_id long, n_events long, total_value double",
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 def running_user_totals(
     events: DataFrame, watermark: str | None = "1 hour"
 ) -> DataFrame:
