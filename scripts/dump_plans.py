@@ -25,8 +25,6 @@ from yelp_etl_spark.session import get_spark
 MATERIALIZING = {
     "stream_dedup_totals",
     "partitioned_write_roundtrip",
-    "compact_small_files",
-    "dynamic_overwrite_publish",
     "jsonl_scan_roundtrip",
     "time_travel_diff",
     "snapshot_changelog",

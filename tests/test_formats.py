@@ -35,6 +35,18 @@ def test_partitioned_write_survives_roundtrip(spark, sf_dir, tmp_path):
     assert one_year.count() == src.filter(F.col("order_year") == 1996).count()
 
 
+def test_path_bucket_keeps_null_key_in_null_partition(spark, tmp_path):
+    """A path write's bucket column uses the snapshot layer's bucket
+    transform: a NULL key lands in the null partition, not in the
+    bucket of xxhash64's seed, and non-NULL keys keep pmod(xxhash64)."""
+    target = str(tmp_path / "bucketed")
+    df = spark.createDataFrame([(None, "a"), (7, "b")], "k long, v string")
+    write_table(df, target, WriteSpec(bucket_column="k", buckets=4))
+    back = {r.v: r.k_bucket for r in read_files(spark, target).collect()}
+    want = df.filter("k = 7").select(F.pmod(F.xxhash64("k"), F.lit(4))).first()[0]
+    assert back == {"a": None, "b": want}
+
+
 def test_events_ntz_cast_requires_utc_session(spark, sf_dir):
     """The timestamp_ntz->timestamp normalization in load_table is only
     value-preserving under a UTC session zone; a non-UTC session must
@@ -53,42 +65,6 @@ def test_events_ntz_cast_requires_utc_session(spark, sf_dir):
             load_table(spark, sf_dir, "events")
     finally:
         spark.conf.set("spark.sql.session.timeZone", "UTC")
-
-
-def test_dynamic_partition_overwrite_touches_only_written_partitions(
-    spark, sf_dir, tmp_path
-):
-    from yelp_etl_spark.sources.writers import overwrite_partitions_dynamic
-
-    target = str(tmp_path / "orders_by_status")
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_totalprice", "o_orderstatus"
-    )
-    overwrite_partitions_dynamic(orders, target, ["o_orderstatus"])
-    before = {
-        r.o_orderstatus: r.n
-        for r in spark.read.parquet(target)
-        .groupBy("o_orderstatus")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
-    assert len(before) >= 2
-
-    # rewrite ONE partition with a single row; others must be untouched
-    some_status = sorted(before)[0]
-    one = orders.filter(F.col("o_orderstatus") == some_status).limit(1)
-    overwrite_partitions_dynamic(one, target, ["o_orderstatus"])
-    after = {
-        r.o_orderstatus: r.n
-        for r in spark.read.parquet(target)
-        .groupBy("o_orderstatus")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
-    assert after[some_status] == 1
-    for status, n in before.items():
-        if status != some_status:
-            assert after[status] == n  # untouched partitions intact
 
 
 def test_fan_out_widens_narrow_scans_only(spark, sf_dir, spark_jobs):

@@ -72,15 +72,6 @@ def test_sample_frames(spark):
                for rs in by_doc.values() for r in rs)
 
 
-def test_resize_stub_documents_boundary(spark):
-    import pytest as _pytest
-
-    from yelp_etl_spark.functions.multimodal import resize_stub
-
-    with _pytest.raises(NotImplementedError):
-        resize_stub(_blob_df(spark), 32, 32)
-
-
 def test_decode_blobs_poison_input_captured(spark):
     def picky(payload: bytes) -> dict:
         if b"another" in payload:

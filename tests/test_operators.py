@@ -212,63 +212,6 @@ def test_quality_report_counts_violations(spark):
     assert_quality(df, {"huge_v": F.col("v") > 1e9})  # passes silently
 
 
-def test_compact_parquet_dir_reduces_files(spark, tmp_path):
-    import os
-
-    from yelp_etl_spark.sources.writers import compact_parquet_dir
-
-    path = str(tmp_path / "frag")
-    spark.range(0, 10000).repartition(24).write.parquet(path)
-    before = [f for f in os.listdir(path) if f.endswith(".parquet")]
-    assert len(before) == 24
-    compact_parquet_dir(spark, path)
-    after = [f for f in os.listdir(path) if f.endswith(".parquet")]
-    assert len(after) < len(before)
-    assert spark.read.parquet(path).count() == 10000
-
-    # crash after the second rename of an earlier swap: a stale,
-    # non-empty __old must not make rename(path, __old) fail
-    stale = path + "__old"
-    spark.range(0, 7).write.parquet(stale)
-    assert compact_parquet_dir(spark, path) == 1
-    assert not os.path.exists(stale)
-    assert spark.read.parquet(path).count() == 10000
-
-    # crash between the two renames: no ``path``, only the complete
-    # __old copy, which compaction must restore rather than lose
-    os.rename(path, stale)
-    assert compact_parquet_dir(spark, path) == 1
-    assert not os.path.exists(stale)
-    assert spark.read.parquet(path).count() == 10000
-
-
-def test_compact_read_back_not_stale(spark, tmp_path):
-    """After the out-of-band rename swap, the session must not serve the
-    pre-swap file listing from its FileStatusCache: read the dir BEFORE
-    compacting (priming the cache), compact, and check the read-back sum
-    reflects the full data (a stale listing would miss/duplicate files)."""
-    from yelp_etl_spark.sources.writers import compact_parquet_dir
-
-    path = str(tmp_path / "frag2")
-    spark.range(0, 5000).repartition(16).write.parquet(path)
-    assert spark.read.parquet(path).count() == 5000  # prime listing cache
-    compact_parquet_dir(spark, path)
-    got = spark.read.parquet(path).agg({"id": "sum"}).collect()[0][0]
-    assert got == 5000 * 4999 // 2
-
-
-def test_compact_query_repeatable_same_session(spark):
-    """q_compact_small_files run twice in one session yields identical
-    results — the driver's check_determinism does exactly this, and a
-    fixed scratch path + stale listing previously made it diverge."""
-    from yelp_etl_spark.plans.catalog import q_compact_small_files
-
-    sf_dir = "/root/testdata/sf0.001"
-    a = q_compact_small_files(spark, sf_dir).collect()
-    b = q_compact_small_files(spark, sf_dir).collect()
-    assert a == b
-
-
 def test_observe_metrics_single_pass(spark):
     """df.observe collects pipeline metrics during the one real action —
     no second scan for instrumentation (the runtime analogue of

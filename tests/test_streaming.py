@@ -4,7 +4,6 @@ as through the batch DataFrame path."""
 
 from __future__ import annotations
 
-import os
 import tempfile
 
 import pytest
@@ -143,44 +142,6 @@ def test_stream_static_enrich_matches_batch(spark, sf_dir, events_dir):
     )
     run_stream_to_memory(stream, "t_enrich")
     assert _rows(spark, "t_enrich") == {tuple(r) for r in batch.collect()}
-
-
-def test_foreach_batch_upsert_converges(spark, events_dir, tmp_path):
-    """Streaming merge into a keyed parquet target equals the batch
-    per-user aggregate over the same data (exactly-once contents)."""
-    from pyspark.sql import functions as F
-
-    from yelp_etl_spark.streaming.windows import foreach_batch_upsert
-
-    stream = (
-        spark.readStream.schema(spark.read.parquet(events_dir).schema)
-        .option("maxFilesPerTrigger", 2)  # force several micro-batches
-        .parquet(events_dir)
-        .groupBy("user_id")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 2).alias("total_value"),
-        )
-    )
-    target = str(tmp_path / "serving")
-    foreach_batch_upsert(
-        stream, target, ["user_id"], str(tmp_path / "ckpt")
-    )
-    got = {
-        (r.user_id, r.n_events, r.total_value)
-        for r in spark.read.parquet(target).collect()
-    }
-    want = {
-        (r.user_id, r.n_events, r.total_value)
-        for r in spark.read.parquet(events_dir)
-        .groupBy("user_id")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 2).alias("total_value"),
-        )
-        .collect()
-    }
-    assert got == want
 
 
 _SEG_SCHEMA = "user_id long, seg string, total double"
@@ -380,58 +341,19 @@ def test_partition_scoped_upsert_null_partition(spark, tmp_path):
     assert rows == {(1, None, 11.0), (2, None, 20.0), (3, "b", 30.0)}
 
 
-def test_foreach_batch_upsert_recovers_from_swap_crash(spark, events_dir, tmp_path):
-    """Crash window of the rename-swap: between rename(target -> __old)
-    and rename(__merging -> target) there is NO target dir, only the
-    complete __old copy. The replay must restore __old as the merge
-    base — not treat the table as empty (merged = batch only) and then
-    delete __old, which would permanently lose every previously merged
-    key the replayed stream does not re-emit."""
-    import os
-    import shutil
-
-    from pyspark.sql import functions as F
-
+def test_foreach_batch_upsert_rejects_plain_parquet_target(spark, tmp_path):
+    """The sink writes snapshot tables only: asking for the removed
+    plain-parquet target fails before a stream starts or a file is
+    written."""
     from yelp_etl_spark.streaming.windows import foreach_batch_upsert
 
-    def run(target, ckpt):
-        stream = (
-            spark.readStream.schema(spark.read.parquet(events_dir).schema)
-            .option("maxFilesPerTrigger", 2)
-            .parquet(events_dir)
-            .groupBy("user_id")
-            .agg(
-                F.count("*").alias("n_events"),
-                F.round(F.sum("value"), 2).alias("total_value"),
-            )
+    src = str(tmp_path / "src")
+    spark.createDataFrame([(1, "a", 1.0)], _SEG_SCHEMA).write.parquet(src)
+    stream = spark.readStream.schema(_SEG_SCHEMA).parquet(src)
+    target = tmp_path / "serving"
+    with pytest.raises(ValueError, match="snapshot_table=False"):
+        foreach_batch_upsert(
+            stream, str(target), ["user_id"], str(tmp_path / "ckpt"),
+            snapshot_table=False,
         )
-        foreach_batch_upsert(stream, target, ["user_id"], ckpt)
-
-    target = str(tmp_path / "serving")
-    run(target, str(tmp_path / "ckpt"))
-    # a key the stream never emits: only the pre-crash table holds it
-    sentinel = spark.createDataFrame(
-        [(99_999_999, 1, 1.0)], spark.read.parquet(target).schema
-    )
-    sentinel.write.mode("append").parquet(target)
-    expected = {
-        (r.user_id, r.n_events, r.total_value)
-        for r in spark.read.parquet(target).collect()
-    }
-
-    # forge the mid-swap crash state: target gone, __old holds the
-    # table, a stale __merging left over from the crashed attempt
-    os.rename(target, target + "__old")
-    os.makedirs(target + "__merging", exist_ok=True)
-
-    # replay from a fresh checkpoint (the crashed batch re-delivers)
-    run(target, str(tmp_path / "ckpt2"))
-
-    assert os.path.isdir(target), "recovery must restore the target dir"
-    got = {
-        (r.user_id, r.n_events, r.total_value)
-        for r in spark.read.parquet(target).collect()
-    }
-    assert got == expected, "recovered table lost previously merged keys"
-    assert not os.path.isdir(target + "__old")
-    shutil.rmtree(target + "__merging", ignore_errors=True)
+    assert not target.exists()

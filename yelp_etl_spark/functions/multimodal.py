@@ -230,18 +230,6 @@ def sample_frames(
     )
 
 
-def resize_stub(
-    df: DataFrame, width: int, height: int, blob_col: str = "content"
-) -> DataFrame:
-    """Resize boundary: the geometry columns are real, the pixel
-    transform requires an image library absent here."""
-    raise NotImplementedError(
-        "resize requires an image codec (PIL/opencv) not present in this "
-        "environment; wire a decode_fn through decode_blobs and resize "
-        "inside the same mapInPandas batch"
-    )
-
-
 def synthesize_blobs(df: DataFrame, from_col: str = "text") -> DataFrame:
     """Test helper: manufacture a binary payload column from a string
     column (deterministic), tagged with a fake PNG header so the format

@@ -6177,34 +6177,6 @@ GROUP BY o_orderstatus
 """
 
 
-def q_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Small-files compaction roundtrip: scatter documents across 16
-    deliberately-tiny parquet files, run compact_parquet_dir (read →
-    repartition(ceil(bytes/128MiB)) → atomic swap), read back. Returns
-    the post-compaction file count (1 at these sizes — the point) and
-    content totals proving the rewrite lost nothing."""
-    import shutil
-
-    from yelp_etl_spark.sources.writers import compact_parquet_dir
-
-    docs = _t(spark, sf_dir, "documents")
-    target = _scratch_dir(sf_dir, "compact")
-    shutil.rmtree(target, ignore_errors=True)
-    docs.repartition(16).write.mode("overwrite").parquet(target)
-    n_files = compact_parquet_dir(spark, target)
-    back = spark.read.parquet(target)
-    return back.agg(
-        F.count("*").alias("n_rows"),
-        F.sum("n_chars").alias("sum_chars"),
-    ).select(F.lit(n_files).alias("n_files"), "n_rows", "sum_chars")
-
-
-ORACLE_COMPACT_SMALL_FILES = """
-SELECT 1 AS n_files, COUNT(*) AS n_rows, CAST(SUM(n_chars) AS BIGINT) AS sum_chars
-FROM documents
-"""
-
-
 def q_jsonl_scan_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S1 as a roundtrip (reference extract.py:30): documents →
     JSON-lines files → read back through sources/readers.read_json with
@@ -6425,44 +6397,6 @@ SELECT CAST(2 AS BIGINT) AS snap, COUNT(*) AS n_orders,
        ROUND(SUM(o_totalprice), 2) AS sum_price
 FROM orders
 WHERE o_orderstatus = 'F' AND o_totalprice > 150000.0
-"""
-
-
-def q_dynamic_overwrite_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dynamic partition overwrite roundtrip (the daily re-publish
-    idiom): full orders written partitioned by o_orderstatus, then ONE
-    partition ('F') re-published with only its high-value rows via
-    overwrite_partitions_dynamic. Read-back must show the other
-    partitions untouched and 'F' replaced — i.e. exactly the oracle's
-    `status <> 'F' OR price > median-ish cut` content. A STATIC-mode
-    overwrite (Spark's default) would have truncated the other
-    partitions and the per-status counts would collapse to F only."""
-    import shutil
-
-    from yelp_etl_spark.sources.writers import overwrite_partitions_dynamic
-
-    orders = _t(spark, sf_dir, "orders")
-    target = _scratch_dir(sf_dir, "dynover")
-    shutil.rmtree(target, ignore_errors=True)
-    orders.write.mode("overwrite").partitionBy("o_orderstatus").parquet(target)
-    republished = orders.filter(
-        (F.col("o_orderstatus") == "F") & (F.col("o_totalprice") > 150000.0)
-    )
-    overwrite_partitions_dynamic(republished, target, ["o_orderstatus"])
-    back = spark.read.parquet(target)
-    return back.groupBy("o_orderstatus").agg(
-        F.count("*").alias("n_orders"),
-        F.round(F.sum("o_totalprice"), 2).alias("sum_price"),
-    )
-
-
-ORACLE_DYNAMIC_OVERWRITE_PUBLISH = """
-SELECT o_orderstatus,
-       COUNT(*) AS n_orders,
-       ROUND(SUM(o_totalprice), 2) AS sum_price
-FROM orders
-WHERE o_orderstatus <> 'F' OR o_totalprice > 150000.0
-GROUP BY o_orderstatus
 """
 
 
@@ -6755,11 +6689,10 @@ FROM orders WHERE o_custkey = (SELECT MIN(o_custkey) FROM orders)
 def q_snapshot_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Atomic dynamic partition overwrite through the snapshot layer
     (sources/snapshots.snapshot_overwrite_partitions — Iceberg's
-    overwrite commit; the transactional upgrade of
-    dynamic_overwrite_publish's directory swap): orders partitioned by
-    status, then ONLY the 'F' partition republished as its high-value
-    subset in one commit. Untouched partitions must keep their exact
-    parent files; the oracle pins the resulting content."""
+    overwrite commit): orders partitioned by status, then ONLY the 'F'
+    partition republished as its high-value subset in one commit.
+    Untouched partitions must keep their exact parent files; the oracle
+    pins the resulting content."""
     from yelp_etl_spark.sources.snapshots import (
         snapshot_overwrite_partitions,
         snapshot_read,
@@ -7278,9 +7211,6 @@ _QUERIES_UNORDERED: dict[str, QuerySpec] = {
         ORACLE_JSONL_SCAN_ROUNDTRIP,
         "S1: explicit-schema JSON scan + corrupt-record capture roundtrip",
     ),
-    "compact_small_files": QuerySpec(
-        q_compact_small_files, ORACLE_COMPACT_SMALL_FILES, "ext:compaction roundtrip"
-    ),
     "csv_scan_roundtrip": QuerySpec(
         q_csv_scan_roundtrip,
         ORACLE_CSV_SCAN_ROUNDTRIP,
@@ -7305,11 +7235,6 @@ _QUERIES_UNORDERED: dict[str, QuerySpec] = {
         q_snapshot_tag_travel,
         ORACLE_SNAPSHOT_TAG,
         "ext:snapshot layer — tags/refs survive expiry",
-    ),
-    "dynamic_overwrite_publish": QuerySpec(
-        q_dynamic_overwrite_publish,
-        ORACLE_DYNAMIC_OVERWRITE_PUBLISH,
-        "ext:dynamic partition overwrite roundtrip",
     ),
     "cosine_topk": QuerySpec(q_cosine_topk, ORACLE_COSINE_TOPK, "ext:similarity"),
     "events_tumbling_window": QuerySpec(q_events_tumbling, ORACLE_EVENTS_TUMBLING, "ext:window"),

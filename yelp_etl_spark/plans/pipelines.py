@@ -202,9 +202,8 @@ def run_gold_pipeline(spark, sf_dir: str, table_dir: str) -> int:
 def run_medallion(spark, sf_dir: str, root: str) -> dict[str, int]:
     """The reference's full run-all-pipelines.sh workload shape
     (13 jobs: extract×5, clean×5, enrich×3, + the gold layer it left
-    TODO) replayed at TPC-H-ish scale over ``sf_dir`` (the
-    ``pipeline_seconds`` of the historical ``BENCH_r*.json`` artifacts).
-    Layers land under ``root``:
+    TODO) replayed at TPC-H-ish scale over ``sf_dir``. Layers land
+    under ``root``:
 
     - **bronze** (extract×5): raw ingest of region/nation/customer/
       orders/lineitem, unmodified parquet (the reference's

@@ -103,10 +103,10 @@ def get_spark(
         # Interleaved same-session A/B at sf0.1 (r15 optimization
         # round): jaccard_prefix_join 2.99→1.66 s min-of-4 (the
         # shingle self-join's sides land hash-partitioned and skip
-        # both sorts; ShuffledHashJoin visible in
-        # plans/r15/dedup_aware_split_after.txt), triangle_count and
-        # pagerank_dict_ids neutral (±0.1 s). Identical results
-        # (full-catalog 360/360 parity re-run under this conf).
+        # both sorts; ShuffledHashJoin visible in its physical plan),
+        # triangle_count and pagerank_dict_ids neutral (±0.1 s).
+        # Identical results (full-catalog 360/360 parity re-run under
+        # this conf).
         .config("spark.sql.join.preferSortMergeJoin", "false")
         .config(
             "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",

@@ -1396,13 +1396,13 @@ def snapshot_overwrite_partitions(
     df: DataFrame, table_dir: str, partition_by: list[str]
 ) -> int:
     """Atomic dynamic partition overwrite (Iceberg's overwrite commit;
-    the snapshot-layer form of writers.overwrite_partitions_dynamic):
-    replace ONLY the partitions present in ``df``, keep every other
-    partition's files from the parent snapshot, all in ONE commit —
-    readers see the old table or the new one, never a half-replaced
-    partition, and the replaced partitions stay time-travelable. This
-    is the idempotent backfill/late-data publish primitive: re-running
-    a day's job rewrites exactly that day.
+    the engine's only dynamic overwrite): replace ONLY the partitions
+    present in ``df``, keep every other partition's files from the
+    parent snapshot, all in ONE commit — readers see the old table or
+    the new one, never a half-replaced partition, and the replaced
+    partitions stay time-travelable. This is the idempotent
+    backfill/late-data publish primitive: re-running a day's job
+    rewrites exactly that day.
 
     Requires the parent snapshot to carry the SAME identity spec
     (files without partition info cannot be safely kept-or-replaced;
@@ -1541,9 +1541,8 @@ def snapshot_compact(
     live. A commit landing between its read and its commit fails it
     (ConcurrentCommitError) instead of losing its rows to the rewrite.
     The streaming-sink small-files
-    problem at 100 TB is exactly this maintenance loop
-    (writers.compact_parquet_dir is the bare-parquet form; this is the
-    snapshot-layer form with time travel preserved).
+    problem at 100 TB is exactly this maintenance loop (the engine's
+    only compaction; time travel preserved).
 
     ``cluster_by=<column>`` additionally SORT-ORDERS the rewrite
     (Iceberg's rewrite with a sort order / binpack→sort strategy):

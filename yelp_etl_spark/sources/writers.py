@@ -11,17 +11,22 @@ watch-list item 4). The layout spec is the part that matters at 100 TB:
 identity-partition on a low-cardinality time column gives partition
 pruning; bucketing the join key gives shuffle-free (storage-partitioned)
 joins downstream.
+
+The path sinks (parquet/orc/csv/json) are plain one-shot writes. Table
+semantics — atomic commit, compaction, dynamic partition overwrite,
+MERGE — live in one place, the snapshot layer (sources/snapshots.py:
+snapshot_write, snapshot_compact, snapshot_overwrite_partitions,
+snapshot_merge), which ``format="snapshot"`` writes through.
 """
 
 from __future__ import annotations
 
-import os
-import shutil
-from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from yelp_etl_spark.sources.snapshots import _bucket_expr
 
 
 @dataclass
@@ -101,17 +106,17 @@ def write_table(df: DataFrame, target: str, spec: WriteSpec | None = None) -> No
         writer.createOrReplace()
         return
     # Path sinks (parquet/orc/csv/json): identity partitions supported
-    # natively; a bucket column materializes as an explicit pmod(hash)
-    # directory column so the layout survives without a catalog.
+    # natively; a bucket column materializes as an explicit directory
+    # column through the snapshot layer's bucket transform (NULL keys
+    # stay in the null partition) so the layout survives without a
+    # catalog.
     # Row formats (csv/json) are for interchange only — no column
     # pruning or predicate pushdown, so keep analytics tables columnar.
     out = df
     partition_cols = list(spec.partition_columns)
     if spec.bucket_column:
         bucket_col = f"{spec.bucket_column}_bucket"
-        out = out.withColumn(
-            bucket_col, F.pmod(F.xxhash64(spec.bucket_column), F.lit(spec.buckets))
-        )
+        out = out.withColumn(bucket_col, _bucket_expr(spec.bucket_column, spec.buckets))
         partition_cols.append(bucket_col)
     if spec.distribute and partition_cols:
         out = out.repartition(*[F.col(c) for c in partition_cols])
@@ -143,95 +148,3 @@ def write_bucketed_table(
     if sort:
         writer = writer.sortBy(bucket_column)
     writer.saveAsTable(name)
-
-
-def compact_parquet_dir(
-    spark,
-    path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-) -> int:
-    """Small-files compaction: rewrite a parquet directory into
-    ceil(total_bytes / target) files and atomically swap it in.
-    Returns the new file count.
-
-    Streaming sinks and per-batch writes accumulate small files; at
-    scale every downstream scan then pays per-file open/footer cost and
-    the driver pays listing cost. Compaction trades one rewrite for
-    every future scan. 128 MiB targets match the usual HDFS/object-
-    store block sweet spot (and Iceberg's write.target-file-size
-    default). On Iceberg this is `rewrite_data_files`; plain parquet
-    here keeps the test env dependency-free with the same dataflow:
-    read → repartition(n) → write to a sibling temp dir → rename swap.
-    """
-    import math
-
-    with _swapped_dir(spark, path, "__compacting") as tmp:
-        total = sum(
-            os.path.getsize(os.path.join(root, f))
-            for root, _, files in os.walk(path)
-            for f in files
-            if not f.startswith(("_", "."))
-        )
-        n_files = max(1, math.ceil(total / target_file_bytes))
-        spark.read.parquet(path).repartition(n_files).write.parquet(tmp)
-    return n_files
-
-
-@contextmanager
-def _swapped_dir(spark, path: str, tmp_suffix: str):
-    """Rewrite directory ``path`` out of place: yield a fresh sibling
-    temp dir for the new contents, then swap it in with two renames
-    (``path`` → ``path__old``, temp → ``path``). A crash mid-write
-    leaves ``path`` untouched; if the body raises, nothing is swapped.
-
-    Entry first repairs what a crashed earlier swap left behind, so the
-    body always reads the last complete table:
-
-    - a crash between the two renames leaves no ``path``, only the
-      complete ``__old`` copy — restore it (treating the table as
-      missing and then deleting ``__old`` would lose it for good);
-    - a crash after the second rename leaves a stale ``__old``, which
-      would make every later ``rename(path, old)`` fail with ENOTEMPTY.
-    """
-    path = path.rstrip("/")
-    old, tmp = path + "__old", path + tmp_suffix
-    if not os.path.isdir(path) and os.path.isdir(old):
-        os.rename(old, path)
-    shutil.rmtree(old, ignore_errors=True)
-    shutil.rmtree(tmp, ignore_errors=True)
-    yield tmp
-    if os.path.isdir(path):
-        os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old, ignore_errors=True)
-    # The swap happened outside Spark's write path, so the session's
-    # FileStatusCache may still hold the pre-swap listing; without this
-    # a read-back can serve the OLD files (stale-listing hash mismatch).
-    spark.catalog.refreshByPath(path)
-
-
-def overwrite_partitions_dynamic(
-    df: DataFrame,
-    target: str,
-    partition_columns: list[str],
-    format: str = "parquet",
-) -> None:
-    """Incremental re-publish: overwrite ONLY the partitions present in
-    ``df``, leaving every other partition untouched (Spark's dynamic
-    partitionOverwriteMode, scoped to this write instead of mutating
-    session conf). The Iceberg analog is ``overwritePartitions()``
-    (reference write.py's create-or-replace is the full-table form).
-
-    This is the daily-batch idiom at 100 TB: recompute yesterday's
-    date partition and swap it in atomically per partition, without
-    rewriting (or even listing) the other ~36,500 of them. STATIC mode
-    (the default) would drop every existing partition first — a silent
-    full-table truncate; scoping the conf to the writer makes the safe
-    behavior local, not a session-wide footgun."""
-    (
-        df.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(*partition_columns)
-        .format(format)
-        .save(target)
-    )

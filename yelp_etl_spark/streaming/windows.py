@@ -307,10 +307,10 @@ def foreach_batch_upsert(
     target_path: str,
     keys: list[str],
     checkpoint_dir: str,
-    snapshot_table: bool = False,
+    snapshot_table: bool = True,
 ) -> None:
     """Streaming upsert sink: every micro-batch is MERGEd into a keyed
-    target via foreachBatch + operators/scd.py merge_upsert — the
+    sources/snapshots.py table via foreachBatch + snapshot_merge — the
     standard 'stream into a serving table' pattern when the sink has no
     native streaming support.
 
@@ -321,9 +321,8 @@ def foreach_batch_upsert(
     key part does not duplicate its row), the target converges to
     exactly-once contents.
 
-    ``snapshot_table=True`` targets a sources/snapshots.py table: each
-    micro-batch lands as ONE atomic snapshot commit (snapshot_merge),
-    so a concurrent reader sees whole-batch boundaries only — never a
+    Each micro-batch lands as ONE atomic snapshot commit, so a
+    concurrent reader sees whole-batch boundaries only — never a
     half-applied batch — and each batch's pre-state stays
     time-travelable until expire+vacuum. This is the streaming MERGE
     INTO shape of a real lakehouse sink. Partition scoping is a
@@ -337,43 +336,22 @@ def foreach_batch_upsert(
     other spec every batch rewrites the whole table, so a key that
     moves partitions keeps one row.
 
-    Otherwise the target is a plain parquet directory that every batch
-    re-reads and rewrites whole — O(table) work per batch, only
-    acceptable for small serving tables.
+    ``snapshot_table=False`` raises ValueError: the sink writes
+    snapshot tables only.
     """
-    from yelp_etl_spark.operators.scd import merge_upsert
+    if not snapshot_table:
+        raise ValueError(
+            "foreach_batch_upsert writes snapshot tables only; the "
+            "plain-parquet sink (snapshot_table=False) was removed"
+        )
+    # Looked up at call time, not import time, so a wrapper installed on
+    # snapshots.snapshot_merge (tracing) sees every batch.
     from yelp_etl_spark.sources.snapshots import snapshot_merge
-    from yelp_etl_spark.sources.writers import _swapped_dir
-
-    def _merged(batch_df: DataFrame) -> DataFrame:
-        import os
-
-        exists = os.path.isdir(target_path) and any(
-            not f.startswith(("_", ".")) for f in os.listdir(target_path)
-        )
-        if not exists:
-            return batch_df
-        target = batch_df.sparkSession.read.schema(batch_df.schema).parquet(
-            target_path
-        )
-        return merge_upsert(target, batch_df, keys, null_safe=True)
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
         if batch_df.isEmpty():
             return
-        if snapshot_table:
-            snapshot_merge(spark, batch_df, target_path, keys)
-        else:
-            # Never truncate-in-place: write the merged table to a
-            # sibling temp dir and rename-swap it in, so a crash
-            # mid-batch leaves the previous contents intact and the
-            # checkpointed replay re-merges them (the exactly-once
-            # convergence claim depends on this). The swap first
-            # restores a table a crashed swap left only as ``__old``,
-            # so the replay merges into it rather than into nothing.
-            with _swapped_dir(spark, target_path, "__merging") as tmp:
-                _merged(batch_df).write.parquet(tmp)
+        snapshot_merge(batch_df.sparkSession, batch_df, target_path, keys)
 
     q = (
         stream.writeStream.foreachBatch(_merge)
